@@ -1,14 +1,26 @@
-"""Transitive clustering: large-star / small-star connected components.
+"""Transitive clustering: connected components of the match graph.
 
 The reference resolves each mention to exactly one entity (argmax over
 candidates, src/models/recall_calculator.py:100-110); our target generalizes
-that to transitive entity clusters over the match graph (north_star). This is
-the Kiveris et al. "Connected Components in MapReduce and Beyond" alternating
-large-star/small-star algorithm expressed as DataFrame self-joins with
-min-aggregation; every iteration localCheckpoints to break lineage
-(SURVEY.md §7.3 hard-part #1).
+that to transitive entity clusters over the match graph (north_star).
 
-Scale notes (100 TB / 10^12 edges):
+``connected_components`` picks its strategy from a bound it measures:
+
+ - DRIVER (at most ``DRIVER_CC_MAX_EDGES`` = 2**21 edges): the edges are
+   collected through Arrow and solved in NumPy. The star rounds pay per-job
+   and per-stage scheduling latency every round — seconds even for a few
+   thousand edges — while the NumPy solve of 2**21 edges takes 0.6–3.2 s on
+   one core (path and random graphs, 4-core x86 host). Safe because the
+   bound is MEASURED by a limited collect (``limit(bound + 1)``), not
+   estimated from Catalyst stats: however wrong an estimate would be, the
+   driver never receives more than bound + 1 rows (~32 MB of long pairs),
+   and one row over the bound sends the graph to the star rounds.
+ - DISTRIBUTED (anything larger): the Kiveris et al. "Connected Components
+   in MapReduce and Beyond" alternating large-star/small-star algorithm
+   expressed as DataFrame self-joins with min-aggregation; every iteration
+   localCheckpoints to break lineage (SURVEY.md §7.3 hard-part #1).
+
+Scale notes for the star rounds (100 TB / 10^12 edges):
  - each round is one groupBy shuffle on node id; AQE handles skewed hubs,
  - HUB-SAFE: each star step is a scalar min() aggregation joined back to the
    edge list — no per-node neighbor arrays are ever materialized, so a
@@ -17,36 +29,41 @@ Scale notes (100 TB / 10^12 edges):
  - convergence is O(log n) rounds for large-star/small-star (vs O(diameter)
    for naive label propagation) — that is why we use it,
  - per-round edge-set fingerprint (count + sum of xxhash64) detects
-   convergence without collecting edges.
+   convergence without collecting edges,
+ - the size probe costs one bounded job: each partition ships at most
+   bound + 1 rows, and the probe materializes the lazy local checkpoint the
+   rounds then read, so the upstream is not recomputed.
 """
 
 from __future__ import annotations
 
 import logging
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
+# graphs with at most this many edges (self-loops dropped) are solved on the
+# driver; one more edge and they take the star rounds
+DRIVER_CC_MAX_EDGES = 1 << 21
+
 
 def _fp_exprs() -> list:
     """The edge-set fingerprint metric expressions — the SINGLE definition.
 
-    Convergence detection compares fingerprints computed two ways (a
-    standalone aggregation in :func:`_fingerprint`, and an ``Observation``
-    folded into durable writes): the two must stay bit-identical, so both
-    consume this helper.  Built per call because Column objects are bound
-    to a plan once used."""
+    Convergence detection compares fingerprints computed two ways: the
+    ``Observation`` folded into durable writes evaluates these expressions,
+    and :func:`_fingerprint_and_star_test` computes the same two values on
+    its exploded frame. The two must stay bit-identical, because a resumed
+    run compares a persisted fingerprint with a fresh one.  Built per call
+    because Column objects are bound to a plan once used."""
     return [
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
     ]
-
-
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.select(*_fp_exprs()).first()
-    return int(row["n"]), int(row["h"])
 
 
 def _fingerprint_and_star_test(edges: DataFrame) -> tuple[tuple[int, int], bool]:
@@ -82,10 +99,6 @@ def _fingerprint_and_star_test(edges: DataFrame) -> tuple[tuple[int, int], bool]
     return (int(row["n"]), int(row["h"])), star
 
 
-TINY_GRAPH_BYTES = 16 << 20
-TINY_GRAPH_SHUFFLE_PARTITIONS = 8
-
-
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the optimized plan — a DRIVER-side lookup,
     no job. Cached inputs report their actual materialized bytes; scans
@@ -97,40 +110,33 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
-class _tiny_graph_mode:
-    """While active, turn OFF adaptive execution and pin a small static
-    shuffle-partition count. Rationale (guide §1.2/§2): each AQE query stage
-    of an iterative round is materialized as its OWN mini-job with driver
-    re-planning between stages — for a star round over a few thousand edges
-    that is ~8 sequential jobs of pure scheduling latency (measured: the
-    whole er_incremental fold spends ~4 s in ~25 such jobs at sf1.0 while
-    its final count takes 0.5 s). A tiny round needs neither AQE's runtime
-    coalescing nor skew splitting; a single static-plan job runs the same
-    shuffles back-to-back inside one DAG. Entered ONLY when Catalyst stats
-    bound the edge set below TINY_GRAPH_BYTES — unknown or large inputs
-    keep AQE (its skew handling is load-bearing at scale). Session-wide
-    conf flip (Spark has no per-query conf): restored on exit; concurrent
-    same-session queries planned in the window would also run static."""
+def _driver_star_forest(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the edge list (u, v), solved in NumPy.
 
-    def __init__(self, spark, enabled: bool):
-        self.spark = spark
-        self.enabled = enabled
-
-    def __enter__(self):
-        if not self.enabled:
-            return self
-        conf = self.spark.conf
-        self._aqe = conf.get("spark.sql.adaptive.enabled")
-        self._sp = conf.get("spark.sql.shuffle.partitions")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(TINY_GRAPH_SHUFFLE_PARTITIONS))
-        return self
-
-    def __exit__(self, *exc):
-        if self.enabled:
-            self.spark.conf.set("spark.sql.adaptive.enabled", self._aqe)
-            self.spark.conf.set("spark.sql.shuffle.partitions", self._sp)
-        return False
+    Returns (members, roots): one pair per node that is not the minimum of
+    its component, mapping it to that minimum — the min-rooted star forest
+    the star rounds converge to. Ids are factorized in sorted order, so the
+    minimum index is the minimum id (Python orders str by code point, which
+    is Spark's UTF-8 byte order). Each pass hooks the larger of every
+    edge's two roots under the smaller (``np.minimum.at``), then pointer-jumps
+    each node to its root. ``parent[i] <= i`` always holds, so the forest
+    stays acyclic, and a pass that finds an edge between two trees removes
+    at least one root, so the loop reaches its fixpoint."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        if np.array_equal(ra, rb):
+            break
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    member = np.flatnonzero(parent != np.arange(len(ids)))
+    return ids[member], ids[parent[member]]
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -184,7 +190,6 @@ def connected_components(
     checkpoint_dir: str | None = None,
     input_fingerprint: str | None = None,
     durable_every: int = 1,
-    assume_tiny: bool | None = None,
 ) -> DataFrame:
     """Cluster the undirected match graph; returns (mention_id, cluster_id)
     where cluster_id = min member id (stable, deterministic).
@@ -192,11 +197,20 @@ def connected_components(
     Nodes appearing only as singletons must be unioned by the caller
     (cluster_id = own id) — this operator only sees edges.
 
+    Strategy (module docstring): a graph of at most ``DRIVER_CC_MAX_EDGES``
+    (2**21) edges is solved on the driver in NumPy, as a small DataFrame of
+    the converged star forest with the input's id type. The bound is
+    measured by a limited collect, not estimated from stats, so the driver
+    never holds more than bound + 1 rows. Larger graphs keep the hub-safe
+    star rounds under AQE; a star loop still unconverged after
+    ``max_iterations`` rounds raises ``RuntimeError``.
+
     ``checkpoint_dir`` enables MID-CLUSTERING resume (north_rule): every
     star round durably writes its edge set + a marker recording the round
     number and fingerprint; a restarted job continues from the last
     completed round instead of iteration 0. Without it, rounds use
-    localCheckpoint (lineage break only — cheaper, not durable).
+    localCheckpoint (lineage break only — cheaper, not durable). A
+    driver-solved graph is written once, as converged round 0.
 
     ``durable_every`` sets the durable-round cadence: rounds between durable
     writes break lineage with localCheckpoint only, so a crash loses at most
@@ -253,10 +267,6 @@ def connected_components(
                 logger.info(
                     "connected_components: resuming from round %d", state["iteration"]
                 )
-    if start_iter == 0:
-        # lazy: the plan is truncated NOW (LogicalRDD), the data persists
-        # during round 1's fingerprint job — no standalone materialization job
-        edges = edges.localCheckpoint(eager=False)
 
     def _write_durable(it: int, edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
         # the write job doubles as the fingerprint pass: an Observation on the
@@ -285,56 +295,60 @@ def connected_components(
             )
         _os.replace(tmp, state_path)  # atomic: round is resumable
 
-    # ``assume_tiny`` lets a caller whose edge count is provably bounded by
-    # a well-estimated input (e.g. merge_components: |mapped| <= |delta|)
-    # override the stats probe — the probe alone fails safe to "big" when
-    # the edge plan sits on a localCheckpoint RDD (unknown sizeInBytes)
-    tiny = (
-        assume_tiny
-        if assume_tiny is not None
-        else _plan_size_bytes(edges) <= TINY_GRAPH_BYTES
-    )
-    with _tiny_graph_mode(spark, tiny):
-        for it in range(start_iter, max_iterations):
-            if converged:
-                break
-            edges = _small_star(_large_star(edges))
-            durable = bool(checkpoint_dir) and (it + 1) % max(durable_every, 1) == 0
-            if durable:
-                edges, fp = _write_durable(it, edges)
-                # the Observation fp cannot carry count-distincts; run the
-                # star test as its own small job on the just-written round
-                _, star = _fingerprint_and_star_test(edges)
-                converged = star or fp == prev_fp
-            else:
-                # ONE job per star round: the lazy local checkpoint persists
-                # its partitions while the fingerprint aggregation scans them
-                # (the eager + separate-fingerprint form paid two jobs per
-                # round — a fixed floor the 4×-parallel leg cannot amortize).
-                # The same scan evaluates the star-forest fixpoint test,
-                # stopping at the round that PRODUCED the final edge set
-                # instead of paying one more LS∘SS round for an unchanged
-                # fingerprint.
-                edges = edges.localCheckpoint(eager=False)
-                fp, star = _fingerprint_and_star_test(edges)
-                converged = star or fp == prev_fp
+    if start_iter == 0:
+        # lazy: the plan is truncated NOW (LogicalRDD); the probe's job
+        # persists every partition, so the star rounds of a graph over the
+        # bound read them instead of recomputing the upstream
+        edges = edges.localCheckpoint(eager=False)
+        probe = edges.limit(DRIVER_CC_MAX_EDGES + 1).toPandas()
+        if len(probe) <= DRIVER_CC_MAX_EDGES:
+            u, v = _driver_star_forest(probe["u"].to_numpy(), probe["v"].to_numpy())
+            edges = spark.createDataFrame(pd.DataFrame({"u": u, "v": v}), edges.schema)
+            converged = True
             if checkpoint_dir:
-                if converged and not durable:
-                    # the final edge set must be durable for crash-after-
-                    # convergence resume, whatever the cadence (edges are
-                    # already persisted, so this re-writes cached partitions,
-                    # no recompute)
-                    edges, fp = _write_durable(it, edges)
-                    durable = True
-                if durable:
-                    _write_state(it, fp, converged)
-            prev_fp = fp
+                edges, fp = _write_durable(0, edges)
+                _write_state(0, fp, True)
+
+    for it in range(start_iter, max_iterations):
+        if converged:
+            break
+        edges = _small_star(_large_star(edges))
+        durable = bool(checkpoint_dir) and (it + 1) % max(durable_every, 1) == 0
+        if durable:
+            edges, fp = _write_durable(it, edges)
+            # the Observation fp cannot carry count-distincts; run the
+            # star test as its own small job on the just-written round
+            _, star = _fingerprint_and_star_test(edges)
+            converged = star or fp == prev_fp
+        else:
+            # ONE job per star round: the lazy local checkpoint persists
+            # its partitions while the fingerprint aggregation scans them
+            # (the eager + separate-fingerprint form paid two jobs per
+            # round — a fixed floor the 4×-parallel leg cannot amortize).
+            # The same scan evaluates the star-forest fixpoint test,
+            # stopping at the round that PRODUCED the final edge set
+            # instead of paying one more LS∘SS round for an unchanged
+            # fingerprint.
+            edges = edges.localCheckpoint(eager=False)
+            fp, star = _fingerprint_and_star_test(edges)
+            converged = star or fp == prev_fp
+        if checkpoint_dir:
+            if converged and not durable:
+                # the final edge set must be durable for crash-after-
+                # convergence resume, whatever the cadence (edges are
+                # already persisted, so this re-writes cached partitions,
+                # no recompute)
+                edges, fp = _write_durable(it, edges)
+                durable = True
+            if durable:
+                _write_state(it, fp, converged)
+        prev_fp = fp
     if not converged:
-        # non-converged output may violate the "cluster_id = min member,
-        # transitive" contract — surface it instead of failing silently
-        logger.warning(
-            "connected_components: edge fingerprint did not stabilize within "
-            "%d iterations; clusters may be incomplete", max_iterations,
+        # non-converged edges break the "cluster_id = min member, transitive"
+        # contract: a wrong result must fail, not log
+        raise RuntimeError(
+            "connected_components: star rounds did not converge within "
+            f"{max_iterations} iterations"
         )
 
     # after convergence every edge is (member → root); add roots themselves

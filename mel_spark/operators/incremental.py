@@ -369,14 +369,8 @@ def merge_components(
         )
         .filter(F.col("mention_id_a") != F.col("mention_id_b"))
     )
-    # the mapped edge count is bounded by |new_matches| (one mapped edge per
-    # delta edge), so the delta's OWN statistics decide tiny-graph mode — the
-    # mapped plan sits on the base run's checkpoint RDD whose size estimate
-    # is unknown and would needlessly keep the AQE mini-job latency
-    tiny = cluster._plan_size_bytes(new_matches) <= cluster.TINY_GRAPH_BYTES
     return cluster.connected_components(
-        mapped, checkpoint_dir=checkpoint_dir, input_fingerprint=input_fingerprint,
-        assume_tiny=tiny or None,
+        mapped, checkpoint_dir=checkpoint_dir, input_fingerprint=input_fingerprint
     )
 
 

@@ -4,7 +4,27 @@
 import pytest
 from pyspark.sql import functions as F
 
+from mel_spark.operators import cluster
 from mel_spark.operators.cluster import attach_singletons, connected_components
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force the star rounds: no edge set fits a driver bound of zero."""
+    monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", 0)
+
+
+def _spy(monkeypatch, name):
+    """Count the calls of the cluster-module function ``name``."""
+    calls = []
+    orig = getattr(cluster, name)
+
+    def wrapped(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(cluster, name, wrapped)
+    return calls
 
 
 def _cc(spark, edges):
@@ -49,10 +69,12 @@ def test_singletons_attached(spark):
     assert out == {"a": "a", "b": "a", "z": "z"}
 
 
-def test_planted_hub_is_safe(spark):
+def test_planted_hub_is_safe(spark, distributed):
     """A high-degree hub (the skewed match graph case, VERDICT r1 #3): the
     star steps must resolve it via scalar min-aggregation — no collect_set
-    neighbor arrays — and still produce one transitive cluster."""
+    neighbor arrays — and still produce one transitive cluster. Pinned to
+    the star rounds, whose hub safety this checks: 100k edges fit the
+    driver bound, but a hub past the bound runs these rounds."""
     n = 100_000
     hub = spark.range(1, n + 1).select(
         F.lit(0).alias("mention_id_a"), F.col("id").alias("mention_id_b")
@@ -66,11 +88,12 @@ def test_planted_hub_is_safe(spark):
     assert cc.count() == n + 51
 
 
-def test_mid_clustering_resume(spark, tmp_path):
+def test_mid_clustering_resume(spark, tmp_path, distributed):
     """north_rule: the pipeline resumes MID-clustering. Run CC with a durable
     round checkpoint, simulate a crash by re-invoking with the same dir —
     the completed rounds must be read back, not recomputed, and the result
-    must equal the non-checkpointed run."""
+    must equal the non-checkpointed run. Pinned to the star rounds: only
+    they write intermediate rounds to resume from."""
     import json
     import os
 
@@ -109,11 +132,12 @@ def test_mid_clustering_resume(spark, tmp_path):
     assert third == base
 
 
-def test_durable_every_cadence(spark, tmp_path):
+def test_durable_every_cadence(spark, tmp_path, distributed):
     """durable_every=K: intermediate rounds are localCheckpoint-only, the
     converged round is still written durably with its state marker, results
     match the per-round-durable run, and crash-after-convergence resume
-    performs zero extra rounds."""
+    performs zero extra rounds. Pinned to the star rounds: the cadence
+    applies to them only (the driver path writes one converged round)."""
     import json
     import os
 
@@ -202,11 +226,12 @@ def test_stale_state_discarded_on_fingerprint_mismatch(spark, tmp_path):
     assert got2 == {"y": "x", "z": "x", "x": "x"}, got2
 
 
-def test_random_graphs_match_union_find_oracle(spark):
+def test_random_graphs_match_union_find_oracle(spark, monkeypatch):
     """Breadth check: random Erdős–Rényi-ish edge sets at several densities
     vs a pure-Python union-find with min-label semantics (cluster_id = min
     member id). The structural cases above pin known shapes; this pins the
-    algorithm on graphs nobody hand-picked (seeded — deterministic)."""
+    algorithm on graphs nobody hand-picked (seeded — deterministic), under
+    both strategies."""
     import numpy as np
 
     def union_find_labels(edges, nodes):
@@ -230,15 +255,94 @@ def test_random_graphs_match_union_find_oracle(spark):
         return {n: comp[find(n)] for n in nodes}
 
     rng = np.random.default_rng(20260820)
+    graphs = []
     for n_nodes, n_edges in [(30, 15), (60, 60), (50, 120), (200, 80)]:
         a = rng.integers(0, n_nodes, size=n_edges)
         b = rng.integers(0, n_nodes, size=n_edges)
         edges = [
             (f"v{u:03d}", f"v{v:03d}") for u, v in zip(a.tolist(), b.tolist()) if u != v
         ]
-        if not edges:
-            continue
-        nodes = sorted({x for e in edges for x in e})
-        expected = union_find_labels(edges, nodes)
-        got = _cc(spark, edges)
-        assert got == expected, f"mismatch at ({n_nodes},{n_edges})"
+        if edges:
+            graphs.append(((n_nodes, n_edges), edges))
+    # both strategies: the driver solver, then the star rounds
+    for bound in (cluster.DRIVER_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", bound)
+        for shape, edges in graphs:
+            nodes = sorted({x for e in edges for x in e})
+            expected = union_find_labels(edges, nodes)
+            got = _cc(spark, edges)
+            assert got == expected, f"mismatch at {shape}, driver bound {bound}"
+
+
+def test_one_edge_over_the_bound_runs_distributed(spark, monkeypatch):
+    """The bound is inclusive: an edge set of exactly DRIVER_CC_MAX_EDGES
+    edges is solved on the driver, one more takes the star rounds — with
+    the same labels. The self-loop is dropped before the bound is measured."""
+    edges = [(f"n{i}", f"n{i + 1}") for i in range(5)] + [("q", "r"), ("z", "z")]
+    monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", len(edges) - 1)
+    rounds = _spy(monkeypatch, "_large_star")
+    at_bound = _cc(spark, edges)
+    assert not rounds
+    monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", len(edges) - 2)
+    over_bound = _cc(spark, edges)
+    assert rounds
+    assert at_bound == over_bound
+    assert at_bound == {**{f"n{i}": "n0" for i in range(6)}, "q": "q", "r": "q"}
+
+
+def test_driver_path_resumes_converged_forest(spark, tmp_path, monkeypatch):
+    """With checkpoint_dir the driver path writes its forest once, as the
+    converged round 0; a rerun reads it back without solving again and
+    writes no new round."""
+    import json
+    import os
+
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)] + [("x", "y")]
+    df = spark.createDataFrame(edges, ["mention_id_a", "mention_id_b"])
+    cc_dir = str(tmp_path / "cc")
+    base = {r["mention_id"]: r["cluster_id"] for r in connected_components(df).collect()}
+    first = {
+        r["mention_id"]: r["cluster_id"]
+        for r in connected_components(df, checkpoint_dir=cc_dir).collect()
+    }
+    assert first == base
+    state = json.load(open(os.path.join(cc_dir, "_CC_STATE.json")))
+    assert state["converged"] and state["iteration"] == 0
+    assert [d for d in os.listdir(cc_dir) if d.startswith("iter")] == ["iter0"]
+
+    solves = _spy(monkeypatch, "_driver_star_forest")
+    again = {
+        r["mention_id"]: r["cluster_id"]
+        for r in connected_components(df, checkpoint_dir=cc_dir).collect()
+    }
+    assert again == base and not solves
+    assert [d for d in os.listdir(cc_dir) if d.startswith("iter")] == ["iter0"]
+
+
+@pytest.mark.parametrize("strategy", ["driver", "distributed"])
+@pytest.mark.parametrize("id_type", ["string", "long"])
+def test_output_keeps_the_input_id_type(spark, monkeypatch, strategy, id_type):
+    from pyspark.sql.types import LongType, StringType
+
+    if strategy == "distributed":
+        monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", 0)
+    t = {"string": StringType(), "long": LongType()}[id_type]
+    raw = [(3, 1), (1, 2), (10, 11), (12, 11), (7, 7)]
+    rows = [(str(a), str(b)) if id_type == "string" else (a, b) for a, b in raw]
+    df = spark.createDataFrame(rows, f"mention_id_a {id_type}, mention_id_b {id_type}")
+    cc = connected_components(df)
+    assert [f.dataType for f in cc.schema.fields] == [t, t]
+    got = {r["mention_id"]: r["cluster_id"] for r in cc.collect()}
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
+    if id_type == "string":
+        want = {str(k): str(v) for k, v in want.items()}
+    assert got == want
+
+
+def test_non_convergence_raises(spark, distributed):
+    """A star loop stopped before its fixpoint must fail loudly: its edges
+    break the cluster_id = min member contract."""
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)]
+    df = spark.createDataFrame(edges, ["mention_id_a", "mention_id_b"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iterations=1)

@@ -111,6 +111,23 @@ def test_broadcast_knn_index_path_matches_default(spark, sf_dir, emb_df):
         broadcast_knn(queries, emb_df, k=5, delivery="bogus")
 
 
+def test_knn_scratch_path_is_per_application(spark, emb_df):
+    """The spill dir of one index plan is stable within an application and
+    differs across applications; without spark.mel.scratchDir it sits in a
+    private (mode 0700) per-process dir."""
+    import os
+    import stat
+
+    from mel_spark.operators.similarity import _knn_scratch_path
+
+    index = emb_df.select("vec_id", "embedding")
+    same_plan = emb_df.select("vec_id", "embedding")
+    p1 = _knn_scratch_path(index, "app-1")
+    assert p1 == _knn_scratch_path(same_plan, "app-1")
+    assert p1 != _knn_scratch_path(index, "app-2")
+    assert stat.S_IMODE(os.stat(os.path.dirname(p1)).st_mode) == 0o700
+
+
 def test_ivf_quantized_reorder_matches_unquantized(spark, emb_df):
     """With a reorder budget comfortably above k, the int8 first pass must
     not change the final top-k: the exact re-score runs on the survivors and
