@@ -51,9 +51,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _doc_features(docs: DataFrame) -> DataFrame:
-    """(doc_id, xs, bands) via ONE Arrow batch kernel (text.doc_features_map,
-    guide §4.2): per-shingle md5 through hashlib, the 32 minhash permutations
-    and per-doc minima as flat NumPy passes, band md5s through hashlib.
+    """(doc_id, xs, bands) via ONE mapInArrow batch kernel
+    (text.doc_features_map, guide §4.2): per-shingle md5 through hashlib, the
+    32 minhash permutations and per-doc minima through the chunked NumPy
+    primitive the pipeline featurizer shares (text.minhash_signatures), band
+    md5s through hashlib.
     Integer arithmetic + md5 only — exact cross-engine, so ``xs`` (sorted
     distinct md5-derived shingle ints — the jaccard verification runs on
     these, never on shingle strings) and the band equality classes are
@@ -67,7 +69,7 @@ def _doc_features(docs: DataFrame) -> DataFrame:
     the same serialized UDF and the CacheManager can substitute a persisted
     feature table across queries."""
     fn, schema = T.doc_features_map(SHINGLE_N, MH_HASHES, MH_BANDS)
-    return docs.select("doc_id", "text").mapInPandas(fn, schema)
+    return docs.select("doc_id", "text").mapInArrow(fn, schema)
 
 
 def _band_blocks(feats: DataFrame) -> DataFrame:
@@ -676,7 +678,7 @@ def q_join_topn_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine nearly useless while adding a 1.5M-group hash
     aggregation; the join's own exchange already hash-partitions by orderkey
     so the post-join aggregation reuses it with no extra shuffle."""
-    from mel_spark.operators.cluster import _plan_size_bytes
+    from mel_spark.session import plan_size_bytes
 
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders")
@@ -692,7 +694,7 @@ def q_join_topn_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never shuffled; at production scale the gate never fires and the
     # planner keeps sort-merge + AQE skew handling. Results identical —
     # decimal sums are exact and join output is the same row multiset.
-    if _plan_size_bytes(o) + _plan_size_bytes(c) <= 64 << 20:
+    if plan_size_bytes(o) + plan_size_bytes(c) <= 64 << 20:
         sel = F.broadcast(sel)
     return (
         sel.join(li, F.col("o_orderkey") == li["l_orderkey"])

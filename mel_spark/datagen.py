@@ -149,8 +149,3 @@ def write_parquet(tables: dict[str, pd.DataFrame], out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name, df in tables.items():
         df.to_parquet(f"{out_dir}/{name}.parquet", index=False, row_group_size=65536)
-
-
-def load_as_spark(spark, tables: dict[str, pd.DataFrame]):
-    """Create Spark DataFrames (Arrow path) from the generated pandas tables."""
-    return {name: spark.createDataFrame(df) for name, df in tables.items()}

@@ -12,6 +12,7 @@ Each builder here has a DuckDB twin in mel_spark.functions.oracle.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -60,13 +61,53 @@ MINHASH_M = 1 << 30
 
 
 def _minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     return [
         (int(rng.integers(1, MINHASH_P)), int(rng.integers(0, MINHASH_P)))
         for _ in range(num_hashes)
     ]
+
+
+def minhash_signatures(starts: np.ndarray, flat: np.ndarray, params: np.ndarray) -> np.ndarray:
+    """The NumPy MinHash primitive both featurizers share: sig[d, j] = min
+    over doc d's shingle ints x of (a_j·x + b_j) mod P — the arithmetic of
+    :func:`minhash_signature_from_ints`. ``flat`` holds every doc's
+    sorted-distinct shingle ints (int64, each < 2^31 so a·x + b < 2^62)
+    back to back; doc d's segment starts at ``starts[d]`` and ends at the
+    next start (the last at ``len(flat)``). ``params`` is the (H, 2)
+    int64 array of :func:`_minhash_params`. Returns the (D, H) int64
+    signature.
+
+    Precondition: every segment is non-empty (strictly increasing
+    ``starts``, ``starts[0] == 0``, last start < ``len(flat)``) —
+    ``np.minimum.reduceat`` returns the element AT the start of an empty
+    segment instead of a minimum, so an empty doc would silently take its
+    neighbour's value.
+
+    Chunked by docs: the flat form streams the whole shingle array from
+    DRAM once per hash; per 2048-doc chunk the segment (~1.3 MB) stays
+    cache-warm across all H passes, and one buffer is reused for every
+    chunk and hash."""
+    D = len(starts)
+    P = np.int64(MINHASH_P)
+    sig = np.empty((D, len(params)), dtype=np.int64)
+    ph = np.empty(0, np.int64)
+    CH = 2048
+    for c0 in range(0, D, CH):
+        c1 = min(c0 + CH, D)
+        s = starts[c0]
+        e = starts[c1] if c1 < D else len(flat)
+        seg = flat[s:e]
+        st = starts[c0:c1] - s
+        if len(seg) > len(ph):
+            ph = np.empty(len(seg), np.int64)
+        pv = ph[: len(seg)]
+        for h in range(len(params)):
+            np.multiply(seg, params[h, 0], out=pv)
+            np.add(pv, params[h, 1], out=pv)
+            np.mod(pv, P, out=pv)
+            sig[c0:c1, h] = np.minimum.reduceat(pv, st)
+    return sig
 
 
 def shingle_int_hashes(shingle_col: Column) -> Column:
@@ -437,12 +478,12 @@ def distinct_token_ratio(text: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched ER feature kernel (r6, guide §4.2). The Catalyst form of the
+# Arrow-batched ER feature kernel (guide §4.2). The Catalyst form of the
 # md5-shingle → minhash → band chain is interpreted HOF work (zip/transform/
 # array_min are CodegenFallback) that allocates per element — measured 130 s
 # task time (up to 79% GC) for one sf1.0 feature pass. The same math as one
-# pandas batch kernel: per-shingle md5 via hashlib (C speed), the 32
-# permutations + per-doc minima as flat NumPy reduceat passes, band md5s via
+# mapInArrow batch kernel: per-shingle md5 via hashlib (C speed), the
+# signature through the shared minhash_signatures primitive, band md5s via
 # hashlib. Every operation is integer arithmetic or md5 — EXACT cross-engine,
 # so the output is bit-identical to the Catalyst/DuckDB twins (asserted by
 # tests/test_er_kernel.py against the legacy expression chain).
@@ -460,19 +501,19 @@ _DOC_FEATURES_KERNELS: dict = {}
 
 def doc_features_map(shingle_n: int = 3, num_hashes: int = 32, bands: int = 16,
                      seed: int = 42):
-    """(kernel, schema) for ``docs.select('doc_id','text').mapInPandas(...)``
-    → (doc_id long, xs array<int>, bands array<binary>). Memoized per config:
-    every invocation returns the SAME function object, so repeated query
-    builds produce cache-matching plans (InMemoryRelation substitution keys
-    on the serialized UDF)."""
+    """(kernel, schema) for ``docs.select('doc_id','text').mapInArrow(...)``
+    → (doc_id, xs array<int>, bands array<binary>). The kernel passes the
+    doc_id column through untouched; ``schema`` types it as long, and a
+    caller whose ids have another type swaps in its own id field. Memoized
+    per config: every invocation returns the SAME function object, so
+    repeated query builds produce cache-matching plans (InMemoryRelation
+    substitution keys on the serialized UDF)."""
     key = (shingle_n, num_hashes, bands, seed)
     if key in _DOC_FEATURES_KERNELS:
         return _DOC_FEATURES_KERNELS[key]
 
     import hashlib
 
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         BinaryType,
@@ -482,11 +523,9 @@ def doc_features_map(shingle_n: int = 3, num_hashes: int = 32, bands: int = 16,
         StructType,
     )
 
-    params = _minhash_params(num_hashes, seed)
-    A = np.array([p[0] for p in params], dtype=np.int64).reshape(-1, 1)
-    B = np.array([p[1] for p in params], dtype=np.int64).reshape(-1, 1)
+    assert num_hashes % bands == 0
+    params = np.array(_minhash_params(num_hashes, seed), dtype=np.int64)
     rows_per_band = num_hashes // bands
-    P = MINHASH_P
     M = MINHASH_M
     md5 = hashlib.md5
     n1 = shingle_n - 1
@@ -499,16 +538,18 @@ def doc_features_map(shingle_n: int = 3, num_hashes: int = 32, bands: int = 16,
         ]
     )
 
-    def kernel(it):
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            if not len(ids):
-                yield pd.DataFrame({"doc_id": [], "xs": [], "bands": []})
-                continue
-            xs_lists = []
-            join = " ".join
-            from_bytes = int.from_bytes
-            for t in pdf["text"].tolist():
+    def kernel(batches):
+        import pyarrow as pa
+
+        join = " ".join
+        joinp = "|".join
+        from_bytes = int.from_bytes
+        prefixes = [bytes([bi]) for bi in range(bands)]
+        for rb in batches:
+            D = rb.num_rows
+            counts = np.empty(D, np.int64)
+            vals = []
+            for d, t in enumerate(rb.column("text").to_pylist()):
                 if t is None:
                     # Catalyst parity: split(NULL) → NULL tokens, m=1, and
                     # concat_ws(' ', NULL slice) = '' → one empty shingle
@@ -521,43 +562,40 @@ def doc_features_map(shingle_n: int = 3, num_hashes: int = 32, bands: int = 16,
                         ss = set(map(join, zip(*(toks[i:] for i in range(shingle_n)))))
                     else:
                         ss = {join(toks)}
+                counts[d] = len(ss)
                 # first 15 hex chars == top 60 bits of the digest:
                 # int(hexdigest[:15], 16) == int.from_bytes(digest[:8]) >> 4
-                xs_lists.append(
-                    np.fromiter(
-                        sorted({(from_bytes(md5(s.encode()).digest()[:8], "big") >> 4) % M for s in ss}),
-                        dtype=np.int64,
-                    )
-                )
-            lens = np.fromiter((len(x) for x in xs_lists), dtype=np.int64, count=len(xs_lists))
-            offsets = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            flat = np.concatenate(xs_lists)
-            perm = (A * flat[None, :] + B) % P                      # (H, total)
-            sig = np.stack(
-                [np.minimum.reduceat(perm[j], offsets) for j in range(num_hashes)],
-                axis=1,
-            )                                                        # (n, H)
-            bands_col = []
-            prefixes = [bytes([bi]) for bi in range(bands)]
-            joinp = "|".join
-            for r in range(len(ids)):
-                s = sig[r].tolist()
-                bands_col.append(
-                    [
-                        prefixes[bi]
-                        + md5(
-                            joinp(map(str, s[bi * rows_per_band : (bi + 1) * rows_per_band])).encode()
-                        ).digest()
-                        for bi in range(bands)
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "xs": [x.astype(np.int32) for x in xs_lists],
-                    "bands": bands_col,
-                }
+                vals.extend((from_bytes(md5(s.encode()).digest()[:8], "big") >> 4) % M for s in ss)
+            # per-doc sorted-distinct via one global unique over
+            # (doc << 30 | x); x < M = 2^30 so the pack is lossless
+            u = np.unique(
+                (np.repeat(np.arange(D, dtype=np.int64), counts) << 30)
+                | np.array(vals, dtype=np.int64)
+            )
+            xs = u & np.int64(M - 1)
+            starts = np.searchsorted(u >> 30, np.arange(D, dtype=np.int64))
+            sig = minhash_signatures(starts, xs, params)
+            blob = b"".join(
+                prefixes[bi]
+                + md5(joinp(row[bi * rows_per_band : (bi + 1) * rows_per_band]).encode()).digest()
+                for row in sig.astype(str).tolist()
+                for bi in range(bands)
+            )
+
+            xs_off = np.append(starts, len(xs)).astype(np.int32)
+            xs_arr = pa.ListArray.from_arrays(
+                pa.array(xs_off), pa.array(xs.astype(np.int32), pa.int32())
+            )
+            keys = pa.Array.from_buffers(
+                pa.binary(), D * bands,
+                [None, pa.py_buffer((np.arange(D * bands + 1, dtype=np.int32) * 17).tobytes()),
+                 pa.py_buffer(blob)],
+            )
+            bd_arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(D + 1, dtype=np.int32) * bands), keys
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("doc_id"), xs_arr, bd_arr], names=["doc_id", "xs", "bands"]
             )
 
     _DOC_FEATURES_KERNELS[key] = (kernel, schema)

@@ -60,27 +60,11 @@ def _projection_matrix(dim: int, vocab_buckets: int, seed: int) -> np.ndarray:
     return m / np.linalg.norm(m, axis=1, keepdims=True)
 
 
-def _token_buckets(texts: pd.Series, vocab_buckets: int) -> list[np.ndarray]:
-    import zlib
-
-    out = []
-    for t in texts:
-        toks = t.split(" ") if t else []
-        out.append(
-            np.fromiter(
-                (zlib.crc32(w.encode("utf-8")) % vocab_buckets for w in toks),
-                dtype=np.int64,
-                count=len(toks),
-            )
-        )
-    return out
-
-
 def embed_buckets_udf(dim: int = EMB_DIM, vocab_buckets: int = 4096, seed: int = 42):
     """Arrow-batched embedder over PRE-HASHED token buckets (array<int>, from
     text.token_bucket_ids — JVM-side xxhash64): per batch one flattened
     gather + segmented sum (np.add.reduceat), zero Python-per-token work.
-    Same contract as embed_text_udf: deterministic, L2-normalized float[dim].
+    Deterministic, L2-normalized float[dim].
     """
     proj = _projection_matrix(dim, vocab_buckets, seed)
 
@@ -113,22 +97,20 @@ def featurize_map(
     th_col: str = "_th",
     id_col: str = "csid",
     emb_format: str = "f32",
-    engine: str = "pandas",
 ):
     """One Arrow pass computing EVERY per-document feature the ER pipeline
     needs — embedding, sorted-distinct shingle hashes (xs), and minhash band
     keys — vectorized ACROSS the batch (no per-document Python loop on the
     hot path). Input rows: (id_col, th_col = pre-hashed token ints from
     text.token_int_hashes, the one JVM xxhash64 pass). Returns a
-    (function, schema) pair: ``engine="pandas"`` for mapInPandas (reference
-    form, kept for tests/ad-hoc use), ``engine="arrow"`` for mapInArrow —
-    the pipeline hot path. Both share ONE math kernel over (lens, flat)
-    arrays; only the batch decode/encode differs. The arrow form reads the
+    (function, schema) pair for mapInArrow. The function reads the
     token-hash list column as a FLAT buffer and emits list columns as
     (offsets, values) pairs — no per-row ndarray/bytes objects, no pandas
     conversion, which halved the scorer's bandwidth footprint when applied
     there (BENCH/PAIR_STAGE.md) and is what lets Python workers scale with
-    cores on a bandwidth-shared host.
+    cores on a bandwidth-shared host. The minhash step is
+    text.minhash_signatures, the primitive the contract's md5 kernel
+    (text.doc_features_map) shares.
 
     Why not Catalyst: the expression form of this computation (32 `transform`
     permutations × `array_min` over ~80-element arrays per row) allocates a
@@ -151,7 +133,7 @@ def featurize_map(
         StructType as _ST,
     )
 
-    from mel_spark.functions.text import MINHASH_P, _minhash_params
+    from mel_spark.functions.text import MINHASH_P, _minhash_params, minhash_signatures
 
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
@@ -192,7 +174,7 @@ def featurize_map(
     def _core(
         lens: np.ndarray, flat: np.ndarray, D: int
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-        """The shared math kernel over segmented flat arrays. Returns
+        """The math kernel over segmented flat arrays. Returns
         (vecs (D,dim) f32 L2-normed, u_val int32 flat sorted-distinct-per-doc,
         starts_u (D,) int64 segment starts into u_val, band_keys (D,bands))."""
         doc_starts = np.zeros(D, np.int64)
@@ -255,30 +237,9 @@ def featurize_map(
         u_val = (u & np.int64((1 << 31) - 1)).astype(np.int32)
         starts_u = np.searchsorted(u_doc, np.arange(D, dtype=np.int64))
 
-        # ---- minhash signature minima + integer band keys ----
-        # Chunked by docs for the same bandwidth reason as the embedding
-        # gather: the naive loop streams the full shingle array from DRAM
-        # 32× (once per hash); per ~2048-doc chunk the segment (~1.3 MB)
-        # stays cache-warm across all 32 passes — ~32× less DRAM traffic
-        # for identical arithmetic. ph buffers are preallocated and reused.
-        u_val64 = u_val.astype(np.int64)
-        sig = np.empty((D, num_hashes), dtype=np.int64)
-        MH_CH = 2048
-        ph = np.empty(0, np.int64)
-        for c0 in range(0, D, MH_CH):
-            c1 = min(c0 + MH_CH, D)
-            s = starts_u[c0]
-            e = starts_u[c1] if c1 < D else len(u_val64)
-            seg = u_val64[s:e]
-            st = starts_u[c0:c1] - s
-            if len(seg) > len(ph):
-                ph = np.empty(len(seg), np.int64)
-            pv = ph[: len(seg)]
-            for h in range(num_hashes):
-                np.multiply(seg, params[h, 0], out=pv)
-                np.add(pv, params[h, 1], out=pv)
-                np.mod(pv, P, out=pv)
-                sig[c0:c1, h] = np.minimum.reduceat(pv, st)
+        # ---- minhash signature minima + integer band keys (every doc has
+        # >= 1 shingle, the primitive's non-empty-segment precondition) ----
+        sig = minhash_signatures(starts_u, u_val.astype(np.int64), params)
         band_keys = np.zeros((D, bands), dtype=np.int64)
         for b in range(bands):
             acc = np.zeros(D, dtype=np.int64)
@@ -293,43 +254,7 @@ def featurize_map(
         "canonicalize NULL content to '' (pipeline.ingest does)."
     )
 
-    def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            th = pdf[th_col]
-            D = len(th)
-            if D == 0:
-                yield pd.DataFrame({id_col: [], "emb": [], "xs": [], "bands": []})
-                continue
-            # contract: >=1 token hash per document. ingest() canonicalizes
-            # NULL content to '' (which tokenizes to one empty token), so a
-            # None/empty array here means a caller bypassed that boundary —
-            # fail with the contract named instead of an IndexError three
-            # layers into the shingle kernel.
-            bad = [t is None or len(t) == 0 for t in th]
-            if any(bad):
-                raise ValueError(_null_msg.format(ids=pdf[id_col][bad].tolist()[:5]))
-            lens = np.fromiter((len(t) for t in th), np.int64, D)
-            flat = (
-                np.concatenate([np.asarray(t, np.int64) for t in th])
-                if lens.sum()
-                else np.empty(0, np.int64)
-            )
-            vecs, u_val, starts_u, band_keys = _core(lens, flat, D)
-            xs_lists = np.split(u_val, starts_u[1:])
-            if emb_format == "f16":
-                emb_out = [v.astype("<f2").tobytes() for v in vecs]
-            else:
-                emb_out = list(vecs)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "emb": emb_out,
-                    "xs": xs_lists,
-                    "bands": list(band_keys),
-                }
-            )
-
-    def _featurize_arrow(batches):
+    def _featurize(batches):
         import pyarrow as pa
         import pyarrow.compute as pc  # noqa: F401 — pa.compute is lazy
 
@@ -389,9 +314,7 @@ def featurize_map(
                 names=[id_col, "emb", "xs", "bands"],
             )
 
-    if engine not in ("pandas", "arrow"):
-        raise ValueError(f"engine must be 'pandas' or 'arrow', got {engine!r}")
-    return (_featurize_arrow if engine == "arrow" else _featurize), schema
+    return _featurize, schema
 
 
 def emb_matrix(series: pd.Series) -> np.ndarray:
@@ -458,29 +381,3 @@ def ensure_emb_array(df, emb_col: str = "emb"):
         return df.withColumn(emb_col, unpack_f16_udf()(F.col(emb_col)))
     return df
 
-
-def embed_text_udf(dim: int = EMB_DIM, vocab_buckets: int = 4096, seed: int = 42):
-    """Arrow-batched embedder: text → L2-normalized float[dim].
-
-    Bag-of-hashed-tokens × fixed random projection — deterministic across runs,
-    partitions, and parallelism levels (FIXTURES.md §5 determinism test). The
-    projection matrix is built once per executor (lazy module-level cache), the
-    per-batch math is a single scatter-add + matmul-free gather-sum: O(tokens).
-    """
-    proj = _projection_matrix(dim, vocab_buckets, seed)
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _embed(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in it:
-            buckets = _token_buckets(texts.fillna(""), vocab_buckets)
-            vecs = np.zeros((len(buckets), dim), dtype=np.float32)
-            for i, b in enumerate(buckets):
-                if len(b):
-                    np.add.at(vecs, i, 0)  # no-op keeps branch simple
-                    vecs[i] = proj[b].sum(axis=0)
-            norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            vecs /= norms
-            yield pd.Series(list(vecs))
-
-    return _embed

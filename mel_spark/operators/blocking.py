@@ -34,59 +34,6 @@ def exact_content_blocks(df: DataFrame, id_col: str, content_col: str = "content
     )
 
 
-def minhash_blocks(
-    df: DataFrame,
-    id_col: str,
-    content_col: str = "content",
-    lang_col: str | None = "lang",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """(lang, minhash-band) LSH blocks. num_hashes = bands × rows; two docs
-    share ≥1 key with prob 1-(1-j^rows)^bands for Jaccard j — with 8 bands × 2
-    rows, j=0.7 collides with p≈0.996."""
-    # staged projections: shingle build → single md5 pass → permutations
-    staged = df.select(
-        F.col(id_col).alias("mention_id"),
-        (F.concat(F.col(lang_col), F.lit("/")) if lang_col else F.lit("")).alias("_lp"),
-        T.shingles(content_col, shingle_n).alias("_sh"),
-    ).select("mention_id", "_lp", T.shingle_int_hashes(F.col("_sh")).alias("_xs"))
-    return minhash_blocks_from_ints(
-        staged, "mention_id", "_xs", lang_prefix_col="_lp",
-        num_hashes=num_hashes, bands=bands,
-    )
-
-
-def minhash_blocks_from_ints(
-    df: DataFrame,
-    id_col: str,
-    xs_col: str,
-    lang_prefix_col: str | None = None,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """Band keys from a pre-materialized shingle-int-hash column (the 100 TB
-    path: the md5 pass is paid once at the embed/ingest checkpoint and reused
-    by blocking AND jaccard verification)."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    lp: Column = F.col(lang_prefix_col) if lang_prefix_col else F.lit("")
-    staged = df.select(
-        F.col(id_col).alias("mention_id"),
-        lp.alias("_lp"),
-        T.minhash_signature_from_ints(F.col(xs_col), num_hashes).alias("_sig"),
-    )
-    return staged.select(
-        "mention_id",
-        F.explode(T.minhash_band_keys(F.col("_sig"), bands, rows)).alias("_bk"),
-        "_lp",
-    ).select(
-        F.concat(F.lit("mh:"), F.col("_lp"), F.col("_bk")).alias("block_key"),
-        "mention_id",
-    )
-
-
 def hyperplane_blocks(
     df: DataFrame,
     id_col: str,
@@ -134,36 +81,6 @@ def cap_blocks(blocks: DataFrame, max_block_size: int = 64, order_col: str = "me
         .withColumn("_sz", F.count(F.lit(1)).over(Window.partitionBy("block_key")))
         .filter((F.col("_rn") <= max_block_size) & (F.col("_sz") >= 2))
         .drop("_rn", "_sz")
-    )
-
-
-def minhash_long_blocks(
-    df: DataFrame,
-    id_col: str,
-    xs_col: str,
-    lang_col: str | None = None,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """All-integer LSH blocking (the 100 TB hot path): signature from
-    pre-projected int hashes, band keys as longs, final block_key =
-    xxhash64(family, band, lang) — an 8-byte join key, zero string churn.
-    Emits (block_key long, mention_id)."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    lang = F.col(lang_col) if lang_col else F.lit("")
-    staged = df.select(
-        F.col(id_col).alias("mention_id"),
-        lang.alias("_lang"),
-        T.minhash_signature_from_ints(F.col(xs_col), num_hashes).alias("_sig"),
-    )
-    return staged.select(
-        "mention_id",
-        "_lang",
-        F.explode(T.minhash_band_ints(F.col("_sig"), bands, rows)).alias("_band"),
-    ).select(
-        "mention_id",
-        F.xxhash64(F.lit("mh"), F.col("_band"), F.col("_lang")).alias("block_key"),
     )
 
 

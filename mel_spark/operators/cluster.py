@@ -99,17 +99,6 @@ def _fingerprint_and_star_test(edges: DataFrame) -> tuple[tuple[int, int], bool]
     return (int(row["n"]), int(row["h"])), star
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the optimized plan — a DRIVER-side lookup,
-    no job. Cached inputs report their actual materialized bytes; scans
-    report file sizes; unknown plans default to a huge sentinel, so callers
-    treating 'small' as an optimization opportunity fail safe (big)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j edge
-        return 1 << 62
-
-
 def _driver_star_forest(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Connected components of the edge list (u, v), solved in NumPy.
 

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Five strategies over a documents table (id, text[, lang, emb]):
+Four strategies over a documents table (id, text[, lang, emb]):
 
  exact         — hash-groupBy on sha256(text)            (A8 analogue:
                  src/models/data/only_once_dataset.py:8-22 — dedup before the
@@ -9,8 +9,6 @@ Five strategies over a documents table (id, text[, lang, emb]):
                  so the self-join never goes all-pairs; LSH params chosen so
                  recall at the threshold is ~1, then exact re-verification
                  makes the output threshold-exact)
- minhash_lsh   — candidate pairs straight from band collisions (recall<1 by
-                 design; the cheap scale path)
  simhash       — exact simhash-key groups (near-dup via identical sketch)
  embedding     — cosine ≥ t pairs over the embedding column
 
@@ -22,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from mel_spark.functions import text as T
 from mel_spark.functions import vectors as V
@@ -49,31 +48,6 @@ def dedup_keep_first(docs: DataFrame, id_col: str, text_col: str = "text") -> Da
     return docs.join(w_min, id_col, "left_semi")
 
 
-def _minhash_candidates(
-    docs: DataFrame, id_col: str, text_col: str, shingle_n: int, num_hashes: int, bands: int
-) -> DataFrame:
-    """Distinct candidate id pairs from minhash band collisions."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    keyed = (
-        docs.select(F.col(id_col).alias("doc_id"), T.shingles(text_col, shingle_n).alias("_sh"))
-        .select("doc_id", T.shingle_int_hashes(F.col("_sh")).alias("_xs"))
-        .select("doc_id", T.minhash_signature_from_ints(F.col("_xs"), num_hashes).alias("_sig"))
-        .select(
-            "doc_id",
-            F.explode(T.minhash_band_keys(F.col("_sig"), bands, rows)).alias("band_key"),
-        )
-    )
-    a = keyed.select("band_key", F.col("doc_id").alias("doc_id_a"))
-    b = keyed.select("band_key", F.col("doc_id").alias("doc_id_b"))
-    return (
-        a.join(b, "band_key")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .distinct()
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str,
@@ -99,7 +73,24 @@ def ngram_jaccard_pairs(
             .filter(F.col("doc_id_a") < F.col("doc_id_b"))
         )
     else:
-        cand = _minhash_candidates(docs, id_col, text_col, shingle_n, num_hashes, bands)
+        # band keys from the md5 feature kernel; it passes the id through,
+        # so the output schema carries this table's own id type
+        fn, schema = T.doc_features_map(shingle_n, num_hashes, bands)
+        schema = StructType([StructField("doc_id", docs.schema[id_col].dataType),
+                             *schema.fields[1:]])
+        keyed = (
+            docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+            .mapInArrow(fn, schema)
+            .select("doc_id", F.explode("bands").alias("band_key"))
+        )
+        a = keyed.select("band_key", F.col("doc_id").alias("doc_id_a"))
+        b = keyed.select("band_key", F.col("doc_id").alias("doc_id_b"))
+        cand = (
+            a.join(b, "band_key")
+            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+            .select("doc_id_a", "doc_id_b")
+            .distinct()
+        )
     joined = (
         cand.join(sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a")), "doc_id_a")
         .join(sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b")), "doc_id_b")
@@ -111,18 +102,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id_a", "doc_id_b", "jaccard")
     )
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """Raw LSH candidates (no verification) — the cheap 100 TB first pass."""
-    return _minhash_candidates(docs, id_col, text_col, shingle_n, num_hashes, bands)
 
 
 def simhash_groups(docs: DataFrame, id_col: str, text_col: str = "text", bits: int = 32) -> DataFrame:
@@ -170,9 +149,9 @@ def embedding_near_dup_pairs(
         blocks = hyperplane_blocks(
             e, "doc_id", "emb", dim=dim, n_planes=n_planes, bands=bands, seed=seed
         )
-        from mel_spark.operators.cluster import _plan_size_bytes
+        from mel_spark.session import plan_size_bytes
 
-        if _plan_size_bytes(docs) <= 256 << 20:
+        if plan_size_bytes(docs) <= 256 << 20:
             # both self-join sides re-derive the hyperplane keys (the
             # literal-unrolled plane dots are the query's heaviest
             # projection); for small inputs cache them once. Gated on scan

@@ -152,11 +152,6 @@ def embed_stage(mentions: DataFrame, cfg: ERConfig) -> DataFrame:
         num_hashes=cfg.minhash_hashes,
         bands=cfg.minhash_bands,
         emb_format=cfg.emb_storage,
-        # arrow engine: token-hash lists arrive/leave as flat buffers — no
-        # per-row ndarray objects, no pandas conversion (same bandwidth fix
-        # as the pair scorer, BENCH/PAIR_STAGE.md); math kernel is shared
-        # with the pandas form and bit-identical (tests/test_functions.py)
-        engine="arrow",
     )
     return distinct_contents.select(
         "csid", T.token_int_hashes("content").alias("_th")

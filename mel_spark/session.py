@@ -117,6 +117,17 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def plan_size_bytes(df) -> int:
+    """Catalyst's size estimate for the optimized plan — a DRIVER-side lookup,
+    no job. Cached inputs report their actual materialized bytes; scans
+    report file sizes; unknown plans default to a huge sentinel, so callers
+    treating 'small' as an optimization opportunity fail safe (big)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover - py4j edge
+        return 1 << 62
+
+
 _SCAN_SPLITS_CACHE: dict[tuple, int] = {}
 
 

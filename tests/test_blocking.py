@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mel_spark.operators import blocking
-from mel_spark.operators.pairs import candidate_pairs
+from mel_spark.pipeline import ERConfig, block_index_stage, embed_stage, ingest
 
 
 @pytest.fixture(scope="module")
@@ -74,28 +74,30 @@ def test_salting_decorrelates_across_key_families(spark):
 
 
 def test_minhash_blocking_recall_on_planted_pairs(spark, tiny_tables):
-    """≥99% of gold same-entity pairs must share ≥1 minhash band key
-    (the ScaNN-tuning analogue: SURVEY.md §7.3 blocking recall)."""
-    repos = spark.createDataFrame(tiny_tables["repos"])
-    ref = spark.createDataFrame(tiny_tables["reference_clusters"])
-    ingested = repos.withColumn(
-        "mention_id", F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256)
+    """≥99% of gold same-entity pairs of distinct contents must share ≥1
+    key of the pipeline's raw block index (the ScaNN-tuning analogue:
+    SURVEY.md §7.3 blocking recall)."""
+    cfg = ERConfig()
+    mentions = ingest(spark.createDataFrame(tiny_tables["repos"]))
+    index = block_index_stage(embed_stage(mentions, cfg), mentions, cfg)
+    cand = (
+        index.alias("x")
+        .join(index.alias("y"), "block_key")
+        .select(F.col("x.mention_id").alias("csid_a"), F.col("y.mention_id").alias("csid_b"))
+        .filter(F.col("csid_a") < F.col("csid_b"))
     )
-    blocks = blocking.minhash_blocks(
-        ingested, "mention_id", "content", lang_col=None, num_hashes=32, bands=16
+    ref = spark.createDataFrame(tiny_tables["reference_clusters"]).join(
+        mentions.select("mention_id", "csid"), "mention_id"
     )
-    cand = candidate_pairs(blocks).select("mention_id_a", "mention_id_b")
     gold = (
         ref.alias("a")
         .join(ref.alias("b"), F.col("a.entity_id") == F.col("b.entity_id"))
-        .filter(F.col("a.mention_id") < F.col("b.mention_id"))
-        .select(
-            F.col("a.mention_id").alias("mention_id_a"),
-            F.col("b.mention_id").alias("mention_id_b"),
-        )
+        .select(F.col("a.csid").alias("csid_a"), F.col("b.csid").alias("csid_b"))
+        .filter(F.col("csid_a") < F.col("csid_b"))
+        .distinct()
     )
     n_gold = gold.count()
-    n_found = gold.join(cand, ["mention_id_a", "mention_id_b"], "left_semi").count()
+    n_found = gold.join(cand, ["csid_a", "csid_b"], "left_semi").count()
     assert n_found / n_gold >= 0.99, f"blocking recall {n_found}/{n_gold}"
 
 

@@ -1,12 +1,13 @@
-"""Parity of the Arrow ER-feature kernel (text.doc_features_map) with the
-legacy Catalyst expression chain it replaced in r6 — same xs (sorted distinct
+"""Parity of the mapInArrow ER-feature kernel (text.doc_features_map) with
+the legacy Catalyst expression chain it replaced — same xs (sorted distinct
 md5-derived shingle ints) and the same band equality classes (binary keys are
 a bijection of the 'b{i}:<hex>' strings). Also pins the plan-cache property
 the bench relies on: two independent builds of the kernel DataFrame are
 CacheManager-substitutable (the second reads the first's InMemoryRelation)."""
 
+import numpy as np
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from mel_spark.functions import text as T
 
@@ -47,13 +48,7 @@ def _legacy(docs):
     return staged
 
 
-def test_kernel_matches_catalyst_chain(spark, docs):
-    fn, schema = T.doc_features_map(SHINGLE_N, MH_HASHES, MH_BANDS)
-    got = {
-        r["doc_id"]: r
-        for r in docs.select("doc_id", "text").mapInPandas(fn, schema).collect()
-    }
-    want = {r["doc_id"]: r for r in _legacy(docs).collect()}
+def _assert_matches_legacy(got, want):
     assert set(got) == set(want)
     for did, w in want.items():
         g = got[did]
@@ -63,12 +58,39 @@ def test_kernel_matches_catalyst_chain(spark, docs):
         assert rebuilt == list(w["bands"]), did
 
 
+def test_kernel_matches_catalyst_chain(spark, docs):
+    fn, schema = T.doc_features_map(SHINGLE_N, MH_HASHES, MH_BANDS)
+    got = {
+        r["doc_id"]: r
+        for r in docs.select("doc_id", "text").mapInArrow(fn, schema).collect()
+    }
+    _assert_matches_legacy(got, {r["doc_id"]: r for r in _legacy(docs).collect()})
+
+    # one Arrow batch of > 2048 docs of varied length, fed straight to the
+    # kernel, crosses the signature primitive's chunk boundaries; an empty
+    # batch yields an empty batch
+    rng = np.random.default_rng(11)
+    vocab = [f"v{i}" for i in range(30)]
+    rows = [(i, " ".join(rng.choice(vocab, int(rng.integers(1, 100)))))
+            for i in range(2500)]
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.int64()),
+         pa.array([r[1] for r in rows], pa.string())],
+        names=["doc_id", "text"],
+    )
+    out = list(fn(iter([rb, rb.slice(0, 0)])))
+    assert [b.num_rows for b in out] == [len(rows), 0]
+    got = {r["doc_id"]: r for r in out[0].to_pylist()}
+    big = spark.createDataFrame(rows, ["doc_id", "text"])
+    _assert_matches_legacy(got, {r["doc_id"]: r for r in _legacy(big).collect()})
+
+
 def test_kernel_plans_are_cache_substitutable(spark, docs):
     fn, schema = T.doc_features_map(SHINGLE_N, MH_HASHES, MH_BANDS)
-    a = docs.select("doc_id", "text").mapInPandas(fn, schema).persist()
+    a = docs.select("doc_id", "text").mapInArrow(fn, schema).persist()
     a.count()
     try:
-        b = docs.select("doc_id", "text").mapInPandas(fn, schema)
+        b = docs.select("doc_id", "text").mapInArrow(fn, schema)
         plan = b._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
     finally:
