@@ -203,6 +203,25 @@ def test_null_content_canonicalized_to_empty_doc(spark, tmp_path):
     assert feats.filter(F.col("emb").isNull()).count() == 0
 
 
+def test_featurize_map_rejects_null_token_arrays():
+    """A caller that bypasses ingest's canonicalization gets the contract
+    named in the error, not an IndexError in the shingle kernel."""
+    import pyarrow as pa
+
+    from mel_spark.functions.vectors import featurize_map
+
+    fn, _ = featurize_map()
+    rb = pa.RecordBatch.from_arrays(
+        [
+            pa.array([1, 2], pa.int64()),
+            pa.array([[5, 7, 9], []], pa.list_(pa.int64())),
+        ],
+        names=["csid", "_th"],
+    )
+    with pytest.raises(ValueError, match="NULL/zero-length token array"):
+        list(fn(iter([rb])))
+
+
 def test_ensure_scan_parallelism_only_widens_narrow_scans(spark, tmp_path):
     """The conditional repartition is a no-op when the input already has at
     least session-parallelism splits (the production-scale case) and widens a
