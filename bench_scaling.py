@@ -11,48 +11,6 @@ Each run is a fresh JVM (spark-submit) with a fresh checkpoint dir; the input
 parquet is generated once, outside the timed region.
 
 Usage: python bench_scaling.py [--files 40000] [--n 8] [--out BENCH/BASELINE.md]
-
-Round-5 gated-campaign mode (--campaign LOG.jsonl [--pairs K]) runs K
-matched same-window pairs, samples host contention during every leg with
-tools/contention_probe.py, and appends one JSON record per pair to the
-log.  --verdict LOG.jsonl applies the rule below to every pair in the log.
-
-PRE-REGISTERED ACCEPTANCE RULE (round 5 — committed BEFORE the campaign's
-first measurement; replaces round-4's best-of-invocations selection):
-
-  A leg is CLEAN iff all of
-    (a) spin_median_slow  <= 1.20   (no sustained whole-leg contention;
-                                     allowance for frequency dips)
-    (b) spin_burst_frac   <= 0.05   (<=5% of ~5 s spin windows slower than
-                                     1.35x the leg's own median WHILE the
-                                     guest had idle cores — external
-                                     slowness only; probe v2 note below)
-    (c) steal_burst_frac  <= 0.05 and steal_mean <= 0.05
-                                    (secondary: guest-visible steal, if the
-                                     kernel accounts it at all)
-  A pair is ACCEPTED iff BOTH its legs are CLEAN.  No other selection is
-  permitted — in particular, acceptance must not look at the efficiency.
-
-  HEADLINE = MEDIAN end-to-end matched-pair efficiency over ALL accepted
-  pairs in the campaign log.  Validity requires >= 3 accepted pairs.
-  PASS iff headline >= 0.8.  Every pair, accepted or rejected, is
-  reported with its contention scores.
-
-  (The membw probe is recorded as a diagnostic only: the leg's own memory
-  traffic slows it differentially by leg width, so gating on it would
-  bias acceptance — see tools/contention_probe.py.)
-
-  PROBE v2 (instrument fix, recorded before campaign pair 3): v1 classified
-  ANY slow spin window as a burst; the first two pairs showed local[8]
-  legs at near-record walls being rejected at 14-24% "burst" windows —
-  the leg's own transient thread spikes (wider at 4N than N) queue the
-  1-thread probe.  v2 keeps every threshold identical but counts a slow
-  window only when the guest had idle cores during it (busy < 0.9):
-  with free cores a slow probe can only mean the hypervisor withheld
-  time.  Pairs measured under v1 carry no busy data and stay judged by
-  their recorded (raw) burst fraction — conservative, both were
-  rejected.  The undiscriminated rate is still recorded per leg as
-  spin_burst_frac_raw for transparency.
 """
 
 from __future__ import annotations
@@ -191,67 +149,6 @@ def run_once(
     return metrics
 
 
-def leg_clean(probe: dict) -> tuple[bool, list]:
-    """Apply the pre-registered per-leg rule (module docstring). Returns
-    (clean, reasons-for-rejection)."""
-    reasons = []
-    if probe.get("spin_median_slow", 99.0) > 1.20:
-        reasons.append(f"spin_median_slow {probe.get('spin_median_slow')} > 1.20")
-    if probe.get("spin_burst_frac", 1.0) > 0.05:
-        reasons.append(f"spin_burst_frac {probe.get('spin_burst_frac')} > 0.05")
-    if probe.get("steal_burst_frac", 0.0) > 0.05:
-        reasons.append(f"steal_burst_frac {probe.get('steal_burst_frac')} > 0.05")
-    if probe.get("steal_mean", 0.0) > 0.05:
-        reasons.append(f"steal_mean {probe.get('steal_mean')} > 0.05")
-    return (not reasons, reasons)
-
-
-def rule_verdict(log_path: str) -> dict:
-    """Apply the pre-registered acceptance rule to every pair in the log."""
-    import statistics
-
-    pairs = []
-    with open(log_path) as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                pairs.append(json.loads(line))
-    rows, accepted = [], []
-    for i, p in enumerate(pairs):
-        ok_s, why_s = leg_clean(p["small"].get("probe", {}))
-        ok_l, why_l = leg_clean(p["large"].get("probe", {}))
-        ok = ok_s and ok_l
-        rows.append({
-            "pair": i,
-            "files": p.get("files"),
-            "mode": p.get("mode", "thread"),
-            "eff_e2e": p["eff_e2e"],
-            "eff_pairs": p["eff_pairs"],
-            "accepted": ok,
-            "reject_reasons": why_s + why_l,
-            "small_wall": p["small"]["elapsed_sec"],
-            "large_wall": p["large"]["elapsed_sec"],
-            "small_probe": p["small"].get("probe", {}),
-            "large_probe": p["large"].get("probe", {}),
-        })
-        if ok:
-            accepted.append(p["eff_e2e"])
-    out = {
-        "rule": "median eff_e2e over pairs with both legs CLEAN "
-                "(spin_median_slow<=1.20, spin_burst_frac<=0.05, "
-                "steal_burst_frac<=0.05, steal_mean<=0.05); "
-                "valid iff >=3 accepted; PASS iff median>=0.8",
-        "n_pairs": len(pairs),
-        "n_accepted": len(accepted),
-        "accepted_effs": sorted(accepted),
-        "median_eff": round(statistics.median(accepted), 3) if accepted else None,
-        "valid": len(accepted) >= 3,
-        "pass": len(accepted) >= 3 and statistics.median(accepted) >= 0.8,
-        "pairs": rows,
-    }
-    return out
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--files", type=int, default=40000)
@@ -284,23 +181,7 @@ def main() -> int:
              "across levels (the 4N leg gets 4x aggregate heap, like a real "
              "4x cluster)",
     )
-    ap.add_argument(
-        "--campaign", default=None, metavar="LOG.jsonl",
-        help="gated-campaign mode: run --pairs matched pairs with contention "
-             "probes on every leg, append one JSON record per pair to LOG",
-    )
-    ap.add_argument("--pairs", type=int, default=1,
-                    help="matched pairs to run in --campaign mode")
-    ap.add_argument(
-        "--verdict", default=None, metavar="LOG.jsonl",
-        help="apply the pre-registered acceptance rule to LOG and print the "
-             "verdict JSON (no runs)",
-    )
     args = ap.parse_args()
-
-    if args.verdict:
-        print(json.dumps(rule_verdict(args.verdict), indent=2))
-        return 0
 
     import zipfile
 
@@ -324,51 +205,6 @@ def main() -> int:
     kw = dict(cpuset=args.cpuset, executors=args.executors,
               executor_mem_mb=args.executor_mem_mb,
               executor_cores=args.executor_cores)
-
-    if args.campaign:
-        from tools.contention_probe import ProbeSampler, calibrate_spin
-
-        def tput_e2e(m):
-            return m["candidate_pairs"] / m["elapsed_sec"]
-
-        def tput_pairs(m):
-            return m["candidate_pairs"] / m["stage_sec"]["pairs"]
-
-        mode = ("executors" if args.executors
-                else "cpuset" if args.cpuset else "thread")
-        print(f"campaign: {args.pairs} matched pair(s) at {args.files} files, "
-              f"mode={mode}; rule pre-registered in module docstring",
-              file=sys.stderr)
-        for k in range(args.pairs):
-            spin_t0 = calibrate_spin()
-            print(f"pair {k}: spin calibration {spin_t0:.4f}s/chunk",
-                  file=sys.stderr)
-            with ProbeSampler(spin_t0) as ps:
-                small = run_once(args.n, input_dir, f"{args.files}_c{k}", **kw)
-            small["probe"] = ps.summary()
-            with ProbeSampler(spin_t0) as pl:
-                large = run_once(4 * args.n, input_dir, f"{args.files}_c{k}", **kw)
-            large["probe"] = pl.summary()
-            rec = {
-                "ts": time.time(),
-                "files": args.files,
-                "n": args.n,
-                "mode": mode,
-                "spin_cal_sec": round(spin_t0, 5),
-                "small": small,
-                "large": large,
-                "eff_e2e": round(tput_e2e(large) / (4 * tput_e2e(small)), 4),
-                "eff_pairs": round(tput_pairs(large) / (4 * tput_pairs(small)), 4),
-            }
-            with open(args.campaign, "a") as f:
-                f.write(json.dumps(rec) + "\n")
-            ok_s, why_s = leg_clean(small["probe"])
-            ok_l, why_l = leg_clean(large["probe"])
-            print(f"pair {k}: eff_e2e={rec['eff_e2e']} "
-                  f"small={'CLEAN' if ok_s else why_s} "
-                  f"large={'CLEAN' if ok_l else why_l}", file=sys.stderr)
-        print(json.dumps(rule_verdict(args.campaign)))
-        return 0
 
     # interleaved best-of-R: single runs on a shared box carry page-cache /
     # writeback interference; best-of filters it (standard throughput practice)

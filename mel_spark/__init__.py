@@ -5,7 +5,7 @@ linking: alias-table blocking, bi-encoder embedding retrieval, recall@k evaluati
 see SURVEY.md) as an idiomatic Spark pipeline:
 
     ingest → exact dedup → mention/shingle extraction → batched embedding (Arrow UDF)
-    → LSH + minhash blocking → candidate-pair scoring (cosine ⊕ string distance)
+    → LSH + minhash blocking → candidate-pair scoring (cosine ⊕ jaccard)
     → threshold → large-star/small-star connected components → entity clusters
     → pairwise F1 evaluation.
 

@@ -1,7 +1,9 @@
 """Blocking: map each record to candidate-generation keys.
 
-Two key families, unioned (the reference's two alias sources feeding one table,
-ChainStep src/tokenization/pipeline/utils/chain.py:5-17; SURVEY.md §7.1 stage 4):
+Two key families (the reference's two alias sources, ChainStep
+src/tokenization/pipeline/utils/chain.py:5-17; SURVEY.md §7.1 stage 4). The ER
+pipeline blocks on family (a); family (b) serves embedding near-dup search
+(dedup.embedding_near_dup_pairs, similarity.lsh_topk):
 
  (a) content/minhash family — exact sha256 key, or (lang, minhash-band) LSH keys
      over token shingles (alias-table analogue:

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mel_spark.operators import blocking, cluster, pairs
-from mel_spark.pipeline import ERConfig, embed_stage, ingest
+from mel_spark.pipeline import ERConfig, block_index_stage, embed_stage, ingest
 from mel_spark.sources.checkpoint import LINEAGE_COLS, CheckpointManager
 
 
@@ -212,11 +212,6 @@ def content_roots(mentions: DataFrame, clusters: DataFrame) -> DataFrame:
         .groupBy("csid")
         .agg(F.min("cluster_id").alias("root"))
     )
-
-
-# single key-identity definition shared with pipeline.block_index_stage —
-# re-exported here for callers/tests that import it from this module
-raw_band_keys = blocking.raw_band_keys
 
 
 def probe_keys(
@@ -536,25 +531,12 @@ def incremental_update(
             .dropDuplicates(["csid", "lang"])
             .join(base_cl, ["csid", "lang"], "left_anti")
         )
-        dk = raw_band_keys(
+        return blocking.raw_band_keys(
             feats_all.select("csid", "bands").join(
                 F.broadcast(delta_cl.select("csid").distinct()), "csid", "left_semi"
             ),
             delta_cl,
         )
-        if cfg.use_hyperplane_blocks:
-            from mel_spark.functions.vectors import ensure_emb_array
-
-            # hyperplane keys are lang-independent → only NEW contents add them
-            hp = blocking.hyperplane_blocks(
-                ensure_emb_array(feats_new), "csid", "emb",
-                dim=cfg.emb_dim, n_planes=cfg.hyperplane_planes,
-                bands=cfg.hyperplane_bands, seed=cfg.seed,
-            ).select(
-                F.xxhash64(F.lit("hp"), "block_key").alias("block_key"), "mention_id"
-            )
-            dk = dk.unionByName(hp)
-        return dk
 
     delta_keys = _stage("block_index_delta", _delta_keys)
     # the corpus side of the probe: the base run's materialized block index
@@ -576,21 +558,7 @@ def incremental_update(
         # but no durable index): derive the keys from the base features in
         # hand — one extra corpus pass for this fold only; compact_checkpoint
         # (or one run_pipeline pass) materializes the index for future folds
-        base_cl = mentions_b.select("csid", "lang").dropDuplicates(["csid", "lang"])
-        base_keys = raw_band_keys(feats_b, base_cl)
-        if cfg.use_hyperplane_blocks:
-            from mel_spark.functions.vectors import ensure_emb_array
-
-            base_keys = base_keys.unionByName(
-                blocking.hyperplane_blocks(
-                    ensure_emb_array(feats_b), "csid", "emb",
-                    dim=cfg.emb_dim, n_planes=cfg.hyperplane_planes,
-                    bands=cfg.hyperplane_bands, seed=cfg.seed,
-                ).select(
-                    F.xxhash64(F.lit("hp"), "block_key").alias("block_key"),
-                    "mention_id",
-                )
-            )
+        base_keys = block_index_stage(feats_b, mentions_b)
 
     # ONE hot-key set, shared by the delta×delta salting AND the probe, built
     # from per-key TOTAL sizes (base + this batch) — the same totals a full

@@ -57,6 +57,7 @@ from pyspark.sql.types import (
 )
 
 from mel_spark.functions import vectors as V
+from mel_spark.session import path_content_token
 
 # per-worker-process cache for executor-side index loads (broadcast_knn's
 # index_path mode): keyed by (path, id_col, emb_col, content fingerprint);
@@ -66,33 +67,6 @@ from mel_spark.functions import vectors as V
 # under a new config — a cache MISS instead of silently serving stale vectors
 # (spark.python.worker.reuse keeps these processes alive across queries).
 _INDEX_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _index_content_token(path: str) -> tuple:
-    """Cheap content identity for a parquet dir/file: sorted (relpath, size,
-    mtime_ns) of its data files. Local-fs only; a path os.stat cannot reach
-    (s3://, hdfs:// — pyarrow reads those natively in the loader) degrades to
-    an unversioned token, i.e. the pre-fingerprint behavior of caching purely
-    by path — object stores should version via a distinct path (the
-    checkpoint layout already does: rewrites go through overwrite+marker)."""
-    import os as _os
-
-    entries = []
-    try:
-        if _os.path.isdir(path):
-            for root, _, files in _os.walk(path):
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue
-                    st = _os.stat(_os.path.join(root, f))
-                    entries.append((_os.path.relpath(_os.path.join(root, f), path),
-                                    st.st_size, st.st_mtime_ns))
-        else:
-            st = _os.stat(path)
-            entries.append((path, st.st_size, st.st_mtime_ns))
-    except OSError:
-        return ("unversioned",)
-    return tuple(sorted(entries))
 
 
 def _prep_index(ids: np.ndarray, embs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -110,7 +84,7 @@ _INDEX_CACHE_MAX_ENTRIES = 4
 
 
 def _load_index_cached(path: str, id_col: str, emb_col: str) -> tuple[np.ndarray, np.ndarray]:
-    key = (path, id_col, emb_col, _index_content_token(path))
+    key = (path, id_col, emb_col, path_content_token(path))
     if key not in _INDEX_CACHE:
         # drop superseded versions of this path so a long-lived worker doesn't
         # accumulate dead indexes

@@ -3,7 +3,7 @@
 repos(repo, path, commit, lang, content)
   → ingest (sha256 invariant, mention_id, long working ids)  [stage: ingest]
   → embed: featurize DISTINCT CONTENTS only                  [stage: embed]
-  → block (lang × minhash-band [∪ hyperplane])               [stage: blocks]
+  → block (lang × minhash-band)                              [stage: blocks]
   → candidate pairs + fused scoring                          [stage: pairs]
   → threshold → matches
   → connected components over contents → expand to mentions  [stage: clusters]
@@ -43,26 +43,12 @@ class ERConfig:
     minhash_hashes: int = 32
     minhash_bands: int = 16
     emb_dim: int = 64
-    # embedding-signature blocking is implemented (blocking.hyperplane_blocks,
-    # tested) but OFF by default as a measured cost/recall judgment: random-
-    # hyperplane sign bands need ~20 bits/band for usable bucket sizes at
-    # millions of docs, and at 20 bits a cosine-0.9 pair collides in one band
-    # with p≈0.04 — dozens of bands would be needed for real recall, paying a
-    # multiple of the whole blocking cost. Token-minhash bands already deliver
-    # blocking recall ≈0.999 on content near-dups (F1 0.99999 at 3M files);
-    # enable this family when hunting PARAPHRASE-level duplicates that share
-    # embedding space but not shingles.
-    use_hyperplane_blocks: bool = False
-    hyperplane_planes: int = 16
-    hyperplane_bands: int = 4
     max_block_size: int = 64
     salt_threshold: int = 256
     # fused score of a worst-case planted near-dup (≈8% token edits):
     # cos≈0.92, jaccard≈0.60 → 0.6·0.92+0.4·0.60 ≈ 0.79; random pairs ≈ 0.2
     threshold: float = 0.72
     w_cos: float = 0.6
-    w_jw: float = 0.0
-    w_lev: float = 0.0
     w_jaccard: float = 0.4
     seed: int = 42
     # embedding storage in the embed checkpoint: fp16-packed binary halves
@@ -158,7 +144,7 @@ def embed_stage(mentions: DataFrame, cfg: ERConfig) -> DataFrame:
     ).mapInArrow(feat_fn, feat_schema)
 
 
-def block_index_stage(feats: DataFrame, mentions: DataFrame, cfg: ERConfig) -> DataFrame:
+def block_index_stage(feats: DataFrame, mentions: DataFrame) -> DataFrame:
     """Stage 4a: the RAW block-key index — (block_key long, mention_id=csid)
     for every (content, lang) combination, no salt/cap/singleton policies.
     Materialized as its own checkpoint stage because it is also the probe
@@ -171,21 +157,7 @@ def block_index_stage(feats: DataFrame, mentions: DataFrame, cfg: ERConfig) -> D
     # identity defined ONCE in blocking.raw_band_keys — shared with
     # incremental folds so delta keys always join this index
     content_langs = mentions.select("csid", "lang").dropDuplicates(["csid", "lang"])
-    b_mh = blocking.raw_band_keys(feats, content_langs)
-    if cfg.use_hyperplane_blocks:
-        from mel_spark.functions.vectors import ensure_emb_array
-
-        b_hp = blocking.hyperplane_blocks(
-            ensure_emb_array(feats),
-            "csid",
-            "emb",
-            dim=cfg.emb_dim,
-            n_planes=cfg.hyperplane_planes,
-            bands=cfg.hyperplane_bands,
-            seed=cfg.seed,
-        ).select(F.xxhash64(F.lit("hp"), "block_key").alias("block_key"), "mention_id")
-        b_mh = b_mh.unionByName(b_hp)
-    return b_mh
+    return blocking.raw_band_keys(feats, content_langs)
 
 
 def block_sizes_stage(index: DataFrame) -> DataFrame:
@@ -213,53 +185,15 @@ def block_stage(index: DataFrame, cfg: ERConfig, sizes: DataFrame | None = None)
     return blocking.cap_blocks(blocks, cfg.max_block_size)
 
 
-def pair_stage(
-    blocks: DataFrame, feats: DataFrame, cfg: ERConfig, mentions: DataFrame | None = None
-) -> DataFrame:
-    """Stage 5: within-block candidate csid pairs + fused scoring. When
-    string-identifier weights are enabled, a deterministic representative
-    path (min per content) is attached from the mentions table."""
+def pair_stage(blocks: DataFrame, feats: DataFrame, cfg: ERConfig) -> DataFrame:
+    """Stage 5: within-block candidate csid pairs, scored in one NumPy pass
+    for cosine ⊕ jaccard ⊕ fuse (consumes fp16-packed or array emb directly
+    — no decode stage)."""
     cand = pairs.candidate_pairs(blocks)
     records = feats.select(F.col("csid").alias("mention_id"), "emb", "xs")
-    use_ident = bool(cfg.w_jw or cfg.w_lev)
-    if not use_ident:
-        # default fast path: one NumPy pass for cosine ⊕ jaccard ⊕ fuse
-        # (consumes fp16-packed or array emb directly — no decode stage)
-        return pairs.score_pairs_fused_arrow(
-            cand, records, w_cos=cfg.w_cos, w_jaccard=cfg.w_jaccard
-        )
-    from mel_spark.functions.vectors import ensure_emb_array
-
-    records = ensure_emb_array(records)  # Catalyst cosine needs a real array
-    rep_path = (mentions or feats).groupBy("csid").agg(F.min("path").alias("path"))
-    records = records.join(
-        rep_path.select(F.col("csid").alias("mention_id"), "path"), "mention_id"
+    return pairs.score_pairs_fused_arrow(
+        cand, records, w_cos=cfg.w_cos, w_jaccard=cfg.w_jaccard
     )
-    scored = pairs.score_pairs(
-        cand,
-        records,
-        emb_col="emb",
-        ident_col="path",
-        hash_col="xs",
-        w_cos=cfg.w_cos,
-        w_jw=cfg.w_jw,
-        w_lev=cfg.w_lev,
-    )
-    # fuse jaccard into the score (content is the strongest signal for code ER)
-    if cfg.w_jaccard:
-        total = cfg.w_cos + cfg.w_jw + cfg.w_lev + cfg.w_jaccard
-        scored = scored.withColumn(
-            "score",
-            F.round(
-                (
-                    F.col("score") * F.lit(cfg.w_cos + cfg.w_jw + cfg.w_lev)
-                    + F.col("jaccard") * F.lit(cfg.w_jaccard)
-                )
-                / F.lit(total),
-                6,
-            ),
-        )
-    return scored
 
 
 def run_pipeline(
@@ -295,7 +229,7 @@ def run_pipeline(
         "embed", spark, lambda: embed_stage(mentions, cfg), fingerprint=fp
     )
     index, _ = ckpt.get_or_compute(
-        "block_index", spark, lambda: block_index_stage(feats, mentions, cfg),
+        "block_index", spark, lambda: block_index_stage(feats, mentions),
         fingerprint=fp,
     )
     sizes, _ = ckpt.get_or_compute(
@@ -305,7 +239,7 @@ def run_pipeline(
         "blocks", spark, lambda: block_stage(index, cfg, sizes=sizes), fingerprint=fp
     )
     scored, _ = ckpt.get_or_compute(
-        "pairs", spark, lambda: pair_stage(blocks, feats, cfg, mentions), fingerprint=fp
+        "pairs", spark, lambda: pair_stage(blocks, feats, cfg), fingerprint=fp
     )
     matches = pairs.match_pairs(scored, cfg.threshold)
 

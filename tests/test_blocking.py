@@ -79,7 +79,7 @@ def test_minhash_blocking_recall_on_planted_pairs(spark, tiny_tables):
     SURVEY.md §7.3 blocking recall)."""
     cfg = ERConfig()
     mentions = ingest(spark.createDataFrame(tiny_tables["repos"]))
-    index = block_index_stage(embed_stage(mentions, cfg), mentions, cfg)
+    index = block_index_stage(embed_stage(mentions, cfg), mentions)
     cand = (
         index.alias("x")
         .join(index.alias("y"), "block_key")

@@ -238,3 +238,24 @@ def test_ensure_scan_parallelism_only_widens_narrow_scans(spark, tmp_path):
 
     wide = spark.range(1000).repartition(want + 4)
     assert ensure_scan_parallelism(wide) is wide  # untouched, no added plan node
+
+
+def test_ensure_scan_parallelism_memo_reprobes_rewritten_input(spark, tmp_path):
+    """The memoized split-count probe is keyed on the path's content token:
+    an input rewritten at the same path (many files → one file) is probed
+    again and widened, instead of reusing the first probe's split count."""
+    from mel_spark.session import ensure_scan_parallelism
+
+    want = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs.parquet")
+    spark.range(1000).repartition(2 * want).write.parquet(path)
+    first = spark.read.parquet(path)
+    assert first.rdd.getNumPartitions() >= want
+    assert ensure_scan_parallelism(first, cache_key=path) is first
+
+    spark.range(1000).coalesce(1).write.mode("overwrite").parquet(path)
+    second = spark.read.parquet(path)
+    assert second.rdd.getNumPartitions() < want
+    widened = ensure_scan_parallelism(second, cache_key=path)
+    assert widened.rdd.getNumPartitions() == want
+    assert widened.count() == 1000
