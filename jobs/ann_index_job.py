@@ -18,14 +18,14 @@ two invocations over cluster storage:
         --k 10 --nprobe 32 [--quantized --reorder 1000] --output /data/topk
 
 Prints one JSON line of metrics per invocation. ``--n-cells 0`` applies the
-reference's 5·√N leaves heuristic (find_recall.py:28-37).
+reference's 5·√N leaves heuristic (find_recall.py:28-37), capped at the row
+count (``ann_index.default_n_cells``).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import math
 import sys
 import time
 
@@ -39,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--output", help="probe: parquet output for the top-k")
     p.add_argument("--id-col", default="vec_id")
     p.add_argument("--emb-col", default="embedding")
-    p.add_argument("--n-cells", type=int, default=0, help="0 = 5*sqrt(N)")
+    p.add_argument("--n-cells", type=int, default=0, help="0 = 5*sqrt(N), at most N")
     p.add_argument("--iterations", type=int, default=3)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--fit", choices=["numpy", "relational"], default="numpy")
@@ -55,6 +55,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from mel_spark.operators.ann_index import (
         build_ivf_index,
+        default_n_cells,
         ivf_index_topk,
         read_index_meta,
     )
@@ -68,9 +69,7 @@ def main(argv: list[str] | None = None) -> int:
         if not args.embeddings:
             p.error("build requires --embeddings")
         embs = spark.read.parquet(args.embeddings)
-        n_cells = args.n_cells
-        if n_cells <= 0:
-            n_cells = max(1, int(5 * math.sqrt(embs.count())))
+        n_cells = args.n_cells if args.n_cells > 0 else default_n_cells(embs.count())
         meta = build_ivf_index(
             embs, args.index, n_cells=n_cells, i_id=args.id_col,
             i_emb=args.emb_col, iterations=args.iterations, seed=args.seed,

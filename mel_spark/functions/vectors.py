@@ -297,61 +297,80 @@ def featurize_map(
             bd_arr = pa.ListArray.from_arrays(
                 pa.array(bd_off), pa.array(band_keys.ravel(), pa.int64())
             )
-            if emb_format == "f16":
-                blob = np.ascontiguousarray(vecs.astype("<f2")).tobytes()
-                eb_off = np.arange(D + 1, dtype=np.int32) * (dim * 2)
-                emb_arr = pa.Array.from_buffers(
-                    pa.binary(), D,
-                    [None, pa.py_buffer(eb_off.tobytes()), pa.py_buffer(blob)],
-                )
-            else:
-                eb_off = np.arange(D + 1, dtype=np.int32) * dim
-                emb_arr = pa.ListArray.from_arrays(
-                    pa.array(eb_off), pa.array(vecs.ravel(), pa.float32())
-                )
             yield pa.RecordBatch.from_arrays(
-                [ids, emb_arr, xs_arr, bd_arr],
+                [ids, emb_arrow(vecs, emb_format), xs_arr, bd_arr],
                 names=[id_col, "emb", "xs", "bands"],
             )
 
     return _featurize, schema
 
 
-def emb_matrix(series: pd.Series) -> np.ndarray:
-    """(batch, dim) float64 matrix from an Arrow emb column in EITHER storage
-    format — fp16-packed binary (bytes) or array<float> — the single decode
-    point every NumPy scorer shares."""
-    vals = series.to_numpy()
-    if len(vals) and isinstance(vals[0], (bytes, bytearray)):
-        return np.stack([np.frombuffer(v, dtype="<f2") for v in vals]).astype(np.float64)
-    return np.stack(vals).astype(np.float64)
+def round6_half_up(x: np.ndarray) -> np.ndarray:
+    """Round to 6dp HALF_UP (away from zero), like Spark ``F.round`` and
+    DuckDB ``round`` — unlike ``np.round``'s banker's half-to-even, so a
+    value landing exactly on a 5e-7 boundary ranks the same in every engine.
+    The one rounding step every NumPy scorer shares."""
+    return np.where(x >= 0, np.floor(x * 1e6 + 0.5), np.ceil(x * 1e6 - 0.5)) / 1e6
+
+
+def binary_matrix(arr, dtype) -> np.ndarray:
+    """(batch, width) matrix of ``dtype`` viewed straight off a binary Arrow
+    column of equal-width packed rows: offsets buffer + one values buffer,
+    zero per-row objects."""
+    import pyarrow as pa
+
+    n = len(arr)
+    if n == 0:
+        return np.empty((0, 0), dtype)
+    off_dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(arr.buffers()[1], off_dt)[arr.offset : arr.offset + n + 1]
+    width = int(offsets[1] - offsets[0])
+    if int(offsets[-1] - offsets[0]) != n * width:
+        # ragged rows (shouldn't happen for embeddings/codes) — per-row fallback
+        return np.stack([np.frombuffer(v.as_py(), dtype=dtype) for v in arr])
+    data = np.frombuffer(arr.buffers()[2], np.uint8)
+    return data[int(offsets[0]) : int(offsets[-1])].view(dtype).reshape(n, -1)
+
+
+def packed_binary(m: np.ndarray):
+    """Binary Arrow array with row i = ``m[i]``'s raw bytes — the inverse of
+    :func:`binary_matrix`, built from two buffers with no per-row objects."""
+    import pyarrow as pa
+
+    n, width = m.shape[0], m.shape[1] * m.itemsize
+    off = np.arange(n + 1, dtype=np.int32) * width
+    return pa.Array.from_buffers(
+        pa.binary(), n,
+        [None, pa.py_buffer(off.tobytes()), pa.py_buffer(np.ascontiguousarray(m).tobytes())],
+    )
+
+
+def emb_arrow(m: np.ndarray, emb_format: str):
+    """Arrow emb column holding matrix ``m``'s rows in a storage format:
+    "f16" packs each row as little-endian fp16 binary (cast straight from
+    ``m``'s dtype), "f32" stores array<float>. The inverse of
+    :func:`emb_matrix_arrow`."""
+    import pyarrow as pa
+
+    if emb_format == "f16":
+        return packed_binary(m.astype("<f2"))
+    off = np.arange(m.shape[0] + 1, dtype=np.int32) * m.shape[1]
+    return pa.ListArray.from_arrays(
+        pa.array(off), pa.array(m.astype(np.float32, copy=False).ravel())
+    )
 
 
 def emb_matrix_arrow(arr) -> np.ndarray:
     """(batch, dim) float64 matrix straight off an Arrow emb column's flat
-    buffers — the mapInArrow twin of :func:`emb_matrix`. Handles both storage
-    formats: fp16-packed binary (offsets buffer + one values buffer viewed as
-    ``<f2``, zero per-row objects) and array<float> (``flatten()`` + reshape).
-    Rows must be non-null and equal-width (the featurizer invariant)."""
+    buffers — the single decode point every NumPy scorer and searcher
+    shares. Handles both storage formats: fp16-packed binary (viewed as
+    ``<f2`` by :func:`binary_matrix`) and array<float> (``flatten()`` +
+    reshape). Rows must be non-null and equal-width (the featurizer
+    invariant)."""
     import pyarrow as pa
 
     if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
-        n = len(arr)
-        if n == 0:
-            return np.empty((0, 0), np.float64)
-        off_dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        offsets = np.frombuffer(arr.buffers()[1], off_dt)[
-            arr.offset : arr.offset + n + 1
-        ]
-        width = int(offsets[1] - offsets[0])
-        if int(offsets[-1] - offsets[0]) != n * width:
-            # ragged rows (shouldn't happen for embeddings) — per-row fallback
-            return np.stack(
-                [np.frombuffer(v.as_py(), dtype="<f2") for v in arr]
-            ).astype(np.float64)
-        data = np.frombuffer(arr.buffers()[2], np.uint8)
-        flat = data[int(offsets[0]) : int(offsets[-1])].view("<f2")
-        return flat.reshape(n, width // 2).astype(np.float64)
+        return binary_matrix(arr, "<f2").astype(np.float64)
     flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     return flat.reshape(len(arr), -1) if len(arr) else np.empty((0, 0), np.float64)
 

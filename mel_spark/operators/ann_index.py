@@ -16,7 +16,7 @@ Spark-first:
   listed or read. This is the storage-level analogue of ScaNN's
   ``leaves_to_search`` — the scan cost is O(probed lists), not O(corpus).
 * **The only broadcast is the (n_cells × d) centroid matrix** (a DataFrame
-  for the Catalyst probe, numpy for the vectorized probe). The lists never
+  for the Catalyst probe, NumPy for the vectorized probe). The lists never
   move except for the candidate rows a probe actually selects.
 * **Stored payloads are byte-width-aware**: embeddings fp16-packed binary
   (the reference's deliberate index format, src/utils/embeddings.py:108-111)
@@ -25,15 +25,20 @@ Spark-first:
 
 Build modes mirror the two in-flight IVF implementations in
 operators/similarity.py and stay exactly equivalent to them (tested in
-tests/test_ann_index.py):
+tests/test_ann_index.py). The probe follows the build mode recorded in
+``_META.json``:
 
 * ``fit="relational"`` — md5-seeded medoids + DECIMAL-exact Lloyd rounds,
-  cross-engine deterministic; probing with ``probe="catalyst"`` reproduces
+  cross-engine deterministic; the probe runs in Catalyst and reproduces
   ``ivf_topk_relational`` bit-for-bit (and therefore hash-matches the same
   DuckDB oracle — contract entry ``knn_ivf_index``).
-* ``fit="numpy"`` — ``train_ivf_centroids``'s vectorized Lloyd; probing with
-  ``probe="numpy"`` is one matmul + argpartition per Arrow batch, the
-  production path.
+* ``fit="numpy"`` — ``train_ivf_centroids``'s vectorized Lloyd; the probe is
+  one matmul + argpartition per Arrow batch, the production path.
+
+This module holds no NumPy kernel of its own: cell assignment, the
+vectorized probe, the int8/fp16 list encoding and the code-cosine pass are
+the mapInArrow kernels of operators/similarity.py, the same ones the
+in-flight searchers run.
 
 The build is commit-marked: ``_META.json`` is written LAST, and the loader
 refuses an index without it — a crashed half-build reads as "not built",
@@ -44,19 +49,14 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )
@@ -64,9 +64,10 @@ from pyspark.sql.types import (
 from mel_spark.functions import vectors as V
 from mel_spark.operators.similarity import (
     _assign_cells,
-    _code_cosine_np,
-    _int8_encode_np,
+    _code_cosine,
+    _int8_code_rows,
     _ivf_assign_relational,
+    _probe_cells,
     fit_ivf_centroids_relational,
     train_ivf_centroids,
 )
@@ -170,7 +171,7 @@ def build_ivf_index(
             fit_input, n_cells, i_id, i_emb, iterations, seed
         )
         assigned = _assign_cells(
-            src.select(F.col("id").alias("_id"), "_emb"), cents, spark
+            src.select(F.col("id").alias("_id"), "_emb"), cents
         ).select(F.col("_id").alias("id"), F.col("_cell").alias("cell"))
         cents_df = spark.createDataFrame(
             [(int(c), [float(x) for x in row]) for c, row in enumerate(cents)],
@@ -223,32 +224,6 @@ def build_ivf_index(
     return meta
 
 
-def _encode_lists_fn(pack_f16: bool):
-    """mapInPandas kernel: (id, _emb, cell) → encoded list rows (fp16/f32
-    payload + int8 code).  Module-level factory shared by build and append."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["_emb"].to_numpy()).astype(np.float64)
-            codes = _int8_encode_np(v)
-            if pack_f16:
-                emb_out = [r.astype("<f2").tobytes() for r in v]
-            else:
-                emb_out = [r.astype(np.float32) for r in v]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "emb": emb_out,
-                    "code": [c.tobytes() for c in codes],
-                    "cell": pdf["cell"].to_numpy(),
-                }
-            )
-
-    return _encode
-
-
 def _write_list_epoch(
     rows: DataFrame, lists_path: str, emb_format: str, epoch: int
 ) -> int:
@@ -258,26 +233,13 @@ def _write_list_epoch(
     One shuffle keyed on cell co-locates each inverted list; partitionBy
     writes it as its own hive directory (the "list").  ``mode("append")``
     never touches other epochs' files; visibility is controlled by the
-    _META epoch list, not by the write."""
-    emb_field = (
-        StructField("emb", BinaryType())
-        if emb_format == "f16"
-        else StructField("emb", ArrayType(FloatType()))
-    )
-    out_schema = StructType(
-        [
-            StructField("id", LongType()),
-            emb_field,
-            StructField("code", BinaryType()),
-            StructField("cell", IntegerType()),
-        ]
-    )
+    _META epoch list, not by the write.  Rows (id, _emb, cell) are stored
+    as (id, emb, code, cell)."""
     from pyspark.sql import Observation
 
     obs = Observation()
     encoded = (
-        rows.repartition(F.col("cell"))
-        .mapInPandas(_encode_lists_fn(emb_format == "f16"), out_schema)
+        _int8_code_rows(rows.repartition(F.col("cell")), emb_format)
         .withColumn("epoch", F.lit(epoch))
         .observe(obs, F.count(F.lit(1)).alias("n"))
     )
@@ -384,7 +346,7 @@ def append_to_ivf_index(
         # train_ivf_centroids returns L2-normalized float32 — reproduce the
         # exact dtype the build's _assign_cells saw
         assigned = _assign_cells(
-            src.select(F.col("id").alias("_id"), "_emb"), C.astype(np.float32), spark
+            src.select(F.col("id").alias("_id"), "_emb"), C.astype(np.float32)
         ).select(F.col("_id").alias("id"), F.col("_cell").alias("cell"))
 
     rows = src.join(assigned, "id").select(
@@ -406,6 +368,12 @@ def append_to_ivf_index(
     return meta
 
 
+def default_n_cells(n_rows: int) -> int:
+    """The reference's ScaNN leaf heuristic 5·√N (find_recall.py:28-37),
+    never more cells than rows (and at least one)."""
+    return max(1, min(int(5 * n_rows ** 0.5), n_rows))
+
+
 def ensure_ivf_index(
     feats: DataFrame,
     path: str,
@@ -415,16 +383,14 @@ def ensure_ivf_index(
     **build_kw,
 ) -> dict:
     """Build the index iff ``path`` has no committed one; otherwise return
-    the existing meta untouched.  ``n_cells`` defaults to the reference's
-    ScaNN leaf heuristic 5·√N (find_recall.py:28-37), floored at 4."""
+    the existing meta untouched.  ``n_cells`` defaults to
+    :func:`default_n_cells` of the row count."""
     try:
         return read_index_meta(path)
     except FileNotFoundError:
         pass
     if n_cells is None:
-        n = feats.count()
-        n_cells = max(4, int(5 * (n ** 0.5)) or 4)
-        n_cells = min(n_cells, max(4, n))  # never more cells than rows
+        n_cells = default_n_cells(feats.count())
     return build_ivf_index(
         feats, path, n_cells=n_cells, i_id=i_id, i_emb=i_emb, **build_kw
     )
@@ -460,27 +426,26 @@ def ivf_index_topk(
     exclude_self: bool = True,
     quantized: bool = False,
     reorder: int = 1000,
-    probe: str = "auto",
 ) -> DataFrame:
     """Top-k over a persisted index: (query_id, neighbor_id, cos, rank).
 
-    ``probe="catalyst"`` scores the probe and the re-rank entirely in
-    Catalyst (HALF_UP-6dp cosine) — with a ``fit="relational"`` f32 index it
-    is bit-identical to ``ivf_topk_relational`` and hash-matches the same
-    DuckDB oracle. ``probe="numpy"`` runs one matmul + argpartition per
-    Arrow batch against the broadcast centroid matrix (production).
-    ``"auto"`` picks catalyst for relational-fit indexes, numpy otherwise.
+    The probe follows the index's ``fit``. A ``fit="relational"`` index is
+    probed and re-ranked entirely in Catalyst (HALF_UP-6dp cosine); with
+    f32 storage it is bit-identical to ``ivf_topk_relational`` and
+    hash-matches the same DuckDB oracle. A ``fit="numpy"`` index is probed
+    by the shared NumPy kernel, one matmul + argpartition per Arrow batch
+    against the broadcast centroid matrix (production).
 
     ``quantized=True`` adds the asymmetric-hashing first pass over the
     STORED int8 codes: candidates move ``dim`` bytes each, the top
     ``reorder`` per query survive to the exact fp re-score
     (scann_searcher.py:21-49 semantics)."""
     meta = read_index_meta(path)
-    if probe == "auto":
-        probe = "catalyst" if meta["fit"] == "relational" else "numpy"
-    if probe not in ("catalyst", "numpy"):
-        raise ValueError(f"probe must be 'catalyst', 'numpy' or 'auto', got {probe!r}")
-
+    # the NumPy probe decodes either emb storage itself; the Catalyst
+    # probe and the exact re-score need array<float>
+    vecs_q = queries.select(
+        F.col(q_id).cast("long").alias("query_id"), F.col(q_emb).alias("_emb")
+    )
     queries = V.ensure_emb_array(queries, q_emb)
     dim_row = queries.select(F.size(q_emb).alias("d")).first()
     if dim_row is None:
@@ -492,17 +457,15 @@ def ivf_index_topk(
         raise ValueError(
             f"query dim {dim_row['d']} != index dim {meta['dim']} at {path!r}"
         )
-    vecs_q = queries.select(
-        F.col(q_id).cast("long").alias("query_id"), F.col(q_emb).alias("_emb")
-    )
 
     cents_df = spark.read.parquet(os.path.join(path, _CENTROIDS))
-    if probe == "catalyst":
+    if meta["fit"] == "relational":
         w_probe = Window.partitionBy("query_id").orderBy(
             F.desc("_cos"), F.asc("cell")
         )
         q_cells = (
-            vecs_q.crossJoin(F.broadcast(cents_df))
+            V.ensure_emb_array(vecs_q, "_emb")
+            .crossJoin(F.broadcast(cents_df))
             .withColumn("_cos", V.cosine(F.col("_emb"), F.col("cent")))
             .withColumn("_rn", F.row_number().over(w_probe))
             .filter(F.col("_rn") <= nprobe)
@@ -511,39 +474,11 @@ def ivf_index_topk(
     else:
         rows = cents_df.orderBy("cell").collect()  # ≤ n_cells rows: O(√N)
         C = np.array([r["cent"] for r in rows], dtype=np.float64)
-        b = spark.sparkContext.broadcast(C)
-        probe_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("cells", ArrayType(IntegerType())),
-            ]
-        )
-
-        def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            M = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                q = np.stack(pdf["_emb"].to_numpy()).astype(np.float64)
-                qn = np.linalg.norm(q, axis=1, keepdims=True)
-                qn[qn == 0] = 1.0
-                sims = (q / qn) @ M.T
-                npb = min(nprobe, M.shape[0])
-                part = np.argpartition(-sims, npb - 1, axis=1)[:, :npb]
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "cells": [np.sort(row).astype(np.int32) for row in part],
-                    }
-                )
-
-        q_cells = vecs_q.mapInPandas(_probe, probe_schema).select(
-            "query_id", F.explode("cells").alias("cell")
-        )
+        q_cells = _probe_cells(vecs_q, C, nprobe)
 
     # the probe assignment feeds TWO consumers — the driver-side distinct
     # below and the candidate join — so persist it: without this the probe
-    # (a mapInPandas matmul or a crossJoin+window) executes twice. Tiny
+    # (a mapInArrow matmul or a crossJoin+window) executes twice. Tiny
     # table: nprobe rows per query, two ints each. Freed by the
     # ContextCleaner once the returned plan is garbage-collected; the
     # empty-probe early return unpersists explicitly since nothing
@@ -581,35 +516,10 @@ def ivf_index_topk(
     )
 
     if quantized:
-        approx_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("acos", DoubleType()),
-            ]
-        )
-
-        def _ascore(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                q = np.stack(pdf["q_emb"].to_numpy()).astype(np.float64)
-                c = np.stack(
-                    [np.frombuffer(v, dtype=np.int8) for v in pdf["code"]]
-                ).astype(np.float64)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                        "acos": _code_cosine_np(q, c),
-                    }
-                )
-
-        approx = (
+        approx = _code_cosine(
             cand.select("query_id", "neighbor_id", "code")
             .join(q_side, "query_id")
             .select("query_id", "neighbor_id", "q_emb", "code")
-            .mapInPandas(_ascore, approx_schema)
         )
         w_re = Window.partitionBy("query_id").orderBy(
             F.desc("acos"), F.asc("neighbor_id")

@@ -19,13 +19,6 @@ from pyspark.sql import functions as F
 from mel_spark.functions import vectors as V
 
 
-def _fused_round6(x):
-    """HALF_UP 6dp like F.round / DuckDB round (np.round is banker's)."""
-    import numpy as np
-
-    return np.where(x >= 0, np.floor(x * 1e6 + 0.5), np.ceil(x * 1e6 - 0.5)) / 1e6
-
-
 def _fused_packed_keys(arr):
     """list<int> Arrow array → (lengths, row_idx, (row_idx<<31)|value),
     all from the flat values buffer — zero per-row Python objects."""
@@ -66,7 +59,7 @@ def _fused_score_batch(rb, w_cos: float, w_jaccard: float):
     # move threshold decisions vs an f32 run
     dn = np.linalg.norm(ea, axis=1) * np.linalg.norm(eb, axis=1)
     dn[dn == 0] = 1.0
-    cos = _fused_round6(np.einsum("ij,ij->i", ea, eb) / dn)
+    cos = V.round6_half_up(np.einsum("ij,ij->i", ea, eb) / dn)
     la, _, keys_a = _fused_packed_keys(rb.column("_xs_a"))
     lb, ridx_b, keys_b = _fused_packed_keys(rb.column("_xs_b"))
     # both key arrays are sorted (rows ascend; xs sorted-distinct within a
@@ -77,8 +70,8 @@ def _fused_score_batch(rb, w_cos: float, w_jaccard: float):
     hit[pos_ok] = keys_a[pos[pos_ok]] == keys_b[pos_ok]
     inter = np.bincount(ridx_b[hit], minlength=B)
     union = la + lb - inter
-    jac = _fused_round6(inter / np.maximum(union, 1))
-    score = _fused_round6((w_cos * cos + w_jaccard * jac) / total_w)
+    jac = V.round6_half_up(inter / np.maximum(union, 1))
+    score = V.round6_half_up((w_cos * cos + w_jaccard * jac) / total_w)
     return pa.RecordBatch.from_arrays(
         [
             rb.column("mention_id_a"),

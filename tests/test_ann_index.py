@@ -441,3 +441,18 @@ def test_first_build_token_makes_replayed_append_a_noop(spark, tmp_path):
     m1 = append_to_ivf_index(delta, d, token="fold-epoch-0")
     assert m1["epochs"] == m0["epochs"]            # no new epoch
     assert m1["rows"] == m0["rows"]                # no duplicated ids
+
+
+def test_default_cell_count_never_exceeds_rows(spark, tmp_path):
+    """The 5·√N leaves rule is capped at the row count: a 2-row index
+    records exactly as many cells as its centroid table holds."""
+    from mel_spark.operators.ann_index import default_n_cells, ensure_ivf_index
+
+    assert [default_n_cells(n) for n in (1, 2, 3, 100)] == [1, 2, 3, 50]
+    two = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])], ["vec_id", "embedding"]
+    )
+    p = str(tmp_path / "ivf_two")
+    meta = ensure_ivf_index(two, p, iterations=1)
+    cents = spark.read.parquet(os.path.join(p, "centroids")).count()
+    assert meta["n_cells"] == cents == 2

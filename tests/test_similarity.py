@@ -14,7 +14,7 @@ def emb_df(spark, sf_dir):
 
 
 def test_broadcast_knn_matches_brute_force(spark, emb_df):
-    """The mapInPandas broadcast searcher must return exactly the DataFrame
+    """The mapInArrow broadcast searcher must return exactly the DataFrame
     brute-force ranking (same ids, same order)."""
     queries = emb_df.filter(F.col("vec_id") < 20)
     bf = brute_force_topk(queries, emb_df, k=5)
@@ -86,19 +86,14 @@ def test_ivf_centroids_deterministic(spark, emb_df):
 
 
 def test_broadcast_knn_index_path_matches_default(spark, sf_dir, emb_df):
-    """All three deliveries — explicit index_path, the r5 default
-    (auto-spill to scratch + executor-side load; zero driver gather), and
-    the opt-in packed collect — must be byte-identical: canonical id-sorted
-    index + exact boundary-tie ranking make the output independent of how
-    the index was delivered."""
+    """An explicit index_path and the default for an index DataFrame
+    (spill to scratch + executor-side load; zero driver gather) must be
+    byte-identical: canonical id-sorted index + exact boundary-tie ranking
+    make the output independent of where the index was loaded from."""
     queries = emb_df.filter(F.col("vec_id") < 20)
     auto_spill = {
         r["query_id"]: list(r["neighbor_ids"])
         for r in broadcast_knn(queries, emb_df, k=5).collect()
-    }
-    collected = {
-        r["query_id"]: list(r["neighbor_ids"])
-        for r in broadcast_knn(queries, emb_df, k=5, delivery="collect").collect()
     }
     via_path = {
         r["query_id"]: list(r["neighbor_ids"])
@@ -106,9 +101,16 @@ def test_broadcast_knn_index_path_matches_default(spark, sf_dir, emb_df):
             queries, emb_df, k=5, index_path=f"{sf_dir}/embeddings.parquet"
         ).collect()
     }
-    assert auto_spill == via_path == collected
-    with pytest.raises(ValueError, match="delivery"):
-        broadcast_knn(queries, emb_df, k=5, delivery="bogus")
+    assert auto_spill == via_path
+
+
+def test_broadcast_knn_empty_index_returns_no_rows(spark, emb_df):
+    """An empty index yields no neighbors, as brute_force_topk does — not a
+    worker-side crash."""
+    queries = emb_df.filter(F.col("vec_id") < 1)
+    empty = emb_df.filter(F.lit(False))
+    assert brute_force_topk(queries, empty, k=3).count() == 0
+    assert broadcast_knn(queries, empty, k=3).collect() == []
 
 
 def test_knn_scratch_path_is_per_application(spark, emb_df):
@@ -280,6 +282,7 @@ def test_searchers_accept_f16_binary_emb_dataframes(spark, tmp_path):
     import numpy as np
     from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
+    from mel_spark.operators.ann_index import build_ivf_index, ivf_index_topk
     from mel_spark.operators.similarity import (
         broadcast_knn, brute_force_topk, ivf_topk, lsh_topk,
     )
@@ -317,3 +320,12 @@ def test_searchers_accept_f16_binary_emb_dataframes(spark, tmp_path):
     assert rows(ivf_topk(qb, bin_df, **kw), pair_cols) == rows(
         ivf_topk(qa, arr_df, **kw), pair_cols
     )
+    # persisted index: the NumPy probe kernel reads the binary queries as is
+    p = str(tmp_path / "ivf")
+    build_ivf_index(bin_df, p, n_cells=4, iterations=2, seed=42, fit="numpy")
+    for quantized in (False, True):
+        assert rows(
+            ivf_index_topk(spark, qb, p, k=3, nprobe=2, quantized=quantized), pair_cols
+        ) == rows(
+            ivf_index_topk(spark, qa, p, k=3, nprobe=2, quantized=quantized), pair_cols
+        )
