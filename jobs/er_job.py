@@ -16,8 +16,13 @@ Usage (north_rule packaging: spark-submit --py-files mel_spark.zip):
         --update-base /tmp/er_ckpt --input /data/new_batch_dir \
         --checkpoint /tmp/er_ckpt_v2 --output /tmp/er_out_v2
 
-Prints one JSON line of run metrics (rows, blocks, candidate pairs, matches,
-clusters, elapsed sec, pairs/sec; plus pairwise F1 when gold clusters exist).
+The fold runs through ``streaming.er_stream.fold_batch``, the same fold
+sequence the streaming job uses. Both modes write ``clusters.parquet`` and
+print one JSON line through one reporting tail: clusters, elapsed sec,
+``stage_sec`` (every stage the checkpoint wrote), survivors / ann_index when
+asked, and pairwise F1 when gold clusters exist. A full run adds rows, blocks,
+candidate pairs, matches and pairs/sec; a fold adds mode, new/total mentions
+and new matches, and scores F1 on the gold-covered (batch) mentions only.
 """
 
 from __future__ import annotations
@@ -26,51 +31,6 @@ import argparse
 import json
 import sys
 import time
-
-
-def _maintain_ann_index(spark, ckpt_dir: str, index_path: str) -> dict:
-    """Keep the persisted IVF index in step with a fold: append the fold's
-    NEW embeddings (embed_delta) under the frozen centroids, idempotent per
-    fold (the checkpoint dir is the epoch token, so a replayed green fold is
-    a no-op); if no index exists yet, build one from the full embed chain."""
-    import os as _os
-
-    from mel_spark.operators.ann_index import (
-        append_to_ivf_index,
-        ensure_ivf_index,
-        read_index_meta,
-    )
-    from mel_spark.operators.incremental import read_stage_chain
-    from mel_spark.sources.checkpoint import CheckpointManager
-
-    try:
-        read_index_meta(index_path)
-    except FileNotFoundError:
-        # first build: the embed chain already CONTAINS this fold's delta, so
-        # record this fold's token as epoch 0's — a replayed fold's append of
-        # the same delta is then a committed no-op instead of a duplicate
-        feats_all = read_stage_chain(spark, ckpt_dir, "embed")
-        return ensure_ivf_index(
-            feats_all.select("csid", "emb"), index_path, i_id="csid",
-            i_emb="emb", token=_os.path.abspath(ckpt_dir),
-        )
-    delta = CheckpointManager(ckpt_dir).read("embed_delta", spark)
-    meta = append_to_ivf_index(
-        delta.select("csid", "emb"),
-        index_path,
-        i_id="csid",
-        i_emb="emb",
-        token=_os.path.abspath(ckpt_dir),
-    )
-    if meta.get("needs_refit"):
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "ann index %s: appended rows exceed the refit threshold — the "
-            "quantizer was fitted on a minority of the data; rebuild with "
-            "build_ivf_index at the next maintenance window", index_path,
-        )
-    return meta
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -127,9 +87,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--probe-sort-merge",
         action="store_true",
-        help="fold probe: do NOT broadcast the delta key set — with "
-        "--bucketed-index the probe runs as a sort-merge join where only "
-        "the delta side exchanges (for batches past the broadcast ceiling)",
+        help="fold probe: do NOT broadcast the delta key set — the probe "
+        "runs as a sort-merge join over the --bucketed-index table where only "
+        "the delta side exchanges (for batches past the broadcast ceiling); "
+        "requires --bucketed-index",
     )
     p.add_argument(
         "--relabel-sort-merge",
@@ -140,6 +101,13 @@ def main(argv: list[str] | None = None) -> int:
         "sort-merge)",
     )
     args = p.parse_args(argv)
+    if not (args.input or args.synthesize):
+        p.error("one of --input / --synthesize is required")
+    if args.probe_sort_merge and not args.bucketed_index:
+        # without the bucketed table the probe's corpus side is the chain
+        # read, and under the disabled auto-broadcast below a sort-merge
+        # probe shuffles the whole corpus key stream on every fold
+        p.error("--probe-sort-merge requires --bucketed-index")
     if args.update_base:
         import os as _os
 
@@ -153,11 +121,16 @@ def main(argv: list[str] | None = None) -> int:
 
     from mel_spark.session import get_spark
     from mel_spark.pipeline import ERConfig, run_pipeline
+    from mel_spark.sources.checkpoint import CheckpointManager
 
     # static auto-broadcast OFF: Catalyst's size estimates for UDF-produced
-    # relations (the embedding stage) are unreliable and a mis-broadcast OOMs;
-    # AQE still converts SMJ→BHJ from real shuffle sizes, and known-small
-    # sides (redirect maps, salt tables) use explicit broadcast()
+    # relations (the embedding stage) are unreliable and a mis-broadcast OOMs.
+    # spark.sql.adaptive.autoBroadcastJoinThreshold is unset, so it inherits
+    # this -1 and AQE does NOT turn sort-merge joins into broadcast joins
+    # from real shuffle sizes either (on Spark 4.1 a 200k x 100-row join's
+    # final plan stays SortMergeJoin): every join that must broadcast —
+    # redirect maps, salt tables, the fold's batch-sized sides — carries an
+    # explicit broadcast() hint
     spark = get_spark("er_job", extra_conf={"spark.sql.autoBroadcastJoinThreshold": "-1"})
     spark.sparkContext.setLogLevel("WARN")
     t0 = time.time()
@@ -185,153 +158,50 @@ def main(argv: list[str] | None = None) -> int:
             gold = spark.read.parquet(f"{args.input}/reference_clusters.parquet")
         except Exception:
             gold = None
-    else:
-        p.error("one of --input / --synthesize is required")
 
     cfg = ERConfig() if args.threshold is None else ERConfig(threshold=args.threshold)
-    if args.update_base:
-        from mel_spark.operators.incremental import incremental_update
-
-        base_keys_table = None
-        if args.bucketed_index:
-            from mel_spark.sources import bucketed
-
-            kw = {"path": args.bucketed_index_path}
-            if args.bucketed_index_buckets is not None:
-                kw["n_buckets"] = args.bucketed_index_buckets
-            bucketed.ensure_bucketed_index(
-                spark, args.bucketed_index, args.update_base, **kw
-            )
-            base_keys_table = args.bucketed_index
-        inc = incremental_update(
-            spark,
-            args.update_base,
-            repos,
-            cfg,
-            checkpoint_dir=args.checkpoint,
-            input_token=(
-                f"synthesize:{args.synthesize}:{args.seed}"
-                if args.synthesize
-                else str(args.input)
-            ),
-            base_keys_table=base_keys_table,
-            broadcast_probe_delta=not args.probe_sort_merge,
-            broadcast_touched=not args.relabel_sort_merge,
-        )
-        inc["clusters"].select("mention_id", "cluster_id").write.mode(
-            "overwrite"
-        ).parquet(f"{args.output}/clusters.parquet")
-        if args.bucketed_index and not bucketed.fold_appended(
-            args.checkpoint, args.bucketed_index
-        ):
-            # fold is green (every delta stage checkpointed above): append the
-            # delta keys exactly once so the table keeps matching the chain
-            from mel_spark.sources.checkpoint import CheckpointManager as _Mgr
-
-            bucketed.append_bucketed_index(
-                _Mgr(args.checkpoint)
-                .read("block_index_delta", spark)
-                .select("block_key", "mention_id"),
-                args.bucketed_index,
-            )
-            bucketed.record_fold_appended(args.checkpoint, args.bucketed_index)
-        ann_meta = None
-        if args.ann_index_path:
-            ann_meta = _maintain_ann_index(spark, args.checkpoint, args.ann_index_path)
-        n_survivors = None
-        if args.emit_survivors:
-            from mel_spark.operators.dedup import select_survivors
-
-            surv = select_survivors(
-                inc["clusters"], inc["mentions"],
-                id_col="mention_id", text_col="content",
-            )
-            surv.write.mode("overwrite").parquet(f"{args.output}/survivors.parquet")
-            n_survivors = spark.read.parquet(f"{args.output}/survivors.parquet").count()
-        from mel_spark.sources.checkpoint import CheckpointManager
-
-        mgr = CheckpointManager(args.checkpoint)
-        stage_times = {}
-        for st in ("ingest_delta", "embed_delta", "block_index_delta",
-                   "pairs_delta", "clusters_delta"):
-            try:
-                stage_times[st] = mgr.counters(st).get("elapsed_sec")
-            except FileNotFoundError:
-                pass
-        metrics = {
-            "mode": "incremental",
-            "new_mentions": inc["mentions_new"].count(),
-            "total_mentions": inc["mentions"].count(),
-            "new_matches": inc["matches_new"].count(),
-            "clusters": inc["clusters"].select("cluster_id").distinct().count(),
-            "elapsed_sec": round(time.time() - t0, 2),
-            "stage_sec": stage_times,
-        }
-        if n_survivors is not None:
-            metrics["survivors"] = n_survivors
-        if ann_meta is not None:
-            metrics["ann_index"] = {
-                "rows": ann_meta["rows"],
-                "epochs": len(ann_meta["epochs"]),
-                "needs_refit": ann_meta.get("needs_refit", False),
-            }
-        if gold is not None:
-            from pyspark.sql import functions as F
-            from mel_spark.operators.evaluate import pairs_from_clusters, pairwise_prf
-
-            # fold-mode gold covers only the folded batch, while the predicted
-            # assignment spans base ∪ batch — evaluate on the gold-covered
-            # mention set, else every base-side pair counts as a false positive
-            gold_m = F.broadcast(gold.select("mention_id").distinct())
-            pred = pairs_from_clusters(inc["clusters"], "mention_id", "cluster_id")
-            pred = pred.join(
-                gold_m.withColumnRenamed("mention_id", "mention_id_a"),
-                "mention_id_a",
-                "left_semi",
-            ).join(
-                gold_m.withColumnRenamed("mention_id", "mention_id_b"),
-                "mention_id_b",
-                "left_semi",
-            )
-            m = pairwise_prf(
-                pred, pairs_from_clusters(gold, "mention_id", "entity_id")
-            )
-            metrics.update(
-                {k: round(v, 6) if isinstance(v, float) else v for k, v in m.items()}
-            )
-        print(json.dumps(metrics))
-        spark.stop()
-        return 0
     input_token = (
         f"synthesize:{args.synthesize}:{args.seed}" if args.synthesize else str(args.input)
     )
-    out = run_pipeline(spark, repos, args.checkpoint, cfg, input_token=input_token)
-    if args.bucketed_index:
-        from mel_spark.sources import bucketed
-
-        kw = {"path": args.bucketed_index_path}
-        if args.bucketed_index_buckets is not None:
-            kw["n_buckets"] = args.bucketed_index_buckets
-        bucketed.ensure_bucketed_index(spark, args.bucketed_index, args.checkpoint, **kw)
-    ann_meta = None
-    if args.ann_index_path:
-        from mel_spark.operators.ann_index import ensure_ivf_index
-        from mel_spark.sources.checkpoint import CheckpointManager as _AnnMgr
-
-        ann_meta = ensure_ivf_index(
-            _AnnMgr(args.checkpoint).read("embed", spark).select("csid", "emb"),
-            args.ann_index_path, i_id="csid", i_emb="emb",
-        )
-    from mel_spark.sources.checkpoint import CheckpointManager
-
     mgr = CheckpointManager(args.checkpoint)
-    stage_times = {}
-    for st in ("ingest", "embed", "block_index", "block_sizes", "blocks",
-               "pairs", "clusters"):
-        try:
-            stage_times[st] = mgr.counters(st).get("elapsed_sec")
-        except FileNotFoundError:
-            pass
+    ann_meta = None
+    if args.update_base:
+        from mel_spark.streaming.er_stream import fold_batch
+
+        out, ann_meta = fold_batch(
+            args.update_base,
+            repos,
+            cfg,
+            args.checkpoint,
+            input_token,
+            bucketed_table=args.bucketed_index,
+            bucketed_path=args.bucketed_index_path,
+            bucketed_buckets=args.bucketed_index_buckets,
+            ann_index_path=args.ann_index_path,
+            probe_broadcast_delta=not args.probe_sort_merge,
+            relabel_broadcast_touched=not args.relabel_sort_merge,
+        )
+        stages = ("ingest_delta", "embed_delta", "block_index_delta",
+                  "block_sizes_delta", "pairs_delta", "clusters_delta")
+    else:
+        out = run_pipeline(spark, repos, args.checkpoint, cfg, input_token=input_token)
+        if args.bucketed_index:
+            from mel_spark.sources.bucketed import ensure_bucketed_index
+
+            ensure_bucketed_index(
+                spark, args.bucketed_index, args.checkpoint,
+                n_buckets=args.bucketed_index_buckets, path=args.bucketed_index_path,
+            )
+        if args.ann_index_path:
+            from mel_spark.operators.ann_index import ensure_ivf_index
+
+            ann_meta = ensure_ivf_index(
+                mgr.read("embed", spark).select("csid", "emb"),
+                args.ann_index_path, i_id="csid", i_emb="emb",
+            )
+        stages = ("ingest", "embed", "block_index", "block_sizes", "blocks",
+                  "pairs", "clusters")
+
     out["clusters"].write.mode("overwrite").parquet(f"{args.output}/clusters.parquet")
     n_survivors = None
     if args.emit_survivors:
@@ -342,30 +212,39 @@ def main(argv: list[str] | None = None) -> int:
         )
         surv.write.mode("overwrite").parquet(f"{args.output}/survivors.parquet")
         n_survivors = spark.read.parquet(f"{args.output}/survivors.parquet").count()
-
-    # rows/candidate_pairs come from the checkpoint markers, which record the
-    # EXACT written row count of their stage (ingest rows / pairs rows —
-    # verified equal to a recount). Recounting them here re-scanned ingest and
-    # pairs inside the timed window: measurement bookkeeping, not pipeline
-    # work. The remaining stats (blocks/matches/clusters) are NOT marker-
-    # derivable — blocks is the distinct POST-salt/cap pairing keys, which
-    # differs from the block_sizes marker's raw pre-salt key count — so they
-    # stay exact recounts, evaluated after ``elapsed`` is captured.
-    n_pairs = mgr.counters("pairs")["rows"]
+    # every count below is measurement bookkeeping, not pipeline work: it
+    # runs after ``elapsed`` is captured
     elapsed = time.time() - t0
-    metrics = {
-        "rows": mgr.counters("ingest")["rows"],
-        "blocks": out["blocks"].select("block_key").distinct().count(),
-        "candidate_pairs": n_pairs,
-        "matches": out["matches"].count(),
-        "clusters": out["clusters"].select("cluster_id").distinct().count(),
-        "elapsed_sec": round(elapsed, 2),
-        "candidate_pairs_per_sec": round(n_pairs / elapsed, 1),
-        "stage_sec": stage_times,
-        "pairs_stage_pairs_per_sec": (
-            round(n_pairs / stage_times["pairs"], 1) if stage_times.get("pairs") else None
-        ),
-    }
+    stage_times = {st: mgr.counters(st).get("elapsed_sec") for st in stages}
+    if args.update_base:
+        metrics = {
+            "mode": "incremental",
+            "new_mentions": out["mentions_new"].count(),
+            "total_mentions": out["mentions"].count(),
+            "new_matches": out["matches_new"].count(),
+        }
+    else:
+        # rows/candidate_pairs come from the checkpoint markers, which record
+        # the EXACT written row count of their stage (ingest rows / pairs
+        # rows). blocks/matches are NOT marker-derivable — blocks is the
+        # distinct POST-salt/cap pairing keys, which differs from the
+        # block_sizes marker's raw pre-salt key count — so they are recounts.
+        n_pairs = mgr.counters("pairs")["rows"]
+        metrics = {
+            "rows": mgr.counters("ingest")["rows"],
+            "blocks": out["blocks"].select("block_key").distinct().count(),
+            "candidate_pairs": n_pairs,
+            "matches": out["matches"].count(),
+            "candidate_pairs_per_sec": round(n_pairs / elapsed, 1),
+            "pairs_stage_pairs_per_sec": (
+                round(n_pairs / stage_times["pairs"], 1) if stage_times.get("pairs") else None
+            ),
+        }
+    metrics.update(
+        clusters=out["clusters"].select("cluster_id").distinct().count(),
+        elapsed_sec=round(elapsed, 2),
+        stage_sec=stage_times,
+    )
     if n_survivors is not None:
         metrics["survivors"] = n_survivors
     if ann_meta is not None:
@@ -375,12 +254,18 @@ def main(argv: list[str] | None = None) -> int:
             "needs_refit": ann_meta.get("needs_refit", False),
         }
     if gold is not None:
+        from pyspark.sql import functions as F
         from mel_spark.operators.evaluate import pairs_from_clusters, pairwise_prf
 
-        m = pairwise_prf(
-            pairs_from_clusters(out["clusters"], "mention_id", "cluster_id"),
-            pairs_from_clusters(gold, "mention_id", "entity_id"),
-        )
+        pred = pairs_from_clusters(out["clusters"], "mention_id", "cluster_id")
+        if args.update_base:
+            # fold-mode gold covers only the folded batch, while the predicted
+            # assignment spans base ∪ batch — evaluate on the gold-covered
+            # mention set, else every base-side pair counts as a false positive
+            gold_m = F.broadcast(gold.select("mention_id").distinct())
+            for side in ("mention_id_a", "mention_id_b"):
+                pred = pred.join(gold_m.withColumnRenamed("mention_id", side), side, "left_semi")
+        m = pairwise_prf(pred, pairs_from_clusters(gold, "mention_id", "entity_id"))
         metrics.update({k: round(v, 6) if isinstance(v, float) else v for k, v in m.items()})
     print(json.dumps(metrics))
     spark.stop()

@@ -114,6 +114,20 @@ def raw_band_keys(feats: DataFrame, content_langs: DataFrame) -> DataFrame:
     )
 
 
+def salted_key(member: str, n_salts: int, long_key: bool = True) -> Column:
+    """The sub-block key a hot block's member lands in:
+    ``xxhash64(block_key, pmod(xxhash64(block_key, member), n_salts))`` (a
+    string key gets ``block_key#salt`` instead). The ONE definition shared by
+    salt_hot_blocks and the fold's probe (operators/incremental.probe_keys):
+    a (base, new) pair meets in the fold's salted probe iff a full run's
+    salt_hot_blocks puts both in one sub-block, which the
+    fold-equals-full-run contract relies on."""
+    salt = F.pmod(F.xxhash64("block_key", member), F.lit(n_salts))
+    if long_key:
+        return F.xxhash64("block_key", salt)
+    return F.concat(F.col("block_key"), F.lit("#"), salt.cast("string"))
+
+
 def salt_hot_blocks(
     blocks: DataFrame,
     salt_threshold: int = 256,
@@ -148,17 +162,13 @@ def salt_hot_blocks(
             .filter(F.col("_sz") > salt_threshold)
         )
     is_long = isinstance(blocks.schema["block_key"].dataType, LongType)
-    salt = F.pmod(F.xxhash64("block_key", "mention_id"), F.lit(n_salts))
-    salted_key = (
-        F.xxhash64("block_key", salt)
-        if is_long
-        else F.concat(F.col("block_key"), F.lit("#"), salt.cast("string"))
-    )
     return (
         blocks.join(F.broadcast(hot), "block_key", "left")
         .withColumn(
             "block_key",
-            F.when(F.col("_sz").isNotNull(), salted_key).otherwise(F.col("block_key")),
+            F.when(
+                F.col("_sz").isNotNull(), salted_key("mention_id", n_salts, long_key=is_long)
+            ).otherwise(F.col("block_key")),
         )
         .drop("_sz")
     )

@@ -57,7 +57,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mel_spark.operators import blocking, cluster, pairs
-from mel_spark.pipeline import ERConfig, block_index_stage, embed_stage, ingest
+from mel_spark.pipeline import (
+    ERConfig,
+    block_index_stage,
+    block_sizes_stage,
+    block_stage,
+    embed_stage,
+    ingest,
+)
 from mel_spark.sources.checkpoint import LINEAGE_COLS, CheckpointManager
 
 
@@ -190,12 +197,7 @@ def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> None:
         # block_sizes is DERIVED (per-key counts over the index): recompute
         # from the compacted index rather than summing chain partials — one
         # combiner-friendly aggregation, guaranteed consistent with the index
-        mgr.write(
-            "block_sizes",
-            mgr.read("block_index", spark)
-            .groupBy("block_key")
-            .agg(F.count(F.lit(1)).alias("block_size")),
-        )
+        mgr.write("block_sizes", block_sizes_stage(mgr.read("block_index", spark)))
     mgr.write("clusters", read_clusters_chain(spark, ckpt_dir))
     parent = _os.path.join(ckpt_dir, PARENT_FILE)
     if _os.path.exists(parent):
@@ -283,9 +285,8 @@ def probe_keys(
         hot = F.broadcast(hot)
 
         def _salted(df: DataFrame, member: str) -> DataFrame:
-            salt = F.pmod(F.xxhash64("block_key", member), F.lit(n_salts))
             return df.join(hot, "block_key", "left_semi").withColumn(
-                "block_key", F.xxhash64("block_key", salt)
+                "block_key", blocking.salted_key(member, n_salts)
             )
 
         hits = _join(
@@ -573,12 +574,7 @@ def incremental_update(
     #    sizes below), so the fold reads a 2-column sizes table instead of
     #    re-counting the corpus key stream. A pre-block_sizes base falls back
     #    to counting the (already in hand) base key stream once.
-    delta_sizes = _stage(
-        "block_sizes_delta",
-        lambda: delta_keys.groupBy("block_key").agg(
-            F.count(F.lit(1)).alias("block_size")
-        ),
-    )
+    delta_sizes = _stage("block_sizes_delta", lambda: block_sizes_stage(delta_keys))
     dk_distinct = delta_sizes.select("block_key")
     try:
         # a mixed chain (root has block_sizes, an old-layout fold lacks its
@@ -589,26 +585,20 @@ def incremental_update(
             F.broadcast(dk_distinct), "block_key", "left_semi"
         ).select("block_key", "block_size")
     except (FileNotFoundError, AnalysisException):
-        base_at_delta = (
+        base_at_delta = block_sizes_stage(
             base_keys.join(F.broadcast(dk_distinct), "block_key", "left_semi")
-            .groupBy("block_key")
-            .agg(F.count(F.lit(1)).alias("block_size"))
         )
-    hot_keys = (
+    totals = (
         base_at_delta.unionByName(delta_sizes)
         .groupBy("block_key")
         .agg(F.sum("block_size").alias("block_size"))
-        .filter(F.col("block_size") > cfg.salt_threshold)
-        .select("block_key")
     )
+    hot_keys = totals.filter(F.col("block_size") > cfg.salt_threshold).select("block_key")
 
     def _scored() -> DataFrame:
-        # 3a. delta x delta with the standard skew controls (hot set = totals)
-        dd_blocks = blocking.cap_blocks(
-            blocking.salt_hot_blocks(delta_keys, cfg.salt_threshold, hot_keys=hot_keys),
-            cfg.max_block_size,
-        )
-        dd_pairs = pairs.candidate_pairs(dd_blocks)
+        # 3a. delta x delta with the full run's skew controls (pipeline
+        # block_stage: salt -> cap), its hot set taken from the totals
+        dd_pairs = pairs.candidate_pairs(block_stage(delta_keys, cfg, sizes=totals))
         # 3b. delta x base probe: broadcast the delta keys; the corpus key
         # stream is scan-only (at scale: a bucketed block index makes this a
         # shuffle-free join even without the broadcast)

@@ -258,7 +258,7 @@ def ensure_bucketed_index(
     spark: SparkSession,
     table: str,
     base_checkpoint: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     path: str | None = None,
     force_rebuild: bool = False,
 ) -> bool:
@@ -274,6 +274,9 @@ def ensure_bucketed_index(
        ``read_stage_chain(base_checkpoint, 'block_index')`` — one bucketed
        shuffle-write of the corpus index, the same pass a compaction pays —
        and stamp the meta sidecar with the creation base + bucket spec.
+
+    ``n_buckets`` is the bucket count of a (re)build (None =
+    ``DEFAULT_BUCKETS``).
 
     ``force_rebuild`` skips registration + validation and rebuilds outright —
     the post-compaction path (compaction removes the parent pointers the
@@ -297,6 +300,8 @@ def ensure_bucketed_index(
                     f"bucketed index {table!r} diverged from the fold chain "
                     f"({e}); rebuilding from the chain"
                 )
+    if n_buckets is None:
+        n_buckets = DEFAULT_BUCKETS
     df = read_stage_chain(spark, base_checkpoint, "block_index")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     if path is not None and os.path.isdir(path):

@@ -1,12 +1,17 @@
-"""Streaming ER ingest: fold arriving repo batches into a completed run.
+"""Fold a batch of repos into a completed run and keep the
+serving structures in step, for one batch or a stream of them.
 
 The reference's pipelines are rerun-from-scratch batch jobs (stage markers,
 src/scripts/train/all_langs_no_slurm.sh:49-116); the incremental operator
-(operators/incremental.py) already makes a single fold O(batch). This module
-closes the loop for CONTINUOUS arrival: a Structured Streaming source of
-(repo, path, commit, lang, content) rows is consumed micro-batch by
-micro-batch, each batch folded with ``incremental_update`` into a chain of
-fold checkpoints.
+(operators/incremental.py) makes a single fold O(batch). ``fold_batch`` is
+the ONE fold-and-maintain sequence — create/validate the bucketed probe
+table, ``incremental_update``, append the fold's delta keys to the table
+once, append the fold's new embeddings to the ANN index — and both callers
+run it: ``jobs/er_job.py --update-base`` (one batch per invocation) and
+``fold_micro_batch`` (CONTINUOUS arrival: a Structured Streaming source of
+(repo, path, commit, lang, content) rows consumed micro-batch by
+micro-batch, each batch folded into a chain of fold checkpoints, the chain
+head advanced after the fold and the chain compacted on a cadence).
 
 Why foreachBatch and not a stateful streaming operator: a fold needs arbitrary
 batch DataFrame ops (anti-joins against the corpus, LSH self-joins, iterative
@@ -30,13 +35,21 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from mel_spark.operators.ann_index import (
+    append_to_ivf_index,
+    ensure_ivf_index,
+    read_index_meta,
+)
 from mel_spark.operators.incremental import (
+    _parent_of,
     chain_depth,
     compact_checkpoint,
     incremental_update,
     read_stage_chain,
 )
 from mel_spark.pipeline import ERConfig
+from mel_spark.sources import bucketed
+from mel_spark.sources.checkpoint import CheckpointManager
 
 
 def _head_path(fold_root: str) -> str:
@@ -119,9 +132,97 @@ class StreamingFoldState:
         self.epochs_folded += 1
 
 
+def fold_batch(
+    base_checkpoint: str,
+    batch: DataFrame,
+    cfg: ERConfig,
+    fold_dir: str,
+    input_token: str,
+    bucketed_table: str | None = None,
+    bucketed_path: str | None = None,
+    bucketed_buckets: int | None = None,
+    ann_index_path: str | None = None,
+    probe_broadcast_delta: bool = True,
+    relabel_broadcast_touched: bool = True,
+) -> tuple[dict, dict | None]:
+    """Fold ``batch`` into the completed run (or fold chain head) at
+    ``base_checkpoint``, writing the fold's delta stages into ``fold_dir``,
+    and keep the serving structures in step:
+
+    1. ``bucketed_table`` (sources/bucketed.py): create or validate it for
+       the base, then probe it as the corpus side instead of the chain read
+       (``probe_broadcast_delta=False`` makes that probe a sort-merge join
+       where only the delta exchanges);
+    2. ``incremental_update`` (``relabel_broadcast_touched`` is its
+       ``broadcast_touched``);
+    3. append the fold's ``block_index_delta`` to the table exactly once,
+       fenced by the per-fold marker;
+    4. ``ann_index_path`` (operators/ann_index.py): append the fold's
+       ``embed_delta`` under the index's frozen centroids as one epoch — or,
+       with no index yet, build one from the embed chain, which already holds
+       this delta — under the fold dir's token, so a replayed fold is a
+       committed no-op.
+
+    Steps 3 and 4 run after every delta stage is green; a caller that keeps a
+    chain head advances it only after this returns, so a crash in between
+    replays into a fold whose marker and token already fence both appends.
+    Returns (the fold's stage dict from ``incremental_update``, the ANN
+    index meta or None)."""
+    spark = batch.sparkSession
+    probe_kw = {}
+    if bucketed_table:
+        bucketed.ensure_bucketed_index(
+            spark, bucketed_table, base_checkpoint, n_buckets=bucketed_buckets,
+            path=bucketed_path,
+        )
+        probe_kw = {
+            "base_keys_table": bucketed_table,
+            "broadcast_probe_delta": probe_broadcast_delta,
+        }
+    out = incremental_update(
+        spark,
+        base_checkpoint,
+        batch,
+        cfg,
+        checkpoint_dir=fold_dir,
+        input_token=input_token,
+        broadcast_touched=relabel_broadcast_touched,
+        **probe_kw,
+    )
+    if bucketed_table and not bucketed.fold_appended(fold_dir, bucketed_table):
+        bucketed.append_bucketed_index(
+            CheckpointManager(fold_dir)
+            .read("block_index_delta", spark)
+            .select("block_key", "mention_id"),
+            bucketed_table,
+        )
+        bucketed.record_fold_appended(fold_dir, bucketed_table)
+    if not ann_index_path:
+        return out, None
+    token = os.path.abspath(fold_dir)
+    # the try covers ONLY the meta read: a FileNotFoundError raised inside
+    # the append itself (e.g. a concurrent rebuild removing _META) must
+    # propagate, not silently skip the fold's delta
+    try:
+        read_index_meta(ann_index_path)
+    except FileNotFoundError:
+        # first build from the chain that already contains this fold's delta:
+        # epoch 0 carries this fold's token, so a replayed append no-ops
+        return out, ensure_ivf_index(
+            read_stage_chain(spark, fold_dir, "embed").select("csid", "emb"),
+            ann_index_path, i_id="csid", i_emb="emb", token=token,
+        )
+    return out, append_to_ivf_index(
+        CheckpointManager(fold_dir).read("embed_delta", spark).select("csid", "emb"),
+        ann_index_path, i_id="csid", i_emb="emb", token=token,
+    )
+
+
 def fold_micro_batch(state: StreamingFoldState, batch: DataFrame, epoch_id: int) -> dict:
-    """Fold ONE micro-batch into the chain. Returns the fold's stage dict
-    (clusters = full updated assignment). Designed as a foreachBatch body:
+    """Fold ONE micro-batch onto the chain head with :func:`fold_batch`, then
+    advance the durable head and compact the chain when the cadence or the
+    depth bound says so. Returns the fold's stage dict (clusters = full
+    updated assignment). Designed as a foreachBatch body:
 
         query = (stream.writeStream
                  .foreachBatch(lambda df, eid: fold_micro_batch(state, df, eid))
@@ -139,8 +240,6 @@ def fold_micro_batch(state: StreamingFoldState, batch: DataFrame, epoch_id: int)
         # re-delivered although its fold (all delta stages) is already green
         # and is the chain head. Nothing to do.
         return {}
-    from mel_spark.operators.incremental import _parent_of
-
     prior_parent = _parent_of(fold_dir)
     if prior_parent is not None and os.path.abspath(prior_parent) != os.path.abspath(
         state.current_base()
@@ -159,86 +258,26 @@ def fold_micro_batch(state: StreamingFoldState, batch: DataFrame, epoch_id: int)
             "the stream's offsets checkpoint and fold_root/_HEAD.json have "
             "diverged (they must be kept or deleted together)."
         )
-    spark = batch.sparkSession
-    bucketed_kw = {}
-    if state.bucketed_table:
-        from mel_spark.sources import bucketed
-
-        _bkw = {"path": state.bucketed_path}
-        if state.bucketed_buckets is not None:
-            _bkw["n_buckets"] = state.bucketed_buckets
-        bucketed.ensure_bucketed_index(
-            spark, state.bucketed_table, state.current_base(), **_bkw
-        )
-        bucketed_kw = {
-            "base_keys_table": state.bucketed_table,
-            "broadcast_probe_delta": state.probe_broadcast_delta,
-        }
-    out = incremental_update(
-        spark,
+    out, _ = fold_batch(
         state.current_base(),
         batch,
         state.cfg,
-        checkpoint_dir=fold_dir,
+        fold_dir,
         input_token=f"epoch:{epoch_id}",
-        broadcast_touched=state.relabel_broadcast_touched,
-        **bucketed_kw,
+        bucketed_table=state.bucketed_table,
+        bucketed_path=state.bucketed_path,
+        bucketed_buckets=state.bucketed_buckets,
+        ann_index_path=state.ann_index_path,
+        probe_broadcast_delta=state.probe_broadcast_delta,
+        relabel_broadcast_touched=state.relabel_broadcast_touched,
     )
-    if state.bucketed_table and not bucketed.fold_appended(fold_dir, state.bucketed_table):
-        # append BEFORE advancing the head: a crash in between replays into a
-        # fold whose stages are green and whose marker already fences the
-        # append — the table never silently misses this epoch's delta
-        from mel_spark.sources.checkpoint import CheckpointManager
-
-        bucketed.append_bucketed_index(
-            CheckpointManager(fold_dir)
-            .read("block_index_delta", spark)
-            .select("block_key", "mention_id"),
-            state.bucketed_table,
-        )
-        bucketed.record_fold_appended(fold_dir, state.bucketed_table)
-    if state.ann_index_path:
-        # same ordering rule as the bucketed append: maintain the served
-        # index BEFORE advancing the head, fenced by the fold-dir token
-        from mel_spark.operators.ann_index import (
-            append_to_ivf_index,
-            ensure_ivf_index,
-            read_index_meta,
-        )
-        from mel_spark.sources.checkpoint import CheckpointManager as _AnnMgr
-
-        # the try covers ONLY the meta read: a FileNotFoundError raised
-        # inside the append itself (e.g. a concurrent rebuild removing _META)
-        # must propagate, not silently skip the fold's delta
-        try:
-            read_index_meta(state.ann_index_path)
-            index_exists = True
-        except FileNotFoundError:
-            index_exists = False
-        if index_exists:
-            append_to_ivf_index(
-                _AnnMgr(fold_dir).read("embed_delta", spark).select("csid", "emb"),
-                state.ann_index_path,
-                i_id="csid",
-                i_emb="emb",
-                token=fold_dir,
-            )
-        else:
-            # first build from the chain that already contains this fold's
-            # delta — stamp this fold's token so a replayed append no-ops
-            ensure_ivf_index(
-                read_stage_chain(spark, fold_dir, "embed").select("csid", "emb"),
-                state.ann_index_path,
-                i_id="csid",
-                i_emb="emb",
-                token=fold_dir,
-            )
     state._advance(fold_dir)
     cadence_hit = state.compact_every and state.total_folds % state.compact_every == 0
     depth_hit = state.max_chain_depth and chain_depth(fold_dir) >= state.max_chain_depth
     if cadence_hit or depth_hit:
         # coverage must be checked BEFORE compaction drops the parent
         # pointers the walk needs
+        spark = batch.sparkSession
         covered = bool(state.bucketed_table) and bucketed.chain_covered(
             spark, state.bucketed_table, fold_dir
         )
@@ -254,7 +293,8 @@ def fold_micro_batch(state: StreamingFoldState, batch: DataFrame, epoch_id: int)
                 bucketed.reanchor_meta(spark, state.bucketed_table, fold_dir)
             else:
                 bucketed.ensure_bucketed_index(
-                    spark, state.bucketed_table, fold_dir, force_rebuild=True, **_bkw
+                    spark, state.bucketed_table, fold_dir, n_buckets=state.bucketed_buckets,
+                    path=state.bucketed_path, force_rebuild=True,
                 )
     return out
 

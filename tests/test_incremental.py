@@ -206,6 +206,45 @@ def test_probe_keys_salting_consistent(spark):
     assert any(a != 500 and b == 500 or a == 500 for a, b in salted - {(1000, 2000), (1001, 2000)})
 
 
+def test_probe_keys_salting_matches_full_run_sub_blocks(spark):
+    """On a hot key, a (base, new) pair meets in the salted probe iff a full
+    run's salt_hot_blocks over base ∪ delta puts both in one sub-block; the
+    fold-equals-full-run contract rests on the two salting the same way."""
+    from mel_spark.operators import blocking
+    from mel_spark.operators.incremental import probe_keys
+
+    hot, cold = 9_000_000_000, 77
+    base = spark.createDataFrame(
+        [(hot, i) for i in range(40)] + [(cold, 1000), (cold, 1001)],
+        ["block_key", "mention_id"],
+    )
+    new_ids = range(5000, 5012)
+    delta = spark.createDataFrame(
+        [(hot, i) for i in new_ids] + [(cold, 5000)], ["block_key", "mention_id"]
+    )
+    probed = {
+        (r["mention_id_a"], r["mention_id_b"])
+        for r in probe_keys(
+            delta, base, max_candidates_per_key=1000, salt_threshold=20, n_salts=4
+        ).collect()
+    }
+    salted = blocking.salt_hot_blocks(
+        base.unionByName(delta), salt_threshold=20, n_salts=4
+    ).collect()
+    sub_blocks = {}
+    for r in salted:
+        sub_blocks.setdefault(r["block_key"], set()).add(r["mention_id"])
+    new = set(new_ids)
+    # probe pairs are (least, greatest) = (base, new): base ids are smaller
+    full_run = {
+        (b, n) for members in sub_blocks.values() for n in members & new for b in members - new
+    }
+    assert probed == full_run
+    hot_pairs = {(b, n) for b, n in probed if b < 40}
+    assert 0 < len(hot_pairs) < 40 * len(new_ids)  # the hot key WAS split
+    assert {(1000, 5000), (1001, 5000)} <= probed  # the cold key was not
+
+
 def test_probe_keys_duplicate_base_rows_are_output_neutral(spark):
     """The bucketed table's documented crash window (append committed, fold
     marker lost → replay re-appends) duplicates base index rows. The probe
