@@ -17,12 +17,16 @@ Usage (north_rule packaging: spark-submit --py-files mel_spark.zip):
         --checkpoint /tmp/er_ckpt_v2 --output /tmp/er_out_v2
 
 The fold runs through ``streaming.er_stream.fold_batch``, the same fold
-sequence the streaming job uses. Both modes write ``clusters.parquet`` and
-print one JSON line through one reporting tail: clusters, elapsed sec,
+sequence the streaming job uses. Both modes write ``clusters.parquet``
+(mention_id, cluster_id) and ``survivors.parquet`` in one schema and print
+one JSON line through one reporting tail: clusters, elapsed sec,
 ``stage_sec`` (every stage the checkpoint wrote), survivors / ann_index when
-asked, and pairwise F1 when gold clusters exist. A full run adds rows, blocks,
-candidate pairs, matches and pairs/sec; a fold adds mode, new/total mentions
-and new matches, and scores F1 on the gold-covered (batch) mentions only.
+asked, and pairwise F1 when gold clusters exist (an unreadable
+``reference_clusters.parquet`` fails the job; only an absent one means no
+gold). A full run adds rows, blocks, candidate pairs, matches and pairs/sec;
+a fold adds mode, new/total mentions, new matches and ``fold_joins`` — the
+fold's measured broadcast-or-sort-merge choice for its probe, relabel and
+override joins — and scores F1 on the gold-covered (batch) mentions only.
 """
 
 from __future__ import annotations
@@ -84,30 +88,9 @@ def main(argv: list[str] | None = None) -> int:
         "served index follows the incremental story between refits "
         "(meta.needs_refit flags when appends exceed half the index)",
     )
-    p.add_argument(
-        "--probe-sort-merge",
-        action="store_true",
-        help="fold probe: do NOT broadcast the delta key set — the probe "
-        "runs as a sort-merge join over the --bucketed-index table where only "
-        "the delta side exchanges (for batches past the broadcast ceiling); "
-        "requires --bucketed-index",
-    )
-    p.add_argument(
-        "--relabel-sort-merge",
-        action="store_true",
-        help="fold relabel: do NOT broadcast the touched-cluster membership "
-        "(use when the batch touches a mega-cluster whose membership exceeds "
-        "the broadcast ceiling; output is identical, the relabel joins run "
-        "sort-merge)",
-    )
     args = p.parse_args(argv)
     if not (args.input or args.synthesize):
         p.error("one of --input / --synthesize is required")
-    if args.probe_sort_merge and not args.bucketed_index:
-        # without the bucketed table the probe's corpus side is the chain
-        # read, and under the disabled auto-broadcast below a sort-merge
-        # probe shuffles the whole corpus key stream on every fold
-        p.error("--probe-sort-merge requires --bucketed-index")
     if args.update_base:
         import os as _os
 
@@ -121,7 +104,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from mel_spark.session import get_spark
     from mel_spark.pipeline import ERConfig, run_pipeline
-    from mel_spark.sources.checkpoint import CheckpointManager
+    from mel_spark.sources.checkpoint import LINEAGE_COLS, CheckpointManager
 
     # static auto-broadcast OFF: Catalyst's size estimates for UDF-produced
     # relations (the embedding stage) are unreliable and a mis-broadcast OOMs.
@@ -154,10 +137,15 @@ def main(argv: list[str] | None = None) -> int:
             spark.read.parquet(f"{args.input}/repos.parquet"),
             spark.sparkContext.defaultParallelism * 2,
         )
+        from pyspark.errors import AnalysisException
+
         try:
             gold = spark.read.parquet(f"{args.input}/reference_clusters.parquet")
-        except Exception:
-            gold = None
+        except AnalysisException as e:
+            # only an absent file means "no gold"; an unreadable one must fail
+            # the job, not silently drop F1
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
 
     cfg = ERConfig() if args.threshold is None else ERConfig(threshold=args.threshold)
     input_token = (
@@ -178,8 +166,6 @@ def main(argv: list[str] | None = None) -> int:
             bucketed_path=args.bucketed_index_path,
             bucketed_buckets=args.bucketed_index_buckets,
             ann_index_path=args.ann_index_path,
-            probe_broadcast_delta=not args.probe_sort_merge,
-            relabel_broadcast_touched=not args.relabel_sort_merge,
         )
         stages = ("ingest_delta", "embed_delta", "block_index_delta",
                   "block_sizes_delta", "pairs_delta", "clusters_delta")
@@ -202,13 +188,17 @@ def main(argv: list[str] | None = None) -> int:
         stages = ("ingest", "embed", "block_index", "block_sizes", "blocks",
                   "pairs", "clusters")
 
-    out["clusters"].write.mode("overwrite").parquet(f"{args.output}/clusters.parquet")
+    # one output schema for both modes: the full run's checkpoint reads carry
+    # the lineage columns (a wall-clock _run_id among them), a fold's do not
+    clusters = out["clusters"].select("mention_id", "cluster_id")
+    clusters.write.mode("overwrite").parquet(f"{args.output}/clusters.parquet")
     n_survivors = None
     if args.emit_survivors:
         from mel_spark.operators.dedup import select_survivors
 
         surv = select_survivors(
-            out["clusters"], out["mentions"], id_col="mention_id", text_col="content"
+            clusters, out["mentions"].drop(*LINEAGE_COLS), id_col="mention_id",
+            text_col="content",
         )
         surv.write.mode("overwrite").parquet(f"{args.output}/survivors.parquet")
         n_survivors = spark.read.parquet(f"{args.output}/survivors.parquet").count()
@@ -222,6 +212,7 @@ def main(argv: list[str] | None = None) -> int:
             "new_mentions": out["mentions_new"].count(),
             "total_mentions": out["mentions"].count(),
             "new_matches": out["matches_new"].count(),
+            "fold_joins": out["joins"],
         }
     else:
         # rows/candidate_pairs come from the checkpoint markers, which record
@@ -241,7 +232,7 @@ def main(argv: list[str] | None = None) -> int:
             ),
         }
     metrics.update(
-        clusters=out["clusters"].select("cluster_id").distinct().count(),
+        clusters=clusters.select("cluster_id").distinct().count(),
         elapsed_sec=round(elapsed, 2),
         stage_sec=stage_times,
     )
@@ -257,7 +248,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
         from mel_spark.operators.evaluate import pairs_from_clusters, pairwise_prf
 
-        pred = pairs_from_clusters(out["clusters"], "mention_id", "cluster_id")
+        pred = pairs_from_clusters(clusters, "mention_id", "cluster_id")
         if args.update_base:
             # fold-mode gold covers only the folded batch, while the predicted
             # assignment spans base ∪ batch — evaluate on the gold-covered

@@ -53,12 +53,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="external location for --bucketed-index (survives "
                         "invocations without a metastore)")
     p.add_argument("--bucketed-index-buckets", type=int, default=None)
-    p.add_argument("--probe-sort-merge", action="store_true",
-                   help="probe without broadcasting the delta key set (epochs "
-                        "past the broadcast ceiling)")
-    p.add_argument("--relabel-sort-merge", action="store_true",
-                   help="relabel without broadcasting touched-cluster "
-                        "membership (epochs touching a mega-cluster)")
     args = p.parse_args(argv)
 
     from mel_spark.pipeline import ERConfig
@@ -85,8 +79,6 @@ def main(argv: list[str] | None = None) -> int:
         bucketed_table=args.bucketed_index,
         bucketed_path=args.bucketed_index_path,
         bucketed_buckets=args.bucketed_index_buckets,
-        probe_broadcast_delta=not args.probe_sort_merge,
-        relabel_broadcast_touched=not args.relabel_sort_merge,
     )
     q = start_er_stream(stream, state, offsets_dir=args.offsets, trigger_once=True)
     q.awaitTermination()

@@ -21,9 +21,13 @@ to the NEW batch:
            key set, then within-block pairing, and
        (b) delta x base: an equi-join probe of the delta keys against the
            base key set, capped per (new member, key) like cap_blocks.
-     The base key set is derived from the base features here (one pass); at
-     scale it is the precomputed "block index" — written once, bucketed by
-     block_key, so the probe shuffles ONLY the delta side.
+     The base key set is the persisted "block index" (or, for a base that
+     predates it, derived from the base features in one pass). Over that
+     chain read the probe always broadcasts the delta keys: a sort-merge
+     probe there would shuffle the corpus key stream. Over the index
+     bucketed by block_key (sources/bucketed.py) it broadcasts them while
+     their measured size fits ``FOLD_BROADCAST_MAX_BYTES``, and past it
+     joins sort-merge, shuffling ONLY the delta side.
   4. score new pairs with the same fused Arrow kernel over (base ∪ new)
      features; threshold → new match edges.
   5. cluster incrementally: old csids COLLAPSE to their existing cluster
@@ -34,7 +38,10 @@ to the NEW batch:
   6. relabel cluster_id = min mention ``mid`` per final root over ALL member
      mentions — byte-identical to what a full run over (base ∪ new) emits
      (whenever skew caps do not bind), which is the equivalence contract
-     tests/test_incremental.py asserts.
+     tests/test_incremental.py asserts. The relabel's build sides are
+     bounded by touched-cluster membership plus the batch's mentions, so
+     they are broadcast only while that measured size fits the same budget
+     (a fold touching a mega-cluster relabels through sort-merge joins).
 
 Durable state per fold is O(batch), never O(corpus): a fold's checkpoint dir
 holds ``ingest_delta`` / ``embed_delta`` / ``block_index_delta`` /
@@ -69,6 +76,20 @@ from mel_spark.sources.checkpoint import LINEAGE_COLS, CheckpointManager
 
 
 PARENT_FILE = "_PARENT.json"
+
+# The fold broadcasts a join side only while its broadcast hash relation
+# stays within this many bytes: ~200 MB, a few percent of the default 8 GB
+# local driver heap even with the relabel's three relations alive at once.
+# Each side's row count is MEASURED by a bounded count (``_fits``), never
+# estimated from Catalyst stats, against budget // its measured row width
+# (BroadcastExchange ``dataSize`` over 200k rows, Spark 4.1). A side one row
+# over its bound joins sort-merge.
+FOLD_BROADCAST_MAX_BYTES = 200 << 20
+# the probe's (block_key, csid) delta keys: 83.9 B/row (~2.5M rows)
+_KEY_ROW_BYTES = 84
+# every mention_id-keyed relabel side is gated at the widest of them, a
+# 64-hex mention_id set at 377.5 B/row (~555k rows)
+_MENTION_ROW_BYTES = 378
 
 
 def _parent_of(ckpt_dir: str) -> str | None:
@@ -204,6 +225,23 @@ def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> None:
         _os.remove(parent)
 
 
+def _fits(df: DataFrame, row_bytes: int) -> bool:
+    """True iff ``df`` has at most ``FOLD_BROADCAST_MAX_BYTES // row_bytes``
+    rows. Each partition ships at most bound + 1 rows, so the measurement is
+    bounded however large ``df`` is; on a (lazy) local checkpoint it
+    materializes the partitions the join then reads."""
+    bound = FOLD_BROADCAST_MAX_BYTES // row_bytes
+    return df.limit(bound + 1).count() <= bound
+
+
+def _hint(df: DataFrame, broadcast: bool) -> DataFrame:
+    return F.broadcast(df) if broadcast else df
+
+
+def _join_kind(broadcast: bool) -> str:
+    return "broadcast" if broadcast else "sort_merge"
+
+
 def content_roots(mentions: DataFrame, clusters: DataFrame) -> DataFrame:
     """(csid, root) content-level cluster roots recovered from the
     mention-level cluster output (all mentions of a csid share a cluster by
@@ -229,7 +267,8 @@ def probe_keys(
     ``max_candidates_per_key`` old candidates per (new member, key) in
     deterministic min-order — cap_blocks' fan-out bound applied to the probe.
     ``broadcast_delta`` hints the (batch-proportional) delta side so the
-    corpus key stream is scanned, never shuffled.
+    corpus key stream is scanned, never shuffled; ``incremental_update``
+    decides it (see its ``joins``).
 
     ``salt_threshold`` applies the SAME (block_key, member)-derived salt split
     as blocking.salt_hot_blocks to BOTH probe sides before the join: a hot
@@ -379,14 +418,13 @@ def incremental_update(
     input_token: str = "",
     plan_capture: dict[str, str] | None = None,
     base_keys_table: str | None = None,
-    broadcast_probe_delta: bool = True,
-    broadcast_touched: bool = True,
-) -> dict[str, DataFrame]:
+) -> dict:
     """Fold ``new_repos`` into the completed run at ``base_checkpoint``.
 
-    Returns {"mentions", "embedded", "matches_new", "clusters"} where
-    ``clusters`` is the FULL updated (mention_id, cluster_id) assignment over
-    base ∪ new mentions, labeled identically to a from-scratch run.
+    Returns {"mentions", "mentions_new", "embedded", "matches_new",
+    "clusters", "joins"} where ``clusters`` is the FULL updated (mention_id,
+    cluster_id) assignment over base ∪ new mentions, labeled identically to
+    a from-scratch run.
 
     ``input_token`` identifies the new batch (path / synth spec); hashed with
     the config and base identity into each delta stage's checkpoint
@@ -401,21 +439,27 @@ def incremental_update(
 
     ``base_keys_table`` overrides the probe's corpus side with a catalog
     table — normally the BUCKETED block index (sources/bucketed.py), whose
-    content is identical to the chain read. Pair it with
-    ``broadcast_probe_delta=False`` for batches past the broadcast ceiling:
-    the probe becomes a sort-merge join where only the delta side exchanges
-    (the bucketed corpus scan carries no Exchange — plan pinned by
-    tests/test_bucketed.py).
+    content is identical to the chain read. When the delta keys are too many
+    to broadcast, the probe over it is a sort-merge join where only the delta
+    side exchanges (the bucketed corpus scan carries no Exchange — plan
+    pinned by tests/test_bucketed.py).
 
-    ``broadcast_touched`` gates the relabel stage's broadcast hints, whose
-    build sides are bounded by TOUCHED-CLUSTER MEMBERSHIP rather than batch
-    size (a batch-proportional bound holds only while no touched cluster is
-    itself corpus-scale). A fold that touches a mega-cluster — one content
-    duplicated past the broadcast ceiling — must pass False: the relabel
-    joins run sort-merge (the corpus clusters/mentions tables shuffle for
-    this fold, which is unavoidable when the touched membership itself is
-    corpus-scale) instead of OOMing the driver. Output is byte-identical
-    either way (tests/test_incremental.py).
+    ``joins`` reports the fold's three broadcast gates, each "broadcast" or
+    "sort_merge", decided from measured sizes (``FOLD_BROADCAST_MAX_BYTES``);
+    output is identical either way:
+
+    * ``probe``: over ``base_keys_table`` the delta keys are broadcast iff
+      they fit; over the chain read always (a sort-merge probe there would
+      shuffle the corpus key stream);
+    * ``relabel``: the relabel's build sides — the touched mentions, and the
+      touched clusters' members plus the batch's mentions, which a fold
+      touching a mega-cluster pushes past any broadcast — are broadcast iff
+      both measured frames fit;
+    * ``override``: the anti-join that rebuilds the full assignment
+      broadcasts the ``clusters_delta`` id set iff it fits.
+
+    ``probe`` and ``relabel`` are measured inside the stage that uses them,
+    so a resumed stage measures nothing and reports None.
     """
     import hashlib as _hashlib
     import json as _json
@@ -461,10 +505,14 @@ def incremental_update(
         ).encode()
     ).hexdigest()
 
+    def _capture(name: str, df: DataFrame) -> DataFrame:
+        if plan_capture is not None:
+            plan_capture[name] = df._jdf.queryExecution().executedPlan().toString()
+        return df
+
     def _stage(name, thunk) -> DataFrame:
         if plan_capture is not None:
-            df = thunk()
-            plan_capture[name] = df._jdf.queryExecution().executedPlan().toString()
+            df = _capture(name, thunk())
             thunk = lambda: df  # noqa: E731 — plan already built; reuse it
         if ckpt is None:
             return thunk().localCheckpoint(eager=False)
@@ -508,8 +556,10 @@ def incremental_update(
     # THE FOLD'S SHUFFLE DISCIPLINE: every join below broadcasts a
     # BATCH-proportional id/key set and streams the corpus side — the
     # 1M..10^12-row feats/keys tables are scanned (column-pruned) but
-    # never shuffled. A batch too big for these broadcasts belongs in the
-    # full pipeline, not a fold.
+    # never shuffled. The sides that can outgrow a broadcast — the probe's
+    # delta keys and the relabel's touched membership — are hinted only while
+    # their measured size fits (``joins``).
+    joins: dict[str, str | None] = {"probe": None, "relabel": None, "override": None}
 
     # 3. delta key set: every (csid, lang) combination this batch
     # introduces — new contents in any lang, and KNOWN contents surfacing
@@ -599,12 +649,14 @@ def incremental_update(
         # 3a. delta x delta with the full run's skew controls (pipeline
         # block_stage: salt -> cap), its hot set taken from the totals
         dd_pairs = pairs.candidate_pairs(block_stage(delta_keys, cfg, sizes=totals))
-        # 3b. delta x base probe: broadcast the delta keys; the corpus key
-        # stream is scan-only (at scale: a bucketed block index makes this a
-        # shuffle-free join even without the broadcast)
+        # 3b. delta x base probe: broadcast the delta keys so the corpus key
+        # stream is scan-only; past the bound, a bucketed block index lets
+        # the probe join sort-merge with no corpus-side Exchange
+        broadcast = base_keys_table is None or _fits(delta_keys, _KEY_ROW_BYTES)
+        joins["probe"] = _join_kind(broadcast)
         db_pairs = probe_keys(
             delta_keys, base_keys, max_candidates_per_key=cfg.max_block_size,
-            broadcast_delta=broadcast_probe_delta,
+            broadcast_delta=broadcast,
             salt_threshold=cfg.salt_threshold,
             hot_keys=hot_keys,
         )
@@ -630,59 +682,66 @@ def incremental_update(
     scored = _stage("pairs_delta", _scored)
     matches_new = pairs.match_pairs(scored, cfg.threshold)
 
-    # 5. incremental components over root-collapsed edges. The roots lookup
-    # is restricted to the csids the fold can TOUCH — batch csids plus edge
-    # endpoints — so the mentions×clusters join that recovers content-level
-    # roots shuffles O(batch) rows and only SCANS the corpus tables (the
-    # unrestricted content_roots() here was measured growing linearly with
-    # |base|, BENCH/FOLD_SWEEP.md).
-    edge_csids = (
-        matches_new.select(F.col("mention_id_a").alias("csid"))
-        .unionByName(matches_new.select(F.col("mention_id_b").alias("csid")))
-        .distinct()
-    )
-    probe_csids = edge_csids.unionByName(new_m.select("csid")).distinct()
-    mentions_touch = mentions_b.select("csid", "mention_id").join(
-        F.broadcast(probe_csids), "csid", "left_semi"
-    )
-
-    # build sides from here on are bounded by TOUCHED-CLUSTER MEMBERSHIP, not
-    # by the batch — hint them only while that bound fits a broadcast (see
-    # the broadcast_touched docstring for the mega-cluster escape hatch)
-    def _b_touch(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_touched else df
-
-    # broadcast the touched-membership side into content_roots' inner join so
-    # the corpus clusters table is SCANNED (broadcast-hash probe), not
-    # shuffled — er_job disables auto-broadcast, so the hint must be explicit
-    roots_touch = content_roots(_b_touch(mentions_touch), clusters_b)
     cc_dir = _os.path.join(checkpoint_dir, "cc_rounds") if checkpoint_dir else None
-    remap = merge_components(
-        matches_new, roots_touch, checkpoint_dir=cc_dir, input_fingerprint=fp
-    ).select(
-        F.col("mention_id").alias("_node"), F.col("cluster_id").alias("_new_root")
-    )
 
-    # 6. assignment DELTA over TOUCHED clusters only. A base cluster can
-    # change — merge into another, or have its min-mid label move — iff it
-    # contains a batch csid or an edge endpoint, i.e. iff its base label is
-    # a roots_touch root (clusters only ever GAIN members; an untouched
-    # cluster keeps its exact membership, hence its min-mid label). So the
-    # relabel runs over the members of those clusters plus the new
-    # mentions — O(batch · cluster size) rows — never the full corpus; the
-    # corpus assignment/mention tables are scanned through broadcast
-    # semi-joins, not shuffled. Byte-identity with the full-run relabel is
-    # asserted by tests/test_incremental.py.
     def _clusters_delta() -> DataFrame:
-        touched_base = roots_touch.select(F.col("root").alias("cluster_id")).distinct()
-        touched_members = clusters_b.join(
-            F.broadcast(touched_base), "cluster_id", "left_semi"
+        # 5. incremental components over root-collapsed edges. The roots
+        # lookup is restricted to the csids the fold can TOUCH — batch csids
+        # plus edge endpoints — so the mentions×clusters join that recovers
+        # content-level roots shuffles O(batch) rows and only SCANS the
+        # corpus tables (the unrestricted content_roots() here was measured
+        # growing linearly with |base|, BENCH/FOLD_SWEEP.md).
+        edge_csids = (
+            matches_new.select(F.col("mention_id_a").alias("csid"))
+            .unionByName(matches_new.select(F.col("mention_id_b").alias("csid")))
+            .distinct()
         )
-        tm = _b_touch(
-            touched_members.select(
-                "mention_id", F.col("cluster_id").alias("_base_root")
-            )
-        ).join(mentions_b.select("mention_id", "mid", "csid"), "mention_id")
+        probe_csids = edge_csids.unionByName(new_m.select("csid")).distinct()
+        # build sides from here on are bounded by TOUCHED-CLUSTER MEMBERSHIP
+        # plus the batch's mentions, not by the batch alone: broadcast them
+        # only while the touched mentions and the touched clusters' members
+        # plus the batch's mentions both fit. Each measured corpus frame is
+        # the one its join reads, so no corpus table is scanned twice. The
+        # hints must be explicit: er_job disables auto-broadcast.
+        mentions_touch = _capture(
+            "mentions_touch",
+            mentions_b.select("csid", "mention_id").join(
+                F.broadcast(probe_csids), "csid", "left_semi"
+            ),
+        ).localCheckpoint(eager=False)
+        broadcast = _fits(mentions_touch, _MENTION_ROW_BYTES)
+        roots_touch = content_roots(_hint(mentions_touch, broadcast), clusters_b)
+        remap = merge_components(
+            matches_new, roots_touch, checkpoint_dir=cc_dir, input_fingerprint=fp
+        ).select(
+            F.col("mention_id").alias("_node"), F.col("cluster_id").alias("_new_root")
+        )
+        # 6. assignment DELTA over TOUCHED clusters only. A base cluster can
+        # change — merge into another, or have its min-mid label move — iff
+        # it contains a batch csid or an edge endpoint, i.e. iff its base
+        # label is a roots_touch root (clusters only ever GAIN members; an
+        # untouched cluster keeps its exact membership, hence its min-mid
+        # label). So the relabel runs over the members of those clusters plus
+        # the new mentions — O(batch · cluster size) rows — never the full
+        # corpus. Byte-identity with the full-run relabel is asserted by
+        # tests/test_incremental.py.
+        touched_base = roots_touch.select(F.col("root").alias("cluster_id")).distinct()
+        touched_members = _capture(
+            "touched_members",
+            clusters_b.join(
+                F.broadcast(touched_base), "cluster_id", "left_semi"
+            ).select("mention_id", F.col("cluster_id").alias("_base_root")),
+        ).localCheckpoint(eager=False)
+        # the relabelled id set below is exactly these members plus the
+        # batch's mentions (a new mention's known content is a touched one)
+        rel_ids = touched_members.select("mention_id").unionByName(
+            new_m.select("mention_id")
+        )
+        broadcast = broadcast and _fits(rel_ids, _MENTION_ROW_BYTES)
+        joins["relabel"] = _join_kind(broadcast)
+        tm = _hint(touched_members, broadcast).join(
+            mentions_b.select("mention_id", "mid", "csid"), "mention_id"
+        )
         old_assign = (
             tm.select("csid", F.col("_base_root").alias("root"))
             .distinct()
@@ -706,7 +765,7 @@ def incremental_update(
         mins = expanded.groupBy("_root").agg(F.min("mid").alias("cluster_id"))
         rel = expanded.join(mins, "_root").select("mention_id", "cluster_id")
         base_sub = clusters_b.join(
-            _b_touch(rel.select("mention_id")), "mention_id", "left_semi"
+            _hint(rel.select("mention_id"), broadcast), "mention_id", "left_semi"
         ).select("mention_id", F.col("cluster_id").alias("_old"))
         return (
             rel.join(base_sub, "mention_id", "left")
@@ -719,11 +778,15 @@ def incremental_update(
         _write_parent(checkpoint_dir, base_checkpoint)
     # full updated assignment = override the base with the delta (identical
     # to a from-scratch relabel per the touched-clusters argument above);
-    # the anti-join's build side is the touched-membership-bounded delta id
-    # set — broadcast it (when that bound fits) so reconstructing the full
-    # table scans the corpus instead of shuffling it
+    # the anti-join's build side is the delta id set — broadcast it while it
+    # fits, so reconstructing the full table scans the corpus instead of
+    # shuffling it. The delta is a stage read, so a fresh and a resumed fold
+    # measure the same frame.
+    delta_ids = delta.select("mention_id")
+    broadcast = _fits(delta_ids, _MENTION_ROW_BYTES)
+    joins["override"] = _join_kind(broadcast)
     clusters = clusters_b.join(
-        _b_touch(delta.select("mention_id")), "mention_id", "left_anti"
+        _hint(delta_ids, broadcast), "mention_id", "left_anti"
     ).unionByName(delta)
     if plan_capture is not None:
         plan_capture["clusters_full"] = (
@@ -738,4 +801,5 @@ def incremental_update(
         "embedded": feats_all,
         "matches_new": matches_new,
         "clusters": clusters,
+        "joins": joins,
     }

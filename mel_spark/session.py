@@ -76,7 +76,11 @@ def get_spark(
         # file-split tasks execute it (measured: explode(band_keys) noop at
         # sf0.01 5.4 s → 0.4 s with the rule excluded). The filter is
         # redundant for correctness: explode already emits nothing for null or
-        # empty arrays ---
+        # empty arrays. The exclusion is session-wide, and it costs nothing
+        # only while every exploded array derives from non-null text, as all
+        # of ours do: exploding a STORED nullable array column loses the
+        # inferred filter's pruning (pushed to the scan, it skips rows whose
+        # array is null or empty before the explode) ---
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",

@@ -1,17 +1,19 @@
 """Bucketed block-index storage: the shuffle-free probe path for folds whose
 delta is too large to broadcast.
 
-The incremental fold's default probe broadcasts the (batch-proportional)
-delta key set and SCANS the corpus key stream (operators/incremental.py) —
-zero corpus shuffle, but only as long as the batch fits a broadcast. When a
-fold absorbs a batch past that ceiling (a backfill day, a vendored-monorepo
-import), the join must co-locate instead: persist the block index BUCKETED BY
-``block_key`` (hash-bucketed files + catalog bucket spec), and the probe
-becomes a sort-merge join where ONLY the delta side exchanges — the 10^12-row
-corpus index is read pre-partitioned, no Exchange above its scan
-(`tests/test_bucketed.py` pins that plan shape). This is the parquet-catalog
-analogue of an Iceberg bucket-partitioned table; the reference's counterpart
-is the sharded alias-table layout (128 mod-shards,
+The incremental fold's probe broadcasts the (batch-proportional) delta key
+set and SCANS the corpus key stream (operators/incremental.py) — zero corpus
+shuffle, but a broadcast is safe only while the delta keys fit the fold's
+broadcast budget (``FOLD_BROADCAST_MAX_BYTES``). When a fold probing this
+table absorbs a batch past that budget (a backfill day, a vendored-monorepo
+import), its measured delta makes the probe join sort-merge, and the join
+must co-locate: persist the block index BUCKETED BY
+``block_key`` (hash-bucketed files + catalog bucket spec), and the sort-merge
+probe exchanges ONLY the delta side — the 10^12-row corpus index is read
+pre-partitioned, no Exchange above its scan (`tests/test_bucketed.py` pins
+that plan shape). This is the parquet-catalog analogue of an Iceberg
+bucket-partitioned table; the reference's counterpart is the sharded
+alias-table layout (128 mod-shards,
 /root/reference/configs/general.gin:4-5), which co-locates probes by key
 modulus for the same reason.
 
@@ -105,9 +107,10 @@ def append_bucketed_index(df: DataFrame, table: str) -> None:
 
 def read_bucketed_index(spark: SparkSession, table: str) -> DataFrame:
     """The probe source: pass this as ``incremental_update(...,
-    base_keys_table=...)`` (or directly as probe_keys' base side with
-    ``broadcast_delta=False``) and the corpus side of the probe join carries
-    no Exchange.
+    base_keys_table=...)`` (or directly as probe_keys' base side) and a
+    sort-merge probe — the fold's choice when its delta keys are past the
+    broadcast budget, or ``probe_keys(broadcast_delta=False)`` — carries no
+    Exchange on the corpus side.
 
     Refreshes the relation first: appends/rebuilds may have happened in a
     DIFFERENT SessionState over the same shared catalog (Structured Streaming

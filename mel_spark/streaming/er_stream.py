@@ -85,7 +85,8 @@ class StreamingFoldState:
     # epoch probes the table instead of the chain read and appends its delta
     # keys exactly once (fenced by a per-fold marker). The streaming fold is
     # the deployment that needs this most — it is the one folding daily into
-    # a corpus that outgrows any broadcast.
+    # a corpus that outgrows any broadcast: an epoch whose delta keys are
+    # past the fold's broadcast budget then probes it with no corpus shuffle.
     bucketed_table: str | None = None
     bucketed_path: str | None = None
     bucketed_buckets: int | None = None  # None = sources/bucketed.py default
@@ -94,10 +95,6 @@ class StreamingFoldState:
     # as one fenced epoch (the fold dir is the idempotency token, so a
     # replayed epoch is a committed no-op); built from the chain on first use
     ann_index_path: str | None = None
-    probe_broadcast_delta: bool = True  # False = sort-merge probe (big epochs)
-    # False = sort-merge relabel (epochs touching a mega-cluster whose
-    # membership exceeds the broadcast ceiling)
-    relabel_broadcast_touched: bool = True
     head: str | None = None  # latest fold dir (chain head); None = base only
     epochs_folded: int = 0  # this invocation only
     total_folds: int = 0  # cumulative across invocations (persisted in _HEAD)
@@ -142,8 +139,6 @@ def fold_batch(
     bucketed_path: str | None = None,
     bucketed_buckets: int | None = None,
     ann_index_path: str | None = None,
-    probe_broadcast_delta: bool = True,
-    relabel_broadcast_touched: bool = True,
 ) -> tuple[dict, dict | None]:
     """Fold ``batch`` into the completed run (or fold chain head) at
     ``base_checkpoint``, writing the fold's delta stages into ``fold_dir``,
@@ -151,10 +146,11 @@ def fold_batch(
 
     1. ``bucketed_table`` (sources/bucketed.py): create or validate it for
        the base, then probe it as the corpus side instead of the chain read
-       (``probe_broadcast_delta=False`` makes that probe a sort-merge join
-       where only the delta exchanges);
-    2. ``incremental_update`` (``relabel_broadcast_touched`` is its
-       ``broadcast_touched``);
+       (a batch whose delta keys are past the fold's broadcast budget then
+       probes it sort-merge, and only the delta exchanges);
+    2. ``incremental_update``, which picks broadcast or sort-merge for its
+       probe, relabel and override joins from measured sizes and reports
+       each in the stage dict's ``joins``;
     3. append the fold's ``block_index_delta`` to the table exactly once,
        fenced by the per-fold marker;
     4. ``ann_index_path`` (operators/ann_index.py): append the fold's
@@ -169,16 +165,11 @@ def fold_batch(
     Returns (the fold's stage dict from ``incremental_update``, the ANN
     index meta or None)."""
     spark = batch.sparkSession
-    probe_kw = {}
     if bucketed_table:
         bucketed.ensure_bucketed_index(
             spark, bucketed_table, base_checkpoint, n_buckets=bucketed_buckets,
             path=bucketed_path,
         )
-        probe_kw = {
-            "base_keys_table": bucketed_table,
-            "broadcast_probe_delta": probe_broadcast_delta,
-        }
     out = incremental_update(
         spark,
         base_checkpoint,
@@ -186,8 +177,7 @@ def fold_batch(
         cfg,
         checkpoint_dir=fold_dir,
         input_token=input_token,
-        broadcast_touched=relabel_broadcast_touched,
-        **probe_kw,
+        base_keys_table=bucketed_table,
     )
     if bucketed_table and not bucketed.fold_appended(fold_dir, bucketed_table):
         bucketed.append_bucketed_index(
@@ -268,8 +258,6 @@ def fold_micro_batch(state: StreamingFoldState, batch: DataFrame, epoch_id: int)
         bucketed_path=state.bucketed_path,
         bucketed_buckets=state.bucketed_buckets,
         ann_index_path=state.ann_index_path,
-        probe_broadcast_delta=state.probe_broadcast_delta,
-        relabel_broadcast_touched=state.relabel_broadcast_touched,
     )
     state._advance(fold_dir)
     cadence_hit = state.compact_every and state.total_folds % state.compact_every == 0

@@ -27,3 +27,23 @@ def tiny_tables():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("MEL_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def er_job_joins(spark):
+    """jobs/er_job.py's join conf: static auto-broadcast off, so AQE never
+    converts a join either and every broadcast in a plan comes from an
+    explicit hint. Restored after the test."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+@pytest.fixture()
+def fold_sort_merge(monkeypatch):
+    """Force the fold's sort-merge joins: no side fits a broadcast budget of
+    zero bytes."""
+    from mel_spark.operators import incremental
+
+    monkeypatch.setattr(incremental, "FOLD_BROADCAST_MAX_BYTES", 0)

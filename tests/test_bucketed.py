@@ -1,28 +1,40 @@
-"""Bucketed block-index: the shuffle-free probe path for broadcast-ceiling
-folds (sources/bucketed.py). Pins (1) output equivalence with the default
-broadcast probe, (2) the plan shape — the cold-key corpus scan reaches its
-sort-merge join with NO Exchange — and (3) the append lifecycle."""
+"""Bucketed block-index: the shuffle-free probe path for folds whose delta
+keys are past the broadcast bound (sources/bucketed.py). Pins (1) output
+equivalence with the broadcast probe, (2) the plan shape — the cold-key
+corpus scan reaches its sort-merge join with NO Exchange — and (3) the
+append lifecycle."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from mel_spark.operators import incremental
 from mel_spark.operators.incremental import probe_keys
 from mel_spark.sources.bucketed import (
     append_bucketed_index,
     read_bucketed_index,
     write_bucketed_index,
 )
+from plan_shape import BLOCK_INDEX_SCAN, ancestors, join_above, plan_nodes, scans
 
 
-def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+def _exchange_free_scans(plan: str, table: str) -> list[bool]:
+    """Per scan of ``table``: is it a bucketed scan that reaches its first
+    SortMergeJoin ancestor with no Exchange on the way? (The salted probe
+    scans the table twice — the cold branch must be exchange-free; the hot
+    branch re-keys on the salted hash, so its few rows legitimately
+    exchange.)"""
+    nodes = plan_nodes(plan)
     out = []
-    for ln in plan.splitlines():
-        i = 0
-        while ln[i : i + 3] in (":  ", "   ", ":- ", "+- "):
-            i += 3
-        txt = ln[i:].strip()
-        if txt:
-            out.append((i // 3, txt))
+    for i in scans(nodes, table):
+        path = []
+        for t in ancestors(nodes, i):
+            if "SortMergeJoin" in t:
+                break
+            path.append(t)
+        out.append(
+            "Bucketed: true" in nodes[i][1]
+            and not any(t.startswith("Exchange") for t in path)
+        )
     return out
 
 
@@ -93,40 +105,12 @@ def test_bucketed_cold_probe_corpus_scan_has_no_exchange(spark, key_sets, tmp_pa
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
-    nodes = _plan_nodes(plan)
-    bucketed_scans = [
-        i
-        for i, (_, t) in enumerate(nodes)
-        if ("FileScan" in t or "Scan parquet" in t) and tbl in t
-    ]
+    free = _exchange_free_scans(plan, tbl)
     # the salted probe scans the table twice: the cold anti-join branch and
     # the hot semi-join branch
-    assert len(bucketed_scans) >= 2, f"expected 2 scans of {tbl}:\n{plan}"
-    assert any("Bucketed: true" in nodes[i][1] for i in bucketed_scans), (
-        f"scan not bucketed (bucketing disabled?):\n{plan}"
-    )
-
-    def exchanges_before_smj(i: int) -> list[str]:
-        """Exchange nodes on the ancestor path from scan i up to (and
-        excluding) its first SortMergeJoin ancestor."""
-        depth = nodes[i][0]
-        hits = []
-        for j in range(i - 1, -1, -1):
-            d, t = nodes[j]
-            if d < depth:
-                depth = d
-                if "SortMergeJoin" in t:
-                    return hits
-                if t.startswith("Exchange"):
-                    hits.append(t)
-        return hits
-
-    per_scan = [exchanges_before_smj(i) for i in bucketed_scans]
-    # the COLD branch must be exchange-free; the hot branch re-keys on the
-    # salted hash, so its (few) rows legitimately exchange
-    assert any(h == [] for h in per_scan), (
-        f"no exchange-free corpus scan — bucketing not exploited: "
-        f"{per_scan}\n{plan}"
+    assert len(free) >= 2, f"expected 2 scans of {tbl}:\n{plan}"
+    assert any(free), (
+        f"no bucketed, exchange-free corpus scan — bucketing not exploited:\n{plan}"
     )
 
 
@@ -150,7 +134,7 @@ def test_append_bucketed_index_keeps_spec_and_content(spark, key_sets, tmp_path)
         append_bucketed_index(delta, "bidx_never_written")
 
 
-def test_ensure_bucketed_index_lifecycle(spark, tmp_path):
+def test_ensure_bucketed_index_lifecycle(spark, tmp_path, er_job_joins, monkeypatch):
     """The production lifecycle er_job drives (jobs/er_job.py --bucketed-index):
     create from the base chain → validate-noop → re-register on a fresh
     catalog from the external location → stay valid across a MAINTAINED fold
@@ -202,16 +186,22 @@ def test_ensure_bucketed_index_lifecycle(spark, tmp_path):
         ]
         assert spec and int(spec[0]["data_type"]) == 4
 
-        # maintained fold: probe via the table, append the delta, drop marker
+        # maintained fold: probe via the table (sort-merge: bound 0), append
+        # the delta, drop marker
         f1 = str(tmp_path / "f1")
-        incremental_update(
-            spark,
-            base,
-            repos.filter(h == 6),
-            checkpoint_dir=f1,
-            base_keys_table=tbl,
-            broadcast_probe_delta=False,
-        )
+        plans: dict[str, str] = {}
+        with monkeypatch.context() as m:
+            m.setattr(incremental, "FOLD_BROADCAST_MAX_BYTES", 0)
+            out = incremental_update(
+                spark,
+                base,
+                repos.filter(h == 6),
+                checkpoint_dir=f1,
+                plan_capture=plans,
+                base_keys_table=tbl,
+            )
+        assert out["joins"]["probe"] == "sort_merge"
+        assert join_above(plans["pairs_delta"], tbl, "Inner") == {"SortMergeJoin"}
         append_bucketed_index(
             CheckpointManager(f1)
             .read("block_index_delta", spark)
@@ -245,10 +235,14 @@ def test_ensure_bucketed_index_lifecycle(spark, tmp_path):
         )
 
 
-def test_fold_with_bucketed_index_equals_default_fold(spark, tmp_path):
-    """End-to-end: a fold probing a bucketed index table (delta NOT broadcast)
-    emits byte-identical clusters to the default chain-read + broadcast
-    probe."""
+def test_fold_with_bucketed_index_equals_default_fold(
+    spark, tmp_path, er_job_joins, monkeypatch
+):
+    """End-to-end, under er_job's join conf: a fold whose delta keys are past
+    the broadcast bound (forced: bound 0) probes the bucketed index table
+    sort-merge with no Exchange above the cold corpus scan, and emits
+    byte-identical clusters to the chain-read fold at the real bound, whose
+    probe broadcasts the delta keys."""
     from mel_spark.datagen import GenConfig, generate_repos
     from mel_spark.operators.incremental import incremental_update, read_stage_chain
     from mel_spark.pipeline import run_pipeline
@@ -260,11 +254,13 @@ def test_fold_with_bucketed_index_equals_default_fold(spark, tmp_path):
     run_pipeline(spark, repos.filter(in_a), base)
 
     batch = repos.filter(~in_a)
-    want = _canon(
-        incremental_update(spark, base, batch)["clusters"].select(
-            "mention_id", "cluster_id"
-        )
-    )
+    plans: dict[str, str] = {}
+    default = incremental_update(spark, base, batch, plan_capture=plans)
+    assert default["joins"]["probe"] == "broadcast"
+    assert join_above(plans["pairs_delta"], BLOCK_INDEX_SCAN, "Inner") == {
+        "BroadcastHashJoin"
+    }
+    want = _canon(default["clusters"].select("mention_id", "cluster_id"))
 
     tbl = "bidx_fold"
     write_bucketed_index(
@@ -273,16 +269,15 @@ def test_fold_with_bucketed_index_equals_default_fold(spark, tmp_path):
         n_buckets=8,
         path=str(tmp_path / "bidx"),
     )
+    monkeypatch.setattr(incremental, "FOLD_BROADCAST_MAX_BYTES", 0)
     try:
-        got = _canon(
-            incremental_update(
-                spark,
-                base,
-                batch,
-                base_keys_table=tbl,
-                broadcast_probe_delta=False,
-            )["clusters"].select("mention_id", "cluster_id")
+        out = incremental_update(
+            spark, base, batch, plan_capture=plans, base_keys_table=tbl
         )
+        got = _canon(out["clusters"].select("mention_id", "cluster_id"))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    assert out["joins"]["probe"] == "sort_merge"
+    assert join_above(plans["pairs_delta"], tbl, "Inner") == {"SortMergeJoin"}
+    assert any(_exchange_free_scans(plans["pairs_delta"], tbl))
     assert got == want

@@ -9,13 +9,13 @@ base ∪ batch, computed in the pytest session.
 """
 
 import hashlib
-import importlib.util
 import json
 import os
 import subprocess
 import sys
 
 import pandas as pd
+import pyarrow.dataset as ds
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -26,11 +26,15 @@ FOLD_STAGES = {"ingest_delta", "embed_delta", "block_index_delta", "block_sizes_
                "pairs_delta", "clusters_delta"}
 
 
-def _job(*args: str) -> dict:
+def _run(*args: str) -> subprocess.CompletedProcess:
     env = dict(os.environ,
                PYTHONPATH=os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")])))
-    r = subprocess.run([sys.executable, JOB, *args], capture_output=True, text=True,
-                       env=env, timeout=600)
+    return subprocess.run([sys.executable, JOB, *args], capture_output=True, text=True,
+                          env=env, timeout=600)
+
+
+def _job(*args: str) -> dict:
+    r = _run(*args)
     assert r.returncode == 0, r.stderr[-4000:]
     return json.loads(r.stdout.strip().splitlines()[-1])
 
@@ -44,7 +48,8 @@ def _assignment(path: str) -> pd.DataFrame:
 def runs(tiny_tables, tmp_path_factory):
     """One full run over 90% of the tiny corpus, then one fold of the other
     10% (split by mention-id hash), both keeping the bucketed probe table and
-    the ANN index; returns the two JSON lines and the dirs."""
+    the ANN index and writing survivors; returns the two JSON lines and the
+    dirs."""
     from mel_spark.datagen import write_parquet
 
     tmp = tmp_path_factory.mktemp("er_job")
@@ -56,12 +61,12 @@ def runs(tiny_tables, tmp_path_factory):
     write_parquet({"repos": repos[~in_batch], "reference_clusters": gold[~in_batch]}, base)
     write_parquet({"repos": repos[in_batch], "reference_clusters": gold[in_batch]}, batch)
     index = ["--bucketed-index", "er_job_bidx", "--bucketed-index-path", str(tmp / "bidx"),
-             "--bucketed-index-buckets", "4", "--ann-index-path", str(tmp / "ann")]
+             "--bucketed-index-buckets", "4", "--ann-index-path", str(tmp / "ann"),
+             "--emit-survivors"]
     run = _job("--input", base, "--checkpoint", str(tmp / "ckpt"),
                "--output", str(tmp / "out"), *index)
     fold = _job("--update-base", str(tmp / "ckpt"), "--input", batch,
-                "--checkpoint", str(tmp / "fold"), "--output", str(tmp / "fold-out"),
-                "--emit-survivors", *index)
+                "--checkpoint", str(tmp / "fold"), "--output", str(tmp / "fold-out"), *index)
     return {"run": run, "fold": fold, "tmp": tmp, "repos": repos, "n_batch": int(in_batch.sum())}
 
 
@@ -69,13 +74,14 @@ def test_full_run_reports_its_metrics(runs):
     m = runs["run"]
     assert set(m) == {"rows", "blocks", "candidate_pairs", "matches", "clusters",
                       "elapsed_sec", "candidate_pairs_per_sec", "stage_sec",
-                      "pairs_stage_pairs_per_sec", "ann_index"} | F1_KEYS
+                      "pairs_stage_pairs_per_sec", "survivors", "ann_index"} | F1_KEYS
     assert set(m["stage_sec"]) == RUN_STAGES
     assert m["rows"] == len(runs["repos"]) - runs["n_batch"]
     assert m["f1"] == 1.0
     assert m["ann_index"]["epochs"] == 1
     out = _assignment(str(runs["tmp"] / "out" / "clusters.parquet"))
     assert len(out) == m["rows"] and out["cluster_id"].nunique() == m["clusters"]
+    assert m["survivors"] == m["clusters"]
 
 
 def test_fold_equals_from_scratch_run(runs, spark):
@@ -83,9 +89,13 @@ def test_fold_equals_from_scratch_run(runs, spark):
     from mel_spark.sources.bucketed import fold_appended
 
     m = runs["fold"]
-    assert {"mode", "new_mentions", "total_mentions", "new_matches", "clusters",
-            "elapsed_sec", "stage_sec", "survivors", "ann_index"} | F1_KEYS == set(m)
+    assert {"mode", "new_mentions", "total_mentions", "new_matches", "fold_joins",
+            "clusters", "elapsed_sec", "stage_sec", "survivors", "ann_index"} | F1_KEYS == set(m)
     assert m["mode"] == "incremental"
+    # a 30-file batch is far inside the fold's broadcast bound
+    assert m["fold_joins"] == {
+        "probe": "broadcast", "relabel": "broadcast", "override": "broadcast"
+    }
     assert m["new_mentions"] == runs["n_batch"]
     assert m["total_mentions"] == len(runs["repos"])
     assert m["f1"] == 1.0
@@ -112,15 +122,28 @@ def test_fold_stage_sec_reports_every_delta_stage(runs):
     assert set(runs["fold"]["stage_sec"]) == FOLD_STAGES
 
 
-def test_probe_sort_merge_needs_the_bucketed_table(tmp_path):
-    """Without --bucketed-index the probe's corpus side is the chain read, so
-    a sort-merge probe would shuffle the corpus key stream: argparse rejects
-    the combination before any session starts."""
-    spec = importlib.util.spec_from_file_location("er_job", JOB)
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
-    with pytest.raises(SystemExit) as e:
-        job.main(["--update-base", str(tmp_path / "base"), "--synthesize", "10",
-                  "--checkpoint", str(tmp_path / "c"), "--output", str(tmp_path / "o"),
-                  "--probe-sort-merge"])
-    assert e.value.code == 2
+def test_both_modes_write_one_schema(runs):
+    """A full run's outputs carry no checkpoint lineage columns (a wall-clock
+    _run_id among them): both modes write the same clusters and survivors
+    schema."""
+    for name in ("clusters.parquet", "survivors.parquet"):
+        run = ds.dataset(str(runs["tmp"] / "out" / name)).schema
+        fold = ds.dataset(str(runs["tmp"] / "fold-out" / name)).schema
+        assert run.remove_metadata() == fold.remove_metadata(), name
+        assert "_run_id" not in run.names, name
+
+
+def test_unreadable_gold_fails_the_job(tmp_path, tiny_tables):
+    """Only an ABSENT reference_clusters.parquet means "no gold": a present
+    but unreadable one fails the job before any stage runs, instead of
+    silently dropping F1."""
+    from mel_spark.datagen import write_parquet
+
+    inp = tmp_path / "in"
+    write_parquet({"repos": tiny_tables["repos"].head(20)}, str(inp))
+    (inp / "reference_clusters.parquet").write_bytes(b"not a parquet file")
+    r = _run("--input", str(inp), "--checkpoint", str(tmp_path / "ckpt"),
+             "--output", str(tmp_path / "out"))
+    assert r.returncode != 0
+    assert "reference_clusters.parquet" in r.stderr
+    assert not (tmp_path / "ckpt" / "ingest._MARKER.json").exists()

@@ -19,6 +19,14 @@ from mel_spark.operators.incremental import (
     merge_components,
 )
 from mel_spark.pipeline import ERConfig, run_pipeline
+from plan_shape import (
+    BLOCK_INDEX_SCAN,
+    CLUSTERS_SCAN,
+    ancestors,
+    join_above,
+    plan_nodes,
+    scans,
+)
 
 CLUSTER_COLS = ["mention_id", "cluster_id"]
 
@@ -337,20 +345,6 @@ def test_compact_pre_block_index_chain(spark, tmp_path):
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
 
 
-def _plan_nodes(plan: str) -> list[tuple[int, str]]:
-    """Parse Spark's physical-plan tree string into (depth, text) nodes —
-    each tree level adds one 3-char prefix group (':  ', '   ', ':- ', '+- ')."""
-    out = []
-    for ln in plan.splitlines():
-        i = 0
-        while ln[i : i + 3] in (":  ", "   ", ":- ", "+- "):
-            i += 3
-        txt = ln[i:].strip()
-        if txt:
-            out.append((i // 3, txt))
-    return out
-
-
 def test_known_csid_filter_plan_no_corpus_broadcast(spark, tmp_path):
     """The fold's known-csid prefilter must NEVER broadcast the corpus side:
     in the physical plan, the base feature scan's nearest exchange/join
@@ -372,23 +366,18 @@ def test_known_csid_filter_plan_no_corpus_broadcast(spark, tmp_path):
     assert [r["csid"] for r in out.collect()] == [9999999]
 
     plan = out._jdf.queryExecution().executedPlan().toString()
-    nodes = _plan_nodes(plan)
+    nodes = plan_nodes(plan)
     # the ONLY parquet scan in this query is the corpus (feats) side — the
     # batch is a local relation
-    feats_scans = [i for i, (_, t) in enumerate(nodes) if "Scan parquet" in t or "FileScan" in t]
+    feats_scans = scans(nodes)
     assert feats_scans, f"no feats scan found in plan:\n{plan}"
     for i in feats_scans:
-        depth = nodes[i][0]
-        hit = None
-        # walk ancestors: the NEAREST exchange-or-join above the corpus scan
-        # must be the LeftSemi prefilter, never a BroadcastExchange
-        for j in range(i - 1, -1, -1):
-            d, t = nodes[j]
-            if d < depth:
-                depth = d
-                if "BroadcastExchange" in t or "Join" in t:
-                    hit = t
-                    break
+        # the NEAREST exchange-or-join above the corpus scan must be the
+        # LeftSemi prefilter, never a BroadcastExchange
+        hit = next(
+            (t for t in ancestors(nodes, i) if "BroadcastExchange" in t or "Join" in t),
+            None,
+        )
         assert hit is not None and "LeftSemi" in hit, (
             f"corpus scan's nearest exchange/join ancestor is {hit!r}:\n{plan}"
         )
@@ -505,7 +494,7 @@ def test_probe_keys_hot_set_counts_base_plus_delta(spark):
     assert 0 < salted < raw  # the aggregate-hot key WAS salted
 
 
-def test_fold_clusters_plan_scans_corpus_never_shuffles_it(spark, tmp_path):
+def test_fold_clusters_plan_scans_corpus_never_shuffles_it(spark, tmp_path, er_job_joins):
     """Whole-fold shuffle discipline: in the physical plan of the fold's
     updated assignment, every parquet scan of a BASE checkpoint table must
     feed a broadcast join as the STREAMED side — its nearest exchange/join
@@ -513,44 +502,37 @@ def test_fold_clusters_plan_scans_corpus_never_shuffles_it(spark, tmp_path):
     (corpus shuffled) and never a `BroadcastExchange` (corpus collected to
     the driver). er_job runs with auto-broadcast disabled, so every
     batch-sized build side must carry an explicit hint — this test pins
-    that property for the fold end-to-end, not just known_csid_filter."""
+    that property for the fold end-to-end, not just known_csid_filter, with
+    every broadcast gate deciding "broadcast" at the real bound. The
+    relabel's two measured frames are local checkpoints inside
+    clusters_delta, so their corpus scans are audited in their own captured
+    plans."""
     tables = generate_repos(GenConfig(n_files=300, seed=31))
     repos = spark.createDataFrame(tables["repos"])
     in_a = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10)) < 7
     base = str(tmp_path / "base")
     run_pipeline(spark, repos.filter(in_a), base)
 
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     plans: dict[str, str] = {}
-    try:
-        # no fold checkpoint dir: delta stages become lazy localCheckpoints,
-        # so in each CAPTURED stage plan the only parquet scans are the
-        # base-corpus tables (earlier deltas appear as Scan ExistingRDD)
-        incremental_update(spark, base, repos.filter(~in_a), plan_capture=plans)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    # no fold checkpoint dir: delta stages become lazy localCheckpoints,
+    # so in each CAPTURED stage plan the only parquet scans are the
+    # base-corpus tables (earlier deltas appear as Scan ExistingRDD)
+    out = incremental_update(spark, base, repos.filter(~in_a), plan_capture=plans)
+    assert out["joins"] == {
+        "probe": "broadcast", "relabel": "broadcast", "override": "broadcast"
+    }
 
-    assert "clusters_delta" in plans and "clusters_full" in plans
+    assert {"mentions_touch", "touched_members", "clusters_delta",
+            "clusters_full"} <= set(plans)
     audited_scans = 0
     for stage, plan in plans.items():
-        nodes = _plan_nodes(plan)
-        scans = [
-            i
-            for i, (_, t) in enumerate(nodes)
-            if "Scan parquet" in t or "FileScan" in t
-        ]
-        audited_scans += len(scans)
-        for i in scans:
-            depth = nodes[i][0]
-            hit = None
-            for j in range(i - 1, -1, -1):
-                d, t = nodes[j]
-                if d < depth:
-                    depth = d
-                    if "Exchange" in t or "Join" in t:
-                        hit = t
-                        break
+        nodes = plan_nodes(plan)
+        corpus_scans = scans(nodes)
+        audited_scans += len(corpus_scans)
+        for i in corpus_scans:
+            hit = next(
+                (t for t in ancestors(nodes, i) if "Exchange" in t or "Join" in t), None
+            )
             assert hit is not None and "Join" in hit and "Broadcast" in hit, (
                 f"[{stage}] corpus scan {nodes[i][1]!r} nearest exchange/join "
                 f"ancestor is {hit!r} — corpus must stream through a "
@@ -590,26 +572,98 @@ def test_incremental_equals_full_run_randomized(
     _assert_same_clusters(inc["clusters"], full["clusters"])
 
 
-def test_fold_sort_merge_relabel_equals_broadcast(spark, tmp_path):
-    """broadcast_touched=False (the mega-cluster escape hatch: relabel build
-    sides join sort-merge instead of broadcasting touched-cluster membership)
-    must be byte-identical to the default broadcast path AND to a
-    from-scratch run — only the physical join strategy may differ."""
+def test_fold_sort_merge_relabel_equals_broadcast(
+    spark, tmp_path, er_job_joins, fold_sort_merge
+):
+    """Past the broadcast bound (forced: budget 0) — the mega-cluster case,
+    where touched-cluster membership outgrows any broadcast — the relabel
+    build sides and the override anti-join join sort-merge, while the probe
+    over the chain read still broadcasts (a sort-merge probe there would
+    shuffle the corpus key stream). Under er_job's join conf the captured
+    plans show it, and the assignment stays byte-identical to a from-scratch
+    run (which the broadcast path is pinned to elsewhere): only the join
+    strategy moves."""
     tables = generate_repos(GenConfig(n_files=400, seed=17))
     repos = spark.createDataFrame(tables["repos"])
     in_a = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10)) < 7
     batch_a, batch_b = repos.filter(in_a), repos.filter(~in_a)
 
     full = run_pipeline(spark, repos, str(tmp_path / "full"))
-    run_pipeline(spark, batch_a, str(tmp_path / "base"))
-    inc_sm = incremental_update(
-        spark,
-        str(tmp_path / "base"),
-        batch_b,
-        checkpoint_dir=str(tmp_path / "inc_sm"),
-        broadcast_touched=False,
-    )
+    base = str(tmp_path / "base")
+    run_pipeline(spark, batch_a, base)
+    plans: dict[str, str] = {}
+    # no fold checkpoint dir: the delta stages are local checkpoints, so the
+    # only parquet scans in the captured plans are the corpus tables'
+    inc_sm = incremental_update(spark, base, batch_b, plan_capture=plans)
+    assert inc_sm["joins"] == {
+        "probe": "broadcast", "relabel": "sort_merge", "override": "sort_merge"
+    }
+    assert join_above(plans["pairs_delta"], BLOCK_INDEX_SCAN, "Inner") == {
+        "BroadcastHashJoin"
+    }
+    assert "BroadcastHashJoin" not in plans["clusters_delta"]
+    assert join_above(plans["clusters_full"], CLUSTERS_SCAN, "LeftAnti") == {
+        "SortMergeJoin"
+    }
     _assert_same_clusters(inc_sm["clusters"], full["clusters"])
+
+
+def test_one_delta_key_over_the_bound_probes_sort_merge(
+    spark, tmp_path, er_job_joins, monkeypatch
+):
+    """The bound is inclusive: over the bucketed block index, a fold whose
+    delta keys fill the broadcast budget exactly broadcasts them into the
+    probe, one key more and the probe joins sort-merge — with the same
+    clusters. A resumed fold measures nothing for the stages it skips (probe
+    and relabel None), and decides its override join from the same delta a
+    fresh fold measures."""
+    from mel_spark.operators import incremental
+    from mel_spark.operators.incremental import read_stage_chain
+    from mel_spark.sources.bucketed import write_bucketed_index
+    from mel_spark.sources.checkpoint import CheckpointManager
+
+    tables = generate_repos(GenConfig(n_files=150, seed=5))
+    repos = spark.createDataFrame(tables["repos"])
+    in_a = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10)) < 7
+    base, fold = str(tmp_path / "base"), str(tmp_path / "inc")
+    batch = repos.filter(~in_a)
+    run_pipeline(spark, repos.filter(in_a), base)
+    fresh = incremental_update(spark, base, batch, checkpoint_dir=fold)
+    n_keys = CheckpointManager(fold).counters("block_index_delta")["rows"]
+    assert n_keys > 1
+
+    tbl = "bidx_at_bound"
+    write_bucketed_index(
+        read_stage_chain(spark, base, "block_index"), tbl, n_buckets=4,
+        path=str(tmp_path / "bidx"),
+    )
+    try:
+        for n_fit, kind, strategy in (
+            (n_keys, "broadcast", "BroadcastHashJoin"),
+            (n_keys - 1, "sort_merge", "SortMergeJoin"),
+        ):
+            with monkeypatch.context() as m:
+                m.setattr(
+                    incremental, "FOLD_BROADCAST_MAX_BYTES",
+                    n_fit * incremental._KEY_ROW_BYTES,
+                )
+                plans: dict[str, str] = {}
+                out = incremental_update(
+                    spark, base, batch, plan_capture=plans, base_keys_table=tbl
+                )
+                assert out["joins"]["probe"] == kind
+                assert join_above(plans["pairs_delta"], tbl, "Inner") == {strategy}
+                _assert_same_clusters(out["clusters"], fresh["clusters"])
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+    assert fresh["joins"]["override"] == "broadcast"
+    resumed = incremental_update(spark, base, batch, checkpoint_dir=fold)
+    assert resumed["joins"] == {"probe": None, "relabel": None, "override": "broadcast"}
+    monkeypatch.setattr(incremental, "FOLD_BROADCAST_MAX_BYTES", 0)
+    resumed = incremental_update(spark, base, batch, checkpoint_dir=fold)
+    assert resumed["joins"]["override"] == "sort_merge"
+    _assert_same_clusters(resumed["clusters"], fresh["clusters"])
 
 
 def test_fold_crash_resume_skips_green_delta_stages(spark, tmp_path):

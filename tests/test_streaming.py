@@ -354,15 +354,33 @@ def test_diverged_offsets_and_head_refuse_to_fold(spark, tmp_path):
     assert read_clusters_chain(spark, st2.current_base()).count() == repos.count()
 
 
-def test_streaming_fold_maintains_bucketed_index(spark, tmp_path):
+def test_streaming_fold_maintains_bucketed_index(
+    spark, tmp_path, er_job_joins, fold_sort_merge, monkeypatch
+):
     """Streaming deployment of the bucketed probe table (sources/bucketed.py):
-    each epoch probes the table (sort-merge, delta NOT broadcast), appends its
-    delta keys exactly once, and a compaction epoch RE-ANCHORS the table's
-    meta at the flattened chain WITHOUT rewriting its (identical) data —
-    after every epoch the table content equals the chain's block index."""
+    each epoch probes the table (sort-merge: bound 0, so the delta keys are
+    past the broadcast bound), appends its delta keys exactly once, and a
+    compaction epoch RE-ANCHORS the table's meta at the flattened chain
+    WITHOUT rewriting its (identical) data — after every epoch the table
+    content equals the chain's block index."""
     import os
 
     from mel_spark.pipeline import run_pipeline
+    from mel_spark.streaming import er_stream
+    from plan_shape import join_above
+
+    # every epoch's fold reports a sort-merge probe over the table
+    folds = []
+    fold = er_stream.incremental_update
+
+    def capturing(*args, **kwargs):
+        plans: dict[str, str] = {}
+        out = fold(*args, plan_capture=plans, **kwargs)
+        probe = join_above(plans["pairs_delta"], tbl, "Inner")
+        folds.append((out["joins"]["probe"], probe))
+        return out
+
+    monkeypatch.setattr(er_stream, "incremental_update", capturing)
     from mel_spark.streaming import StreamingFoldState, start_er_stream
     from mel_spark.operators.incremental import read_stage_chain
     from mel_spark.sources.bucketed import (
@@ -391,7 +409,6 @@ def test_streaming_fold_maintains_bucketed_index(spark, tmp_path):
             bucketed_table=tbl,
             bucketed_path=loc,
             bucketed_buckets=4,
-            probe_broadcast_delta=False,
         )
         q = start_er_stream(stream, st, offsets_dir=str(tmp_path / "off"), trigger_once=True)
         q.awaitTermination(300)
@@ -464,6 +481,7 @@ def test_streaming_fold_maintains_bucketed_index(spark, tmp_path):
                 f"second compaction rewrote bucketed data file {f}"
             )
         assert ensure_bucketed_index(spark, tbl, head2, n_buckets=4, path=loc) is False
+        assert folds == [("sort_merge", {"SortMergeJoin"})] * 4
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
