@@ -13,9 +13,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
+from pyspark.sql.types import ArrayType, BinaryType, FloatType
 
 EMB_DIM = 64
 
@@ -317,8 +318,6 @@ def binary_matrix(arr, dtype) -> np.ndarray:
     """(batch, width) matrix of ``dtype`` viewed straight off a binary Arrow
     column of equal-width packed rows: offsets buffer + one values buffer,
     zero per-row objects."""
-    import pyarrow as pa
-
     n = len(arr)
     if n == 0:
         return np.empty((0, 0), dtype)
@@ -335,8 +334,6 @@ def binary_matrix(arr, dtype) -> np.ndarray:
 def packed_binary(m: np.ndarray):
     """Binary Arrow array with row i = ``m[i]``'s raw bytes — the inverse of
     :func:`binary_matrix`, built from two buffers with no per-row objects."""
-    import pyarrow as pa
-
     n, width = m.shape[0], m.shape[1] * m.itemsize
     off = np.arange(n + 1, dtype=np.int32) * width
     return pa.Array.from_buffers(
@@ -350,8 +347,6 @@ def emb_arrow(m: np.ndarray, emb_format: str):
     "f16" packs each row as little-endian fp16 binary (cast straight from
     ``m``'s dtype), "f32" stores array<float>. The inverse of
     :func:`emb_matrix_arrow`."""
-    import pyarrow as pa
-
     if emb_format == "f16":
         return packed_binary(m.astype("<f2"))
     off = np.arange(m.shape[0] + 1, dtype=np.int32) * m.shape[1]
@@ -367,36 +362,24 @@ def emb_matrix_arrow(arr) -> np.ndarray:
     ``<f2`` by :func:`binary_matrix`) and array<float> (``flatten()`` +
     reshape). Rows must be non-null and equal-width (the featurizer
     invariant)."""
-    import pyarrow as pa
-
     if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
         return binary_matrix(arr, "<f2").astype(np.float64)
     flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     return flat.reshape(len(arr), -1) if len(arr) else np.empty((0, 0), np.float64)
 
 
-def unpack_f16_udf():
-    """Arrow-batched decode fp16 blob → array<float>, for the (off-hot-path)
-    consumers that need a real array column: Catalyst cosine scoring and
-    hyperplane blocking over a f16-stored embed checkpoint."""
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _unpack(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            yield pd.Series(
-                [np.frombuffer(v, dtype="<f2").astype(np.float32) for v in s]
-            )
-
-    return _unpack
+def _f16_to_f32(col: pa.Array) -> pa.Array:
+    """One Arrow batch of fp16-packed binary embeddings as array<float>:
+    the :func:`binary_matrix` view, packed back by :func:`emb_arrow` — no
+    per-row objects."""
+    return emb_arrow(binary_matrix(col, "<f2"), "f32")
 
 
 def ensure_emb_array(df, emb_col: str = "emb"):
-    """Return ``df`` with ``emb_col`` as array<float>, decoding in one Arrow
-    pass when the column is fp16-packed binary; identity otherwise. Column
+    """Return ``df`` with ``emb_col`` as array<float>, decoding fp16-packed
+    binary in one vectorized Arrow UDF pass; identity otherwise. Column
     pruning drops the decode entirely for consumers that never read emb."""
-    from pyspark.sql.types import BinaryType
-
     if isinstance(df.schema[emb_col].dataType, BinaryType):
-        return df.withColumn(emb_col, unpack_f16_udf()(F.col(emb_col)))
+        decode = F.arrow_udf(_f16_to_f32, ArrayType(FloatType()))
+        return df.withColumn(emb_col, decode(F.col(emb_col)))
     return df
-

@@ -35,10 +35,11 @@ tests/test_ann_index.py). The probe follows the build mode recorded in
 * ``fit="numpy"`` — ``train_ivf_centroids``'s vectorized Lloyd; the probe is
   one matmul + argpartition per Arrow batch, the production path.
 
-This module holds no NumPy kernel of its own: cell assignment, the
-vectorized probe, the int8/fp16 list encoding and the code-cosine pass are
-the mapInArrow kernels of operators/similarity.py, the same ones the
-in-flight searchers run.
+This module holds no search step of its own. The fit, cell assignment and
+probe are the fit's ``similarity._QUANTIZERS`` entry, the same ones the
+in-flight IVFs run; the int8/fp16 list encoding, the code-cosine pass, the
+reorder (``_reorder``) and the exact re-rank (``_exact_topk``) are
+operators/similarity.py's shared search tail.
 
 The build is commit-marked: ``_META.json`` is written LAST, and the loader
 refuses an index without it — a crashed half-build reads as "not built",
@@ -53,23 +54,15 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    StructField,
-    StructType,
-)
 
 from mel_spark.functions import vectors as V
 from mel_spark.operators.similarity import (
-    _assign_cells,
+    _QUANTIZERS,
     _code_cosine,
+    _exact_topk,
     _int8_code_rows,
-    _ivf_assign_relational,
-    _probe_cells,
-    fit_ivf_centroids_relational,
-    train_ivf_centroids,
+    _reorder,
+    _side,
 )
 
 _META = "_META.json"
@@ -159,37 +152,20 @@ def build_ivf_index(
         )
     fit_input = src.select(F.col("id").alias(i_id), F.col("_emb").alias(i_emb))
 
-    if fit == "relational":
-        cents_df = fit_ivf_centroids_relational(
-            fit_input, n_cells, i_id, i_emb, iterations, seed
-        )
-        assigned = _ivf_assign_relational(
-            src.select(F.col("id").alias("_id"), "_emb"), cents_df, "id"
-        )
-    else:
-        cents = train_ivf_centroids(
-            fit_input, n_cells, i_id, i_emb, iterations, seed
-        )
-        assigned = _assign_cells(
-            src.select(F.col("id").alias("_id"), "_emb"), cents
-        ).select(F.col("_id").alias("id"), F.col("_cell").alias("cell"))
+    cents = _QUANTIZERS[fit].fit(fit_input, n_cells, i_id, i_emb, iterations, seed)
+    if fit == "numpy":
         cents_df = spark.createDataFrame(
             [(int(c), [float(x) for x in row]) for c, row in enumerate(cents)],
-            schema=StructType(
-                [
-                    StructField("cell", IntegerType()),
-                    StructField("cent", ArrayType(DoubleType())),
-                ]
-            ),
+            schema="cell int, cent array<double>",
         )
+    else:
+        cents_df = cents
 
     dim_row = src.select(F.size("_emb").alias("d")).first()
     if dim_row is None:
         raise ValueError("build_ivf_index: empty index input")
     dim = int(dim_row["d"])
-    rows = src.join(assigned, "id").select(
-        "id", "_emb", F.col("cell").cast("int").alias("cell")
-    )
+    rows = _assigned_rows(src, fit, cents)
 
     # rebuild-over-existing: invalidate FIRST (a crash mid-build must read
     # as "not built"), then clear old lists — epoch files are written with
@@ -222,6 +198,26 @@ def build_ivf_index(
         meta["epoch_tokens"] = {"0": token}
     _commit_meta(path, meta)
     return meta
+
+
+def _stored_centroids(spark: SparkSession, path: str, fit: str):
+    """The index's centroids in its fit's own form: the (cell, cent)
+    DataFrame for "relational", the float32 matrix ``train_ivf_centroids``
+    returned for "numpy" (stored as the exact doubles of those floats)."""
+    cents = spark.read.parquet(os.path.join(path, _CENTROIDS))
+    if fit == "relational":
+        return cents
+    rows = cents.orderBy("cell").collect()  # ≤ n_cells: O(√N)
+    return np.array([r["cent"] for r in rows], dtype=np.float32)
+
+
+def _assigned_rows(src: DataFrame, fit: str, cents) -> DataFrame:
+    """(id, _emb, cell) for vectors (id, _emb): the fit's one cell
+    assignment — the same pure function for the build and every append."""
+    assigned = _QUANTIZERS[fit].assign(src.withColumnRenamed("id", "_id"), cents)
+    return src.join(assigned.withColumnRenamed("_id", "id"), "id").select(
+        "id", "_emb", F.col("cell").cast("int").alias("cell")
+    )
 
 
 def _write_list_epoch(
@@ -335,23 +331,8 @@ def append_to_ivf_index(
     lists_path = os.path.join(path, _LISTS)
     _clean_uncommitted_epochs(lists_path, meta["epochs"])
 
-    cents_df = spark.read.parquet(os.path.join(path, _CENTROIDS))
-    if meta["fit"] == "relational":
-        assigned = _ivf_assign_relational(
-            src.select(F.col("id").alias("_id"), "_emb"), cents_df, "id"
-        )
-    else:
-        c_rows = cents_df.orderBy("cell").collect()  # ≤ n_cells: O(√N)
-        C = np.array([r["cent"] for r in c_rows], dtype=np.float64)
-        # train_ivf_centroids returns L2-normalized float32 — reproduce the
-        # exact dtype the build's _assign_cells saw
-        assigned = _assign_cells(
-            src.select(F.col("id").alias("_id"), "_emb"), C.astype(np.float32)
-        ).select(F.col("_id").alias("id"), F.col("_cell").alias("cell"))
-
-    rows = src.join(assigned, "id").select(
-        "id", "_emb", F.col("cell").cast("int").alias("cell")
-    )
+    cents = _stored_centroids(spark, path, meta["fit"])
+    rows = _assigned_rows(src, meta["fit"], cents)
     epoch = max(meta["epochs"]) + 1
     n_new = _write_list_epoch(rows, lists_path, meta["emb_format"], epoch)
 
@@ -429,24 +410,22 @@ def ivf_index_topk(
 ) -> DataFrame:
     """Top-k over a persisted index: (query_id, neighbor_id, cos, rank).
 
-    The probe follows the index's ``fit``. A ``fit="relational"`` index is
-    probed and re-ranked entirely in Catalyst (HALF_UP-6dp cosine); with
-    f32 storage it is bit-identical to ``ivf_topk_relational`` and
-    hash-matches the same DuckDB oracle. A ``fit="numpy"`` index is probed
-    by the shared NumPy kernel, one matmul + argpartition per Arrow batch
-    against the broadcast centroid matrix (production).
+    The probe is the index ``fit``'s quantizer probe and the re-rank the
+    in-flight searchers' exact tail (HALF_UP-6dp cosine, top-k per query).
+    A ``fit="relational"`` index is probed in Catalyst; with f32 storage it
+    is bit-identical to ``ivf_topk_relational`` and hash-matches the same
+    DuckDB oracle. A ``fit="numpy"`` index is probed by the shared NumPy
+    kernel, one matmul + argpartition per Arrow batch against the broadcast
+    centroid matrix (production).
 
     ``quantized=True`` adds the asymmetric-hashing first pass over the
     STORED int8 codes: candidates move ``dim`` bytes each, the top
     ``reorder`` per query survive to the exact fp re-score
     (scann_searcher.py:21-49 semantics)."""
     meta = read_index_meta(path)
-    # the NumPy probe decodes either emb storage itself; the Catalyst
-    # probe and the exact re-score need array<float>
-    vecs_q = queries.select(
-        F.col(q_id).cast("long").alias("query_id"), F.col(q_emb).alias("_emb")
+    queries = V.ensure_emb_array(
+        queries.withColumn(q_id, F.col(q_id).cast("long")), q_emb
     )
-    queries = V.ensure_emb_array(queries, q_emb)
     dim_row = queries.select(F.size(q_emb).alias("d")).first()
     if dim_row is None:
         return spark.createDataFrame(
@@ -458,32 +437,16 @@ def ivf_index_topk(
             f"query dim {dim_row['d']} != index dim {meta['dim']} at {path!r}"
         )
 
-    cents_df = spark.read.parquet(os.path.join(path, _CENTROIDS))
-    if meta["fit"] == "relational":
-        w_probe = Window.partitionBy("query_id").orderBy(
-            F.desc("_cos"), F.asc("cell")
-        )
-        q_cells = (
-            V.ensure_emb_array(vecs_q, "_emb")
-            .crossJoin(F.broadcast(cents_df))
-            .withColumn("_cos", V.cosine(F.col("_emb"), F.col("cent")))
-            .withColumn("_rn", F.row_number().over(w_probe))
-            .filter(F.col("_rn") <= nprobe)
-            .select("query_id", "cell")
-        )
-    else:
-        rows = cents_df.orderBy("cell").collect()  # ≤ n_cells rows: O(√N)
-        C = np.array([r["cent"] for r in rows], dtype=np.float64)
-        q_cells = _probe_cells(vecs_q, C, nprobe)
-
     # the probe assignment feeds TWO consumers — the driver-side distinct
-    # below and the candidate join — so persist it: without this the probe
-    # (a mapInArrow matmul or a crossJoin+window) executes twice. Tiny
-    # table: nprobe rows per query, two ints each. Freed by the
-    # ContextCleaner once the returned plan is garbage-collected; the
-    # empty-probe early return unpersists explicitly since nothing
-    # downstream references it.
-    q_cells = q_cells.persist()
+    # below and the candidate join — so it is computed once, as a lazy
+    # local checkpoint (a mapInArrow matmul or a crossJoin+window would
+    # otherwise run twice). Tiny table: nprobe rows per query, two ints
+    # each; Spark reclaims it once the returned plan is garbage-collected.
+    q_cells = _QUANTIZERS[meta["fit"]].probe(
+        queries.select(F.col(q_id).alias("query_id"), F.col(q_emb).alias("_emb")),
+        _stored_centroids(spark, path, meta["fit"]),
+        nprobe,
+    ).localCheckpoint(eager=False)
 
     # static partition pruning: the distinct probed cells (≤ n_cells ints)
     # come to the driver; the isin() below reaches the scan as a
@@ -492,7 +455,6 @@ def ivf_index_topk(
         r["cell"] for r in q_cells.select("cell").distinct().collect()
     )
     if not probed:
-        q_cells.unpersist()
         return spark.createDataFrame(
             [], schema="query_id long, neighbor_id long, cos double, rank int"
         )
@@ -511,37 +473,25 @@ def ivf_index_topk(
     )
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    q_side = queries.select(
-        F.col(q_id).cast("long").alias("query_id"), F.col(q_emb).alias("q_emb")
-    )
+    q_side = _side(queries, q_id, q_emb, "q")
 
     if quantized:
+        # the stored codes are the NumPy quantizer's binaries for either fit
         approx = _code_cosine(
             cand.select("query_id", "neighbor_id", "code")
             .join(q_side, "query_id")
             .select("query_id", "neighbor_id", "q_emb", "code")
         )
-        w_re = Window.partitionBy("query_id").orderBy(
-            F.desc("acos"), F.asc("neighbor_id")
-        )
-        survivors = (
-            approx.withColumn("_rn", F.row_number().over(w_re))
-            .filter(F.col("_rn") <= reorder)
-            .select("query_id", "neighbor_id")
-        )
-        cand = survivors.join(
+        cand = _reorder(approx, reorder).join(
             cand.select("query_id", "neighbor_id", "emb"),
             ["query_id", "neighbor_id"],
         )
 
-    scored = V.ensure_emb_array(
-        cand.select("query_id", "neighbor_id", "emb"), "emb"
-    ).join(q_side, "query_id").withColumn(
-        "cos", V.cosine(F.col("q_emb"), F.col("emb"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    vecs = V.ensure_emb_array(cand.select("query_id", "neighbor_id", "emb"), "emb")
+    return _exact_topk(
+        vecs.select(
+            "query_id", "neighbor_id", F.col("emb").alias("i_emb"),
+            V.l2_norm(F.col("emb")).alias("_in"),
+        ).join(q_side, "query_id"),
+        k,
     )

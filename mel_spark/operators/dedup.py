@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from mel_spark.functions import text as T
-from mel_spark.functions import vectors as V
+from mel_spark.operators.similarity import _pair_cosine, _with_vectors
 
 
 def exact_duplicates(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
@@ -154,10 +154,11 @@ def embedding_near_dup_pairs(
         if plan_size_bytes(docs) <= 256 << 20:
             # both self-join sides re-derive the hyperplane keys (the
             # literal-unrolled plane dots are the query's heaviest
-            # projection); for small inputs cache them once. Gated on scan
-            # statistics: at production scale the blocks table is too big to
-            # pin and the recompute is the cheaper trade.
-            blocks = blocks.persist()
+            # projection); for small inputs compute them once, as a lazy
+            # local checkpoint that Spark reclaims with the returned plan.
+            # Gated on scan statistics: at production scale the blocks table
+            # is too big to pin and the recompute is the cheaper trade.
+            blocks = blocks.localCheckpoint(eager=False)
         a = blocks.select("block_key", F.col("mention_id").alias("doc_id_a"))
         b = blocks.select("block_key", F.col("mention_id").alias("doc_id_b"))
         cand = (
@@ -166,28 +167,16 @@ def embedding_near_dup_pairs(
             .select("doc_id_a", "doc_id_b")
             .distinct()
         )
-    # norms are per-ROW quantities — hoisting them out of the candidate join
-    # computes each once instead of once per PAIR (identical IEEE arithmetic,
-    # so cos is bit-identical; the per-pair work drops to just the dot)
-    joined = (
-        cand.join(
-            e.select(F.col("doc_id").alias("doc_id_a"), F.col("emb").alias("emb_a"),
-                     V.l2_norm(F.col("emb")).alias("_na")),
-            "doc_id_a",
-        )
-        .join(
-            e.select(F.col("doc_id").alias("doc_id_b"), F.col("emb").alias("emb_b"),
-                     V.l2_norm(F.col("emb")).alias("_nb")),
-            "doc_id_b",
-        )
+    # exact verify: the searchers' pair cosine, with a as the query side
+    pairs = _with_vectors(
+        cand.toDF("query_id", "neighbor_id"), e, e, "doc_id", "emb", "doc_id", "emb"
     )
     return (
-        joined.withColumn(
-            "cos",
-            F.round(V.dot(F.col("emb_a"), F.col("emb_b")) / (F.col("_na") * F.col("_nb")), 6),
-        )
+        pairs.withColumn("cos", _pair_cosine())
         .filter(F.col("cos") >= threshold)
-        .select("doc_id_a", "doc_id_b", "cos")
+        .select(
+            F.col("query_id").alias("doc_id_a"), F.col("neighbor_id").alias("doc_id_b"), "cos"
+        )
     )
 
 

@@ -34,11 +34,28 @@ Three regimes, mirroring the reference's searcher hierarchy
                           hash-matches it end to end (contract entries
                           knn_ivf / knn_ivf_pq).
 
+Every searcher ends in the same tail, and each step of it has one
+implementation here, shared with the persisted index (operators/ann_index.py)
+and dedup.embedding_near_dup_pairs:
+
+ _top_n          — the one per-query window: rows ranked ≤ n by (score desc,
+                   tiebreak asc). It serves the exact rank, the reorder and
+                   the relational cell probe.
+ _pair_cosine    — the one pair cosine: HALF_UP-6dp dot over per-row norms
+                   that ``_side`` hoists out of the pair join.
+ _exact_topk     — exact re-rank: ``_pair_cosine`` + ``_top_n`` ≤ k.
+ _reorder        — the asymmetric-hashing cut: ``_top_n`` ≤ reorder by the
+                   approximate code cosine.
+ _QUANTIZERS     — the coarse quantizer, one per fit ("numpy", "relational"):
+                   fit / assign / probe / int8 codes / approximate score.
+                   ivf_topk and ivf_topk_relational share one body
+                   (``_ivf_search``) that branches only on it; the persisted
+                   index's build, append and probe call the same pieces.
+
 The NumPy side of retrieval is one set of mapInArrow kernels — cell assign,
-cell probe, int8 encode, code-cosine scoring and the broadcast_knn search —
-shared by the in-flight searchers here and the persisted index
-(operators/ann_index.py). Each decodes embeddings in either storage format
-(fp16-packed binary or array<float>) through ``V.emb_matrix_arrow``.
+cell probe, int8 encode, code-cosine scoring and the broadcast_knn search.
+Each decodes embeddings in either storage format (fp16-packed binary or
+array<float>) through ``V.emb_matrix_arrow``.
 """
 
 from __future__ import annotations
@@ -49,7 +66,8 @@ import hashlib
 import os
 import shutil
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -133,33 +151,76 @@ def brute_force_topk(
     # default) or array<float>; no-op for arrays
     queries = V.ensure_emb_array(queries, q_emb)
     index = V.ensure_emb_array(index, i_emb)
-    # norms are per-ROW quantities: computing them before the cross join does
-    # each one once instead of once per PAIR (the fold is the same double
-    # arithmetic either way, so cos is bit-identical); the per-pair work drops
-    # from dot + 2 norms to just the dot
-    q = queries.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_emb).alias("q_emb"),
-        V.l2_norm(F.col(q_emb)).alias("_qn"),
-    )
-    i = index.select(
-        F.col(i_id).alias("neighbor_id"),
-        F.col(i_emb).alias("i_emb"),
-        V.l2_norm(F.col(i_emb)).alias("_in"),
-    )
-    scored = q.crossJoin(i)
+    pairs = _side(queries, q_id, q_emb, "q").crossJoin(_side(index, i_id, i_emb, "i"))
     if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.withColumn(
-        "cos",
-        F.round(V.dot(F.col("q_emb"), F.col("i_emb")) / (F.col("_qn") * F.col("_in")), 6),
+        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    return _exact_topk(pairs, k)
+
+
+# ---------------------------------------------------------------------------
+# The shared search tail: one per-query window, one pair cosine, one exact
+# re-rank, one reorder
+# ---------------------------------------------------------------------------
+
+# output names of a pair join's two sides: (id, emb, hoisted norm)
+_SIDE_COLS = {"q": ("query_id", "q_emb", "_qn"), "i": ("neighbor_id", "i_emb", "_in")}
+
+
+def _side(df: DataFrame, id_col: str, emb_col: str, side: str) -> DataFrame:
+    """One side ("q" or "i") of a pair join as (id, emb, norm). Norms are
+    per-ROW quantities: computing them before the join does each one once
+    instead of once per PAIR — the same double arithmetic either way, so
+    the cosine is bit-identical."""
+    id_out, emb_out, norm_out = _SIDE_COLS[side]
+    return df.select(
+        F.col(id_col).alias(id_out),
+        F.col(emb_col).alias(emb_out),
+        V.l2_norm(F.col(emb_col)).alias(norm_out),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+
+
+def _pair_cosine(
+    a: str = "q_emb", b: str = "i_emb", a_norm: str = "_qn", b_norm: str = "_in"
+) -> Column:
+    """The one pair cosine: HALF_UP-6dp ``dot(a, b) / (‖a‖·‖b‖)`` over norm
+    columns hoisted out of the pair join — bit-identical to ``V.cosine``."""
+    return F.round(V.dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm)), 6)
+
+
+def _top_n(df: DataFrame, n: int, score: str, tiebreak: str, out: str = "_rn") -> DataFrame:
+    """Rows ranked ≤ ``n`` per query_id by (``score`` desc, ``tiebreak``
+    asc), the rank kept as ``out`` — the one per-query window behind the
+    exact rank, the reorder and the relational cell probe."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(tiebreak))
+    return df.withColumn(out, F.row_number().over(w)).filter(F.col(out) <= n)
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every searcher ends in: (query_id, neighbor_id,
+    cos, rank) from pairs carrying both sides' columns (``_SIDE_COLS``);
+    ties broken by neighbor id."""
+    scored = pairs.withColumn("cos", _pair_cosine())
+    return _top_n(scored, k, "cos", "neighbor_id", "rank").select(
+        "query_id", "neighbor_id", "cos", "rank"
     )
+
+
+def _with_vectors(
+    cand: DataFrame, queries: DataFrame, index: DataFrame,
+    q_id: str, q_emb: str, i_id: str, i_emb: str,
+) -> DataFrame:
+    """Candidate (query_id, neighbor_id) pairs joined to both sides'
+    vectors and norms."""
+    return cand.join(_side(queries, q_id, q_emb, "q"), "query_id").join(
+        _side(index, i_id, i_emb, "i"), "neighbor_id"
+    )
+
+
+def _reorder(approx: DataFrame, reorder: int) -> DataFrame:
+    """(query_id, neighbor_id) of the top ``reorder`` per query by the
+    approximate score ``acos`` — the asymmetric-hashing cut before the
+    exact re-rank (scann_searcher.py:21-49)."""
+    return _top_n(approx, reorder, "acos", "neighbor_id").select("query_id", "neighbor_id")
 
 
 @functools.cache
@@ -271,9 +332,15 @@ def broadcast_knn(
             sims = V.round6_half_up(_unit_rows(rb, q_emb) @ embs.T)
             qids = rb.column(q_id).cast(pa.int64())
             if exclude_self:
-                # mask identical ids (index id == query id)
-                for r, qi in enumerate(qids.to_numpy()):
-                    sims[r, ids == qi] = -np.inf
+                # mask identical ids: ``ids`` is sorted, so each query's
+                # equal-id run is [lo, hi) — one searchsorted per batch
+                qn = qids.to_numpy()
+                lo = np.searchsorted(ids, qn, "left")
+                hi = np.searchsorted(ids, qn, "right")
+                at = np.arange(len(qn))
+                for j in range(int((hi - lo).max())):
+                    sel = hi - lo > j
+                    sims[at[sel], lo[sel] + j] = -np.inf
             part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
             rows = []
             for r in range(sims.shape[0]):
@@ -336,10 +403,7 @@ def train_ivf_centroids(
         # F.sum(element_at) expressions — wide plans at d >= 512), and exact
         # decimal addition makes the centroids ORDER-INDEPENDENT across
         # partitionings by construction, not by fixture luck
-        members = _assign_cells(sdf, cents).select(
-            F.col("_id").alias("_mid"), F.col("_cell").alias("cell")
-        )
-        rows = _ivf_update_relational(sdf, members).collect()
+        rows = _ivf_update_relational(sdf, _assign_cells(sdf, cents)).collect()
         new = cents.copy()
         for r in rows:
             v = np.array(r["cent"], dtype=np.float64)
@@ -386,10 +450,25 @@ def ivf_topk(
     queries = V.ensure_emb_array(queries, q_emb)  # either emb storage format
     index = V.ensure_emb_array(index, i_emb)
     cents = train_ivf_centroids(index, n_cells, i_id, i_emb, iterations, seed, init_hash)
-    i_cells = _assign_cells(
-        index.select(F.col(i_id).alias("_id"), F.col(i_emb).alias("_emb")), cents
-    ).select(F.col("_id").alias("neighbor_id"), F.col("_cell").alias("cell"))
-    q_cells = _probe_cells(
+    return _ivf_search(
+        _QUANTIZERS["numpy"], cents, queries, index, k, nprobe,
+        q_id, q_emb, i_id, i_emb, quantized, reorder,
+    )
+
+
+def _ivf_search(
+    qz: IVFQuantizer, cents, queries: DataFrame, index: DataFrame, k: int,
+    nprobe: int, q_id: str, q_emb: str, i_id: str, i_emb: str,
+    quantized: bool, reorder: int,
+) -> DataFrame:
+    """The one in-flight IVF body behind ivf_topk and ivf_topk_relational,
+    branching only on the quantizer ``qz`` and its fitted ``cents``: index
+    vectors assigned to cells, queries probe ``nprobe`` cells, candidates
+    from the cell equi-join (self dropped), optional int8 approximate pass
+    cut to ``reorder`` per query, exact re-rank ≤ k."""
+    vecs_i = index.select(F.col(i_id).alias("_id"), F.col(i_emb).alias("_emb"))
+    i_cells = qz.assign(vecs_i, cents).select(F.col("_id").alias("neighbor_id"), "cell")
+    q_cells = qz.probe(
         queries.select(F.col(q_id).alias("query_id"), F.col(q_emb).alias("_emb")),
         cents, nprobe,
     )
@@ -399,42 +478,15 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q_side = queries.select(F.col(q_id).alias("query_id"), F.col(q_emb).alias("q_emb"))
     if quantized:
-        codes = _int8_code_rows(
-            index.select(F.col(i_id).alias("neighbor_id"), F.col(i_emb).alias("_emb"))
-        )
-        approx = _code_cosine(
-            cand.join(q_side, "query_id")
+        codes = qz.codes(vecs_i.withColumnRenamed("_id", "neighbor_id"))
+        approx = qz.score(
+            cand.join(_side(queries, q_id, q_emb, "q"), "query_id")
             .join(codes, "neighbor_id")
             .select("query_id", "neighbor_id", "q_emb", "code")
         )
-        w_re = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("neighbor_id"))
-        cand = (
-            approx.withColumn("_rn", F.row_number().over(w_re))
-            .filter(F.col("_rn") <= reorder)
-            .select("query_id", "neighbor_id")
-        )
-    scored = (
-        cand.join(q_side, "query_id")
-        .join(
-            index.select(F.col(i_id).alias("neighbor_id"), F.col(i_emb).alias("i_emb"),
-                         V.l2_norm(F.col(i_emb)).alias("_in")),
-            "neighbor_id",
-        )
-        # per-ROW norms hoisted out of the join — bit-identical cosine
-        .withColumn(
-            "cos",
-            F.round(V.dot(F.col("q_emb"), F.col("i_emb"))
-                    / (V.l2_norm(F.col("q_emb")) * F.col("_in")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+        cand = _reorder(approx, reorder)
+    return _exact_topk(_with_vectors(cand, queries, index, q_id, q_emb, i_id, i_emb), k)
 
 
 # ---------------------------------------------------------------------------
@@ -453,10 +505,10 @@ def _unit_rows(rb: pa.RecordBatch, col: str) -> np.ndarray:
 
 
 def _assign_cells(sdf: DataFrame, cents: np.ndarray) -> DataFrame:
-    """(_id, _cell) from (_id, _emb): nearest centroid by dot product, via
+    """(_id, cell) from (_id, _emb): nearest centroid by dot product, via
     one NumPy matmul per Arrow batch against the broadcast centroid matrix."""
     b = sdf.sparkSession.sparkContext.broadcast(cents)
-    schema = StructType([sdf.schema["_id"], StructField("_cell", IntegerType())])
+    schema = StructType([sdf.schema["_id"], StructField("cell", IntegerType())])
 
     def _assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         C = b.value.astype(np.float64)
@@ -467,7 +519,7 @@ def _assign_cells(sdf: DataFrame, cents: np.ndarray) -> DataFrame:
             # deterministic tie-break: lowest cell id wins (argmax is first-max)
             cell = np.argmax(sims, axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
-                [rb.column("_id"), pa.array(cell)], names=["_id", "_cell"]
+                [rb.column("_id"), pa.array(cell)], names=["_id", "cell"]
             )
 
     return sdf.mapInArrow(_assign, schema)
@@ -605,31 +657,31 @@ def fit_ivf_centroids_relational(
         .select("cell", F.transform("_emb", lambda x: x.cast("double")).alias("cent"))
     )
     for _ in range(iterations):
-        members = _ivf_assign_relational(vecs_i, cents, "_mid")
-        cents = _ivf_update_relational(vecs_i, members)
-    # n_cells rows — persist unconditionally: the fitted centroids feed two
-    # to three consumers (index assignment, query probing, persisted-index
-    # build), each of which would otherwise re-execute the whole Lloyd chain
-    # (every iteration = a crossJoin over the index + decimal update aggs)
-    return cents.persist()
+        cents = _ivf_update_relational(vecs_i, _ivf_assign_relational(vecs_i, cents))
+    # n_cells rows, computed once: the fitted centroids feed two to three
+    # consumers (index assignment, query probing, persisted-index build),
+    # each of which would otherwise re-execute the whole Lloyd chain (every
+    # iteration = a crossJoin over the index + decimal update aggs). A lazy
+    # local checkpoint, not persist(): Spark reclaims its blocks once the
+    # returned frame is garbage-collected, while a persisted plan stays in
+    # the CacheManager until someone unpersists it
+    return cents.localCheckpoint(eager=False)
 
 
-def _ivf_assign_relational(vecs: DataFrame, cents: DataFrame, id_out: str) -> DataFrame:
-    """(id_out, cell): nearest centroid by cosine (ties → lowest cell), as a
-    broadcast nested-loop join + partial-aggregatable max_by — the relational
-    form of 'broadcast the (cells × d) matrix and matmul'."""
+def _ivf_assign_relational(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """(_id, cell) from (_id, _emb): nearest centroid by cosine (ties →
+    lowest cell), as a broadcast nested-loop join + partial-aggregatable
+    max_by — the relational form of 'broadcast the (cells × d) matrix and
+    matmul'."""
     # per-ROW norms hoisted before the cross join: each vector norm is
     # computed once instead of once per (vector, centroid) pair — identical
     # IEEE arithmetic, so assignments (and the oracle hash) are unchanged
     scored = (
         vecs.withColumn("_vn", V.l2_norm(F.col("_emb")))
         .crossJoin(F.broadcast(cents.withColumn("_cn", V.l2_norm(F.col("cent")))))
-        .withColumn(
-            "_cos",
-            F.round(V.dot(F.col("_emb"), F.col("cent")) / (F.col("_vn") * F.col("_cn")), 6),
-        )
+        .withColumn("_cos", _pair_cosine("_emb", "cent", "_vn", "_cn"))
     )
-    return scored.groupBy(F.col("_id").alias(id_out)).agg(
+    return scored.groupBy("_id").agg(
         F.max_by(
             "cell", F.struct(F.col("_cos").alias("a"), (-F.col("cell")).alias("b"))
         ).alias("cell")
@@ -637,12 +689,13 @@ def _ivf_assign_relational(vecs: DataFrame, cents: DataFrame, id_out: str) -> Da
 
 
 def _ivf_update_relational(vecs: DataFrame, members: DataFrame) -> DataFrame:
-    """(cell, cent array<double>): DECIMAL-exact per-position sums of member
+    """(cell, cent array<double>) from vectors (_id, _emb) and their cells
+    (_id, cell): DECIMAL-exact per-position sums of member
     vectors (cosine is scale-invariant, so the un-normalized sum ranks
     identically to the mean — and exact decimal addition is order-independent,
     the same cross-engine trick as aggregates.embedding_centroid)."""
     ex = (
-        members.join(vecs, members["_mid"] == vecs["_id"])
+        members.join(vecs, "_id")
         .select("cell", F.posexplode("_emb").alias("pos", "_v"))
         .groupBy("cell", "pos")
         .agg(
@@ -697,62 +750,21 @@ def ivf_topk_relational(
     precedent: src/finetunings/evaluation/find_recall.py:28-37)."""
     queries = V.ensure_emb_array(queries, q_emb)  # either emb storage format
     index = V.ensure_emb_array(index, i_emb)
-    vecs_i = index.select(F.col(i_id).alias("_id"), F.col(i_emb).alias("_emb"))
     cents = fit_ivf_centroids_relational(index, n_cells, i_id, i_emb, iterations, seed)
-    i_cells = _ivf_assign_relational(vecs_i, cents, "neighbor_id")
-    vecs_q = queries.select(F.col(q_id).alias("_id"), F.col(q_emb).alias("_emb"))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("cell"))
-    q_cells = (
-        vecs_q.crossJoin(F.broadcast(cents))
-        .withColumn("_cos", V.cosine(F.col("_emb"), F.col("cent")))
-        .select(F.col("_id").alias("query_id"), "cell", "_cos")
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cell")
+    return _ivf_search(
+        _QUANTIZERS["relational"], cents, queries, index, k, nprobe,
+        q_id, q_emb, i_id, i_emb, quantized, reorder,
     )
-    cand = (
-        q_cells.join(i_cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+
+
+def _probe_cells_relational(vecs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, cell) from (query_id, _emb): the ``nprobe`` nearest
+    centroids by HALF_UP-6dp cosine (ties → lowest cell) — the Catalyst twin
+    of :func:`_probe_cells`, a broadcast nested-loop join + ``_top_n``."""
+    scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
+        "_cos", V.cosine(F.col("_emb"), F.col("cent"))
     )
-    q_side = queries.select(F.col(q_id).alias("query_id"), F.col(q_emb).alias("q_emb"))
-    if quantized:
-        codes = index.select(
-            F.col(i_id).alias("neighbor_id"),
-            int8_codes(F.col(i_emb)).alias("code"),
-        )
-        approx = (
-            cand.join(q_side, "query_id")
-            .join(codes, "neighbor_id")
-            .withColumn("acos", V.cosine(F.col("q_emb"), F.col("code")))
-        )
-        w_re = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("neighbor_id"))
-        cand = (
-            approx.withColumn("_rn", F.row_number().over(w_re))
-            .filter(F.col("_rn") <= reorder)
-            .select("query_id", "neighbor_id")
-        )
-    scored = (
-        cand.join(q_side, "query_id")
-        .join(
-            index.select(F.col(i_id).alias("neighbor_id"), F.col(i_emb).alias("i_emb"),
-                         V.l2_norm(F.col(i_emb)).alias("_in")),
-            "neighbor_id",
-        )
-        # per-ROW norms hoisted out of the join — bit-identical cosine
-        .withColumn(
-            "cos",
-            F.round(V.dot(F.col("q_emb"), F.col("i_emb"))
-                    / (V.l2_norm(F.col("q_emb")) * F.col("_in")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _top_n(scored, nprobe, "_cos", "cell").select("query_id", "cell")
 
 
 def int8_codes(emb: Column) -> Column:
@@ -799,27 +811,31 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    # per-ROW norms hoisted out of the candidate join (identical IEEE
-    # arithmetic, computed once per row instead of once per pair)
-    scored = (
-        cand.join(
-            queries.select(F.col(q_id).alias("query_id"), F.col(q_emb).alias("q_emb"),
-                           V.l2_norm(F.col(q_emb)).alias("_qn")),
-            "query_id",
-        )
-        .join(
-            index.select(F.col(i_id).alias("neighbor_id"), F.col(i_emb).alias("i_emb"),
-                         V.l2_norm(F.col(i_emb)).alias("_in")),
-            "neighbor_id",
-        )
-        .withColumn(
-            "cos",
-            F.round(V.dot(F.col("q_emb"), F.col("i_emb")) / (F.col("_qn") * F.col("_in")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _exact_topk(_with_vectors(cand, queries, index, q_id, q_emb, i_id, i_emb), k)
+
+
+class IVFQuantizer(NamedTuple):
+    """A coarse quantizer's pieces, one implementation each per fit — all
+    that differs between the NumPy and the Catalyst IVF. ``fit`` returns
+    the centroids in the quantizer's own form (a float32 matrix or a
+    (cell, cent) DataFrame) that ``assign`` and ``probe`` take."""
+
+    fit: Callable  # (index, n_cells, i_id, i_emb, iterations, seed) → centroids
+    assign: Callable  # (vecs (_id, _emb), centroids) → (_id, cell)
+    probe: Callable  # (vecs (query_id, _emb), centroids, nprobe) → (query_id, cell)
+    codes: Callable  # (vecs (neighbor_id, _emb)) → (neighbor_id, code)
+    score: Callable  # (query_id, neighbor_id, q_emb, code) → (query_id, neighbor_id, acos)
+
+
+_QUANTIZERS = {
+    "numpy": IVFQuantizer(
+        train_ivf_centroids, _assign_cells, _probe_cells, _int8_code_rows, _code_cosine
+    ),
+    "relational": IVFQuantizer(
+        fit_ivf_centroids_relational,
+        _ivf_assign_relational,
+        _probe_cells_relational,
+        lambda v: v.select("neighbor_id", int8_codes(F.col("_emb")).alias("code")),
+        lambda p: p.withColumn("acos", V.cosine(F.col("q_emb"), F.col("code"))),
+    ),
+}

@@ -41,6 +41,18 @@ def er_job_joins(spark):
 
 
 @pytest.fixture()
+def full_scan_locations(spark):
+    """Print scan locations in full in plan strings (Spark truncates them to
+    ``spark.sql.maxMetadataStringLength``, 100 chars by default), so a plan
+    test can tell scans apart by path. Restored after the test."""
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 20))
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.fixture()
 def fold_sort_merge(monkeypatch):
     """Force the fold's sort-merge joins: no side fits a broadcast budget of
     zero bytes."""

@@ -3,10 +3,16 @@ the tests that pin which join strategy a scan feeds."""
 
 import re
 
-# a scan's location is truncated in the plan string, so a corpus table is
-# matched by its scanned columns instead
-BLOCK_INDEX_SCAN = r"\[block_key#\d+L,mention_id#\d+L\]"
-CLUSTERS_SCAN = r"\[mention_id#\d+,cluster_id#\d+L\]"
+
+
+def corpus_scan(base: str, stage: str = "") -> str:
+    """Pattern of a scan of the base checkpoint ``base`` — of its ``stage``
+    table, or of any of its tables — matched by the scan's location, which
+    tells the corpus apart from a fold's read-back of its own delta stages
+    (same columns, the fold dir's location). The plan string carries the
+    full location only under the ``full_scan_locations`` fixture."""
+    loc = re.escape(f"{base}/{stage}")
+    return loc + r"[\],]" if stage else loc
 
 
 def plan_nodes(plan: str) -> list[tuple[int, str]]:

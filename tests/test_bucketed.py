@@ -14,7 +14,7 @@ from mel_spark.sources.bucketed import (
     read_bucketed_index,
     write_bucketed_index,
 )
-from plan_shape import BLOCK_INDEX_SCAN, ancestors, join_above, plan_nodes, scans
+from plan_shape import ancestors, corpus_scan, join_above, plan_nodes, scans
 
 
 def _exchange_free_scans(plan: str, table: str) -> list[bool]:
@@ -236,7 +236,7 @@ def test_ensure_bucketed_index_lifecycle(spark, tmp_path, er_job_joins, monkeypa
 
 
 def test_fold_with_bucketed_index_equals_default_fold(
-    spark, tmp_path, er_job_joins, monkeypatch
+    spark, tmp_path, er_job_joins, full_scan_locations, monkeypatch
 ):
     """End-to-end, under er_job's join conf: a fold whose delta keys are past
     the broadcast bound (forced: bound 0) probes the bucketed index table
@@ -257,7 +257,7 @@ def test_fold_with_bucketed_index_equals_default_fold(
     plans: dict[str, str] = {}
     default = incremental_update(spark, base, batch, plan_capture=plans)
     assert default["joins"]["probe"] == "broadcast"
-    assert join_above(plans["pairs_delta"], BLOCK_INDEX_SCAN, "Inner") == {
+    assert join_above(plans["pairs_delta"], corpus_scan(base, "block_index"), "Inner") == {
         "BroadcastHashJoin"
     }
     want = _canon(default["clusters"].select("mention_id", "cluster_id"))

@@ -20,9 +20,8 @@ from mel_spark.operators.incremental import (
 )
 from mel_spark.pipeline import ERConfig, run_pipeline
 from plan_shape import (
-    BLOCK_INDEX_SCAN,
-    CLUSTERS_SCAN,
     ancestors,
+    corpus_scan,
     join_above,
     plan_nodes,
     scans,
@@ -494,7 +493,9 @@ def test_probe_keys_hot_set_counts_base_plus_delta(spark):
     assert 0 < salted < raw  # the aggregate-hot key WAS salted
 
 
-def test_fold_clusters_plan_scans_corpus_never_shuffles_it(spark, tmp_path, er_job_joins):
+def test_fold_clusters_plan_scans_corpus_never_shuffles_it(
+    spark, tmp_path, er_job_joins, full_scan_locations
+):
     """Whole-fold shuffle discipline: in the physical plan of the fold's
     updated assignment, every parquet scan of a BASE checkpoint table must
     feed a broadcast join as the STREAMED side — its nearest exchange/join
@@ -514,10 +515,13 @@ def test_fold_clusters_plan_scans_corpus_never_shuffles_it(spark, tmp_path, er_j
     run_pipeline(spark, repos.filter(in_a), base)
 
     plans: dict[str, str] = {}
-    # no fold checkpoint dir: delta stages become lazy localCheckpoints,
-    # so in each CAPTURED stage plan the only parquet scans are the
-    # base-corpus tables (earlier deltas appear as Scan ExistingRDD)
-    out = incremental_update(spark, base, repos.filter(~in_a), plan_capture=plans)
+    # with a fold checkpoint dir, as er_job runs it: the captured plans also
+    # scan the fold's own delta stages back, so the corpus scans are the
+    # ones located under the base checkpoint
+    out = incremental_update(
+        spark, base, repos.filter(~in_a), checkpoint_dir=str(tmp_path / "inc"),
+        plan_capture=plans,
+    )
     assert out["joins"] == {
         "probe": "broadcast", "relabel": "broadcast", "override": "broadcast"
     }
@@ -527,7 +531,7 @@ def test_fold_clusters_plan_scans_corpus_never_shuffles_it(spark, tmp_path, er_j
     audited_scans = 0
     for stage, plan in plans.items():
         nodes = plan_nodes(plan)
-        corpus_scans = scans(nodes)
+        corpus_scans = scans(nodes, corpus_scan(base))
         audited_scans += len(corpus_scans)
         for i in corpus_scans:
             hit = next(
@@ -573,7 +577,7 @@ def test_incremental_equals_full_run_randomized(
 
 
 def test_fold_sort_merge_relabel_equals_broadcast(
-    spark, tmp_path, er_job_joins, fold_sort_merge
+    spark, tmp_path, er_job_joins, fold_sort_merge, full_scan_locations
 ):
     """Past the broadcast bound (forced: budget 0) — the mega-cluster case,
     where touched-cluster membership outgrows any broadcast — the relabel
@@ -592,17 +596,19 @@ def test_fold_sort_merge_relabel_equals_broadcast(
     base = str(tmp_path / "base")
     run_pipeline(spark, batch_a, base)
     plans: dict[str, str] = {}
-    # no fold checkpoint dir: the delta stages are local checkpoints, so the
-    # only parquet scans in the captured plans are the corpus tables'
-    inc_sm = incremental_update(spark, base, batch_b, plan_capture=plans)
+    # with a fold checkpoint dir, as er_job runs it; corpus scans are told
+    # from the fold's read-back of its own delta stages by location
+    inc_sm = incremental_update(
+        spark, base, batch_b, checkpoint_dir=str(tmp_path / "inc"), plan_capture=plans
+    )
     assert inc_sm["joins"] == {
         "probe": "broadcast", "relabel": "sort_merge", "override": "sort_merge"
     }
-    assert join_above(plans["pairs_delta"], BLOCK_INDEX_SCAN, "Inner") == {
+    assert join_above(plans["pairs_delta"], corpus_scan(base, "block_index"), "Inner") == {
         "BroadcastHashJoin"
     }
     assert "BroadcastHashJoin" not in plans["clusters_delta"]
-    assert join_above(plans["clusters_full"], CLUSTERS_SCAN, "LeftAnti") == {
+    assert join_above(plans["clusters_full"], corpus_scan(base, "clusters"), "LeftAnti") == {
         "SortMergeJoin"
     }
     _assert_same_clusters(inc_sm["clusters"], full["clusters"])

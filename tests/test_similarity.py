@@ -15,20 +15,22 @@ def emb_df(spark, sf_dir):
 
 def test_broadcast_knn_matches_brute_force(spark, emb_df):
     """The mapInArrow broadcast searcher must return exactly the DataFrame
-    brute-force ranking (same ids, same order)."""
+    brute-force ranking (same ids, same order) — also over an index that
+    holds every id twice, where exclude_self masks both copies."""
     queries = emb_df.filter(F.col("vec_id") < 20)
-    bf = brute_force_topk(queries, emb_df, k=5)
-    bf_map = {
-        r["query_id"]: r["neighbor_ids"]
-        for r in bf.groupBy("query_id")
-        .agg(F.array_sort(F.collect_list(F.struct("rank", "neighbor_id"))).alias("rc"))
-        .select("query_id", F.transform("rc", lambda s: s.getField("neighbor_id")).alias("neighbor_ids"))
-        .collect()
-    }
-    bc = {r["query_id"]: r["neighbor_ids"] for r in broadcast_knn(queries, emb_df, k=5).collect()}
-    assert bf_map.keys() == bc.keys()
-    mismatches = {q: (bf_map[q], bc[q]) for q in bf_map if list(bf_map[q]) != list(bc[q])}
-    assert not mismatches, mismatches
+    for index in (emb_df, emb_df.unionByName(emb_df)):
+        bf = brute_force_topk(queries, index, k=5)
+        bf_map = {
+            r["query_id"]: r["neighbor_ids"]
+            for r in bf.groupBy("query_id")
+            .agg(F.array_sort(F.collect_list(F.struct("rank", "neighbor_id"))).alias("rc"))
+            .select("query_id", F.transform("rc", lambda s: s.getField("neighbor_id")).alias("neighbor_ids"))
+            .collect()
+        }
+        bc = {r["query_id"]: r["neighbor_ids"] for r in broadcast_knn(queries, index, k=5).collect()}
+        assert bf_map.keys() == bc.keys()
+        mismatches = {q: (bf_map[q], bc[q]) for q in bf_map if list(bf_map[q]) != list(bc[q])}
+        assert not mismatches, mismatches
 
 
 def test_broadcast_knn_guards_index_size(spark, emb_df):
@@ -320,7 +322,7 @@ def test_searchers_accept_f16_binary_emb_dataframes(spark, tmp_path):
     assert rows(ivf_topk(qb, bin_df, **kw), pair_cols) == rows(
         ivf_topk(qa, arr_df, **kw), pair_cols
     )
-    # persisted index: the NumPy probe kernel reads the binary queries as is
+    # persisted index: binary queries decode to the same vectors
     p = str(tmp_path / "ivf")
     build_ivf_index(bin_df, p, n_cells=4, iterations=2, seed=42, fit="numpy")
     for quantized in (False, True):
@@ -329,3 +331,59 @@ def test_searchers_accept_f16_binary_emb_dataframes(spark, tmp_path):
         ) == rows(
             ivf_index_topk(spark, qa, p, k=3, nprobe=2, quantized=quantized), pair_cols
         )
+
+
+def _exact_rows(df):
+    return sorted(tuple(r) for r in df.select("query_id", "neighbor_id", "cos", "rank").collect())
+
+
+@pytest.mark.parametrize(
+    "searcher",
+    ["ivf", "ivf_quantized", "ivf_relational", "ivf_relational_quantized",
+     "index_numpy", "index_relational"],
+)
+def test_every_cell_probed_equals_brute_force(spark, emb_df, tmp_path, searcher):
+    """The IVF searchers end in brute force's exact tail: with every cell
+    probed (and, quantized, a reorder no smaller than the index) each one
+    returns exactly brute_force_topk's (query_id, neighbor_id, cos, rank)
+    rows — candidates, cosine, tiebreak and rank all shared."""
+    from mel_spark.operators.ann_index import build_ivf_index, ivf_index_topk
+    from mel_spark.operators.similarity import ivf_topk, ivf_topk_relational
+
+    queries = emb_df.filter(F.col("vec_id") < 10)
+    cells, k = 4, 5
+    kw = dict(k=k, n_cells=cells, nprobe=cells, iterations=2, seed=42)
+    n = emb_df.count()
+    if searcher.startswith("index_"):
+        p = str(tmp_path / "ivf")
+        fit = searcher.removeprefix("index_")
+        build_ivf_index(emb_df, p, n_cells=cells, iterations=2, fit=fit, emb_format="f32")
+        got = ivf_index_topk(spark, queries, p, k=k, nprobe=cells)
+    else:
+        topk = ivf_topk_relational if "relational" in searcher else ivf_topk
+        if searcher.endswith("quantized"):
+            kw.update(quantized=True, reorder=n)
+        got = topk(queries, emb_df, **kw)
+    assert _exact_rows(got) == _exact_rows(brute_force_topk(queries, emb_df, k=k))
+
+
+def test_retrieval_leaves_no_cached_plan(spark, emb_df, tmp_path):
+    """Relational IVF, the persisted index (both fits) and the near-dup LSH
+    path each compute a reused intermediate once, yet leave nothing in the
+    CacheManager: a persist() outlives its DataFrame there, a lazy local
+    checkpoint is reclaimed with it."""
+    from mel_spark.operators.ann_index import build_ivf_index, ivf_index_topk
+    from mel_spark.operators.dedup import embedding_near_dup_pairs
+    from mel_spark.operators.similarity import ivf_topk_relational
+
+    spark.catalog.clearCache()
+    queries = emb_df.filter(F.col("vec_id") < 10)
+    ivf_topk_relational(queries, emb_df, k=3, n_cells=4, nprobe=2).collect()
+    for fit in ("numpy", "relational"):
+        p = str(tmp_path / fit)
+        build_ivf_index(emb_df, p, n_cells=4, iterations=2, fit=fit)
+        ivf_index_topk(spark, queries, p, k=3, nprobe=2).collect()
+    embedding_near_dup_pairs(
+        emb_df, "vec_id", "embedding", threshold=0.3, dim=64, n_planes=8, bands=4
+    ).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
