@@ -35,20 +35,27 @@ to the NEW batch:
      graph whose size is O(new edges + touched roots), never O(all historical
      edges). Components merging two old roots re-merge those clusters —
      transitivity across batches is preserved.
-  6. relabel cluster_id = min mention ``mid`` per final root over ALL member
-     mentions — byte-identical to what a full run over (base ∪ new) emits
-     (whenever skew caps do not bind), which is the equivalence contract
-     tests/test_incremental.py asserts. The relabel's build sides are
-     bounded by touched-cluster membership plus the batch's mentions, so
-     they are broadcast only while that measured size fits the same budget
-     (a fold touching a mega-cluster relabels through sort-merge joins).
+  6. relabel ONE frame — the touched clusters' members, each carrying its
+     base label, plus the batch's mentions — through the full run's own
+     labeling (``pipeline.min_mid_labels``: cluster_id = min mention ``mid``
+     per final root over ALL member mentions), keeping the rows whose label
+     changed. The output is byte-identical to what a full run over
+     (base ∪ new) emits (whenever skew caps do not bind), which is the
+     equivalence contract tests/test_incremental.py asserts. The relabel's
+     build sides are bounded by touched-cluster membership, so they are
+     broadcast only while that measured size fits the same budget (a fold
+     touching a mega-cluster relabels through sort-merge joins).
 
 Durable state per fold is O(batch), never O(corpus): a fold's checkpoint dir
 holds ``ingest_delta`` / ``embed_delta`` / ``block_index_delta`` /
 ``block_sizes_delta`` / ``pairs_delta`` / ``clusters_delta``
 plus a parent pointer to the base dir (the parquet analogue of an Iceberg
 APPEND + a small overwrite). Full tables are reconstructed through the chain
-(read_stage_chain / read_clusters_chain); ``compact_checkpoint`` periodically
+(read_stage_chain / read_clusters_chain); the cluster table's override —
+base rows masked by the delta's ids, delta rows in their place — is one
+helper, ``_override``, shared by the chain read and the fold's own full
+assignment, and it broadcasts the delta's ids while they fit, so the root
+table is scanned, never shuffled. ``compact_checkpoint`` periodically
 collapses a long chain back into materialized tables.
 
 For CONTINUOUS arrival, streaming/er_stream.py drives this operator from a
@@ -71,6 +78,7 @@ from mel_spark.pipeline import (
     block_stage,
     embed_stage,
     ingest,
+    min_mid_labels,
 )
 from mel_spark.sources.checkpoint import LINEAGE_COLS, CheckpointManager
 
@@ -169,7 +177,10 @@ def read_clusters_chain(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     latest override, and ONE anti-join masks the root — a depth-50 chain
     costs 50 cheap unions + 1 shuffle agg + 1 join, not 50 joins (the
     previous recursive construction blew up the analyzer before any data
-    moved)."""
+    moved). The anti-join is the fold's own override (``_override``): it
+    broadcasts the overridden id set while that fits, so the root table is
+    scanned, never shuffled; ``latest`` is a lazy local checkpoint, so the
+    size probe materializes exactly what the join then reads."""
     drop = list(LINEAGE_COLS)
     root, folds = chain_dirs(ckpt_dir, "clusters")
     base = CheckpointManager(root).read("clusters", spark).drop(*drop).select(
@@ -189,9 +200,7 @@ def read_clusters_chain(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     latest = deltas.groupBy("mention_id").agg(
         F.max_by("cluster_id", F.col("_ord")).alias("cluster_id")
     )
-    return base.join(latest.select("mention_id"), "mention_id", "left_anti").unionByName(
-        latest
-    )
+    return _override(base, latest.localCheckpoint(eager=False))[0]
 
 
 def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> None:
@@ -240,6 +249,16 @@ def _hint(df: DataFrame, broadcast: bool) -> DataFrame:
 
 def _join_kind(broadcast: bool) -> str:
     return "broadcast" if broadcast else "sort_merge"
+
+
+def _override(base: DataFrame, delta: DataFrame) -> tuple[DataFrame, bool]:
+    """``base`` with ``delta``'s rows in place of its own, by mention_id, and
+    whether the anti-join broadcast the delta's id set (iff it fits). The
+    chain read and the fold's full assignment both rebuild a table this way."""
+    ids = delta.select("mention_id")
+    broadcast = _fits(ids, _MENTION_ROW_BYTES)
+    out = base.join(_hint(ids, broadcast), "mention_id", "left_anti").unionByName(delta)
+    return out, broadcast
 
 
 def content_roots(mentions: DataFrame, clusters: DataFrame) -> DataFrame:
@@ -451,12 +470,12 @@ def incremental_update(
     * ``probe``: over ``base_keys_table`` the delta keys are broadcast iff
       they fit; over the chain read always (a sort-merge probe there would
       shuffle the corpus key stream);
-    * ``relabel``: the relabel's build sides — the touched mentions, and the
-      touched clusters' members plus the batch's mentions, which a fold
-      touching a mega-cluster pushes past any broadcast — are broadcast iff
-      both measured frames fit;
-    * ``override``: the anti-join that rebuilds the full assignment
-      broadcasts the ``clusters_delta`` id set iff it fits.
+    * ``relabel``: the relabel's build sides — the touched mentions and the
+      touched clusters' members, which a fold touching a mega-cluster pushes
+      past any broadcast — are broadcast iff both measured frames fit;
+    * ``override``: the anti-join that rebuilds the full assignment — the
+      same helper the chain read uses — broadcasts the ``clusters_delta``
+      id set iff it fits.
 
     ``probe`` and ``relabel`` are measured inside the stage that uses them,
     so a resumed stage measures nothing and reports None.
@@ -638,11 +657,13 @@ def incremental_update(
         base_at_delta = block_sizes_stage(
             base_keys.join(F.broadcast(dk_distinct), "block_key", "left_semi")
         )
+    # a lazy local checkpoint: block_stage's salt join and probe_keys' hot-set
+    # joins all read the totals, which would otherwise repeat their subtree
     totals = (
         base_at_delta.unionByName(delta_sizes)
         .groupBy("block_key")
         .agg(F.sum("block_size").alias("block_size"))
-    )
+    ).localCheckpoint(eager=False)
     hot_keys = totals.filter(F.col("block_size") > cfg.salt_threshold).select("block_key")
 
     def _scored() -> DataFrame:
@@ -697,12 +718,12 @@ def incremental_update(
             .distinct()
         )
         probe_csids = edge_csids.unionByName(new_m.select("csid")).distinct()
-        # build sides from here on are bounded by TOUCHED-CLUSTER MEMBERSHIP
-        # plus the batch's mentions, not by the batch alone: broadcast them
-        # only while the touched mentions and the touched clusters' members
-        # plus the batch's mentions both fit. Each measured corpus frame is
-        # the one its join reads, so no corpus table is scanned twice. The
-        # hints must be explicit: er_job disables auto-broadcast.
+        # build sides from here on are bounded by TOUCHED-CLUSTER MEMBERSHIP,
+        # not by the batch alone: broadcast them only while the touched
+        # mentions and the touched clusters' members both fit. Each measured
+        # corpus frame is the one its join reads, so no corpus table is
+        # scanned twice. The hints must be explicit: er_job disables
+        # auto-broadcast.
         mentions_touch = _capture(
             "mentions_touch",
             mentions_b.select("csid", "mention_id").join(
@@ -732,44 +753,36 @@ def incremental_update(
                 F.broadcast(touched_base), "cluster_id", "left_semi"
             ).select("mention_id", F.col("cluster_id").alias("_base_root")),
         ).localCheckpoint(eager=False)
-        # the relabelled id set below is exactly these members plus the
-        # batch's mentions (a new mention's known content is a touched one)
-        rel_ids = touched_members.select("mention_id").unionByName(
-            new_m.select("mention_id")
-        )
-        broadcast = broadcast and _fits(rel_ids, _MENTION_ROW_BYTES)
+        broadcast = broadcast and _fits(touched_members, _MENTION_ROW_BYTES)
         joins["relabel"] = _join_kind(broadcast)
-        tm = _hint(touched_members, broadcast).join(
-            mentions_b.select("mention_id", "mid", "csid"), "mention_id"
+        # ONE frame to relabel: the touched members carry their base label,
+        # the batch's mentions none (_ingest_delta dropped every known
+        # mention_id). A batch mention of a known content takes that
+        # content's base label (its cluster is touched, so its members are
+        # here); an unseen content starts as its own root. The remap then
+        # moves every merged root, and min_mid_labels labels the groups —
+        # min over the COMPLETE membership of each touched group, exactly
+        # pipeline.run_pipeline's labeling.
+        members = (
+            _hint(touched_members, broadcast)
+            .join(mentions_b.select("mention_id", "mid", "csid"), "mention_id")
+            .unionByName(
+                new_m.select("mention_id", "mid", "csid"), allowMissingColumns=True
+            )
+            .withColumn(
+                "_r0",
+                F.coalesce(
+                    F.max("_base_root").over(Window.partitionBy("csid")), F.col("csid")
+                ),
+            )
+            .join(remap, F.col("_r0") == F.col("_node"), "left")
+            .withColumn("_root", F.coalesce("_new_root", "_r0"))
         )
-        old_assign = (
-            tm.select("csid", F.col("_base_root").alias("root"))
-            .distinct()
-            .join(remap, F.col("root") == F.col("_node"), "left")
-            .select("csid", F.coalesce("_new_root", "root").alias("_root"))
-        )
-        new_assign = (
-            feats_new.select("csid")
-            .join(remap, feats_new["csid"] == remap["_node"], "left")
-            .select("csid", F.coalesce("_new_root", F.col("csid")).alias("_root"))
-        )
-        assign = old_assign.unionByName(new_assign)
-        expanded = (
-            tm.select("mid", "mention_id", "csid")
-            .unionByName(new_m.select("mid", "mention_id", "csid"))
-            .join(assign, "csid")
-        )
-        # relabel deterministically (min mid per final root) — min over the
-        # COMPLETE membership of each touched group, matching
-        # pipeline.run_pipeline's output contract exactly
-        mins = expanded.groupBy("_root").agg(F.min("mid").alias("cluster_id"))
-        rel = expanded.join(mins, "_root").select("mention_id", "cluster_id")
-        base_sub = clusters_b.join(
-            _hint(rel.select("mention_id"), broadcast), "mention_id", "left_semi"
-        ).select("mention_id", F.col("cluster_id").alias("_old"))
         return (
-            rel.join(base_sub, "mention_id", "left")
-            .filter(F.col("_old").isNull() | (F.col("_old") != F.col("cluster_id")))
+            min_mid_labels(members)
+            .filter(
+                F.col("_base_root").isNull() | (F.col("_base_root") != F.col("cluster_id"))
+            )
             .select("mention_id", "cluster_id")
         )
 
@@ -777,17 +790,11 @@ def incremental_update(
     if ckpt is not None:
         _write_parent(checkpoint_dir, base_checkpoint)
     # full updated assignment = override the base with the delta (identical
-    # to a from-scratch relabel per the touched-clusters argument above);
-    # the anti-join's build side is the delta id set — broadcast it while it
-    # fits, so reconstructing the full table scans the corpus instead of
-    # shuffling it. The delta is a stage read, so a fresh and a resumed fold
-    # measure the same frame.
-    delta_ids = delta.select("mention_id")
-    broadcast = _fits(delta_ids, _MENTION_ROW_BYTES)
+    # to a from-scratch relabel per the touched-clusters argument above),
+    # through the chain read's own override. The delta is a stage read, so
+    # a fresh and a resumed fold measure the same frame.
+    clusters, broadcast = _override(clusters_b, delta)
     joins["override"] = _join_kind(broadcast)
-    clusters = clusters_b.join(
-        _hint(delta_ids, broadcast), "mention_id", "left_anti"
-    ).unionByName(delta)
     if plan_capture is not None:
         plan_capture["clusters_full"] = (
             clusters._jdf.queryExecution().executedPlan().toString()

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from mel_spark.functions import text as T
 from mel_spark.operators import blocking, cluster, pairs
@@ -196,6 +197,16 @@ def pair_stage(blocks: DataFrame, feats: DataFrame, cfg: ERConfig) -> DataFrame:
     )
 
 
+def min_mid_labels(members: DataFrame) -> DataFrame:
+    """The output contract's cluster label: every row of ``members`` gains
+    ``cluster_id`` = the minimum mention ``mid`` over its ``_root`` group
+    (deterministic, independent of how the components were found), in one
+    window, so the group's rows are exchanged once. The full run and the
+    incremental fold both label through it, which is what makes a fold's
+    labels byte-identical to a full run's."""
+    return members.withColumn("cluster_id", F.min("mid").over(Window.partitionBy("_root")))
+
+
 def run_pipeline(
     spark: SparkSession,
     repos: DataFrame,
@@ -264,8 +275,7 @@ def run_pipeline(
             cc, mentions.select(F.col("csid").alias("mention_id"))
         ).select(F.col("mention_id").alias("csid"), F.col("cluster_id").alias("_root"))
         expanded = mentions.select("mid", "mention_id", "csid").join(cl, "csid")
-        mins = expanded.groupBy("_root").agg(F.min("mid").alias("cluster_id"))
-        return expanded.join(mins, "_root").select("mention_id", "cluster_id")
+        return min_mid_labels(expanded).select("mention_id", "cluster_id")
 
     clusters, _ = ckpt.get_or_compute("clusters", spark, _cluster, fingerprint=fp)
     return {

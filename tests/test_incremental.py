@@ -545,6 +545,66 @@ def test_fold_clusters_plan_scans_corpus_never_shuffles_it(
     assert audited_scans > 0, f"no base-table scans audited: {list(plans)}"
 
 
+def test_chained_fold_plan_scans_root_never_shuffles_it(
+    spark, tmp_path, er_job_joins, full_scan_locations, monkeypatch
+):
+    """The shuffle discipline holds for a fold onto a FOLD dir too (every
+    streaming epoch after the first, every daily fold onto yesterday's fold):
+    base → fold1 → fold2, and in fold2's captured plans and in the chain read
+    of fold2 every scan of the ROOT run's tables feeds a Broadcast*Join — the
+    chain read's override broadcasts the overridden ids while they fit. The
+    relabel carries each member's base label instead of re-reading it, so
+    ``clusters_delta``'s own plan scans no base cluster table at all. Past the
+    bound (budget 0) the chain read's anti-join over the root ``clusters``
+    joins sort-merge, with the same clusters."""
+    from mel_spark.operators import incremental
+    from mel_spark.operators.incremental import read_clusters_chain
+
+    tables = generate_repos(GenConfig(n_files=300, seed=31))
+    repos = spark.createDataFrame(tables["repos"])
+    h = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10))
+    base, f1, f2 = (str(tmp_path / d) for d in ("base", "f1", "f2"))
+    run_pipeline(spark, repos.filter(h < 6), base)
+    incremental_update(spark, base, repos.filter(h.between(6, 7)), checkpoint_dir=f1)
+    plans: dict[str, str] = {}
+    out = incremental_update(
+        spark, f1, repos.filter(h > 7), checkpoint_dir=f2, plan_capture=plans
+    )
+    assert out["joins"] == {
+        "probe": "broadcast", "relabel": "broadcast", "override": "broadcast"
+    }
+    chain = read_clusters_chain(spark, f2)
+    plans["chain_read"] = chain._jdf.queryExecution().executedPlan().toString()
+
+    audited_scans = 0
+    for stage, plan in plans.items():
+        nodes = plan_nodes(plan)
+        root_scans = scans(nodes, corpus_scan(base))
+        audited_scans += len(root_scans)
+        for i in root_scans:
+            hit = next(
+                (t for t in ancestors(nodes, i) if "Exchange" in t or "Join" in t), None
+            )
+            assert hit is not None and "Join" in hit and "Broadcast" in hit, (
+                f"[{stage}] root scan {nodes[i][1]!r} nearest exchange/join "
+                f"ancestor is {hit!r}:\n{plan}"
+            )
+    assert scans(plan_nodes(plans["chain_read"]), corpus_scan(base, "clusters"))
+    assert audited_scans > 0
+    delta_nodes = plan_nodes(plans["clusters_delta"])
+    assert not scans(delta_nodes, corpus_scan(base, "clusters"))
+    assert not scans(delta_nodes, corpus_scan(f1, "clusters_delta"))
+
+    want = _clusters(chain).collect()
+    monkeypatch.setattr(incremental, "FOLD_BROADCAST_MAX_BYTES", 0)
+    chain_sm = read_clusters_chain(spark, f2)
+    plan_sm = chain_sm._jdf.queryExecution().executedPlan().toString()
+    assert join_above(plan_sm, corpus_scan(base, "clusters"), "LeftAnti") == {
+        "SortMergeJoin"
+    }
+    assert sorted(_clusters(chain_sm).collect()) == sorted(want)
+
+
 @pytest.mark.parametrize(
     "gen_seed,split_seed,base_pct",
     [(101, 1, 8), (202, 2, 5), (303, 3, 2)],
