@@ -48,7 +48,6 @@ never as a silently-smaller index.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -64,6 +63,7 @@ from mel_spark.operators.similarity import (
     _reorder,
     _side,
 )
+from mel_spark.sources.checkpoint import read_json, write_json
 
 _META = "_META.json"
 _LISTS = "lists"
@@ -84,14 +84,12 @@ def _meta_path(path: str) -> str:
 def read_index_meta(path: str) -> dict:
     """Load and validate the index commit marker. Raises FileNotFoundError
     for a missing/half-built index, ValueError for a version mismatch."""
-    mp = _meta_path(path)
-    if not os.path.exists(mp):
+    meta = read_json(_meta_path(path))
+    if meta is None:
         raise FileNotFoundError(
             f"ivf index at {path!r} has no {_META} — not built, or the build "
             "crashed before commit (rebuild with build_ivf_index)"
         )
-    with open(mp) as f:
-        meta = json.load(f)
     if meta.get("version") != META_VERSION:
         raise ValueError(
             f"ivf index at {path!r} has version {meta.get('version')!r}, "
@@ -196,7 +194,7 @@ def build_ivf_index(
     }
     if token is not None:
         meta["epoch_tokens"] = {"0": token}
-    _commit_meta(path, meta)
+    write_json(_meta_path(path), meta)  # commit marker: written LAST
     return meta
 
 
@@ -241,13 +239,6 @@ def _write_list_epoch(
     )
     encoded.write.partitionBy("cell", "epoch").mode("append").parquet(lists_path)
     return int(obs.get["n"])
-
-
-def _commit_meta(path: str, meta: dict) -> None:
-    tmp = _meta_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _meta_path(path))  # commit marker: written LAST
 
 
 def _clean_uncommitted_epochs(lists_path: str, committed: list) -> None:
@@ -345,7 +336,7 @@ def append_to_ivf_index(
         n for e, n in meta["epoch_rows"].items() if e != "0"
     )
     meta["needs_refit"] = bool(appended > refit_threshold * meta["rows"])
-    _commit_meta(path, meta)
+    write_json(_meta_path(path), meta)  # commit marker: written LAST
     return meta
 
 

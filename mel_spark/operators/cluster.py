@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mel_spark.sources.checkpoint import read_json, write_json
+
 logger = logging.getLogger(__name__)
 
 # graphs with at most this many edges (self-loops dropped) are solved on the
@@ -216,7 +218,6 @@ def connected_components(
     without it, rerunning into the same dir with a different input/threshold
     would silently resume from the previous run's converged edges and emit
     stale components."""
-    import json as _json
     import os as _os
 
     spark = pairs.sparkSession
@@ -234,11 +235,9 @@ def connected_components(
     prev_fp = None
     converged = False
     if checkpoint_dir:
-        _os.makedirs(checkpoint_dir, exist_ok=True)
         state_path = _os.path.join(checkpoint_dir, "_CC_STATE.json")
-        if _os.path.exists(state_path):
-            with open(state_path) as f:
-                state = _json.load(f)
+        state = read_json(state_path)
+        if state is not None:
             if state.get("input_fp") != input_fingerprint:
                 logger.warning(
                     "connected_components: %s holds state for a different input "
@@ -271,18 +270,15 @@ def connected_components(
         return spark.read.parquet(path), (int(m["n"]), int(m["h"]))
 
     def _write_state(it: int, fp: tuple[int, int], converged: bool) -> None:
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {
-                    "iteration": it,
-                    "fingerprint": list(fp),
-                    "converged": converged,
-                    "input_fp": input_fingerprint,
-                },
-                f,
-            )
-        _os.replace(tmp, state_path)  # atomic: round is resumable
+        write_json(  # atomic: round is resumable
+            state_path,
+            {
+                "iteration": it,
+                "fingerprint": list(fp),
+                "converged": converged,
+                "input_fp": input_fingerprint,
+            },
+        )
 
     if start_iter == 0:
         # lazy: the plan is truncated NOW (LogicalRDD); the probe's job

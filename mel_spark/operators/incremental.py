@@ -49,8 +49,14 @@ to the NEW batch:
 Durable state per fold is O(batch), never O(corpus): a fold's checkpoint dir
 holds ``ingest_delta`` / ``embed_delta`` / ``block_index_delta`` /
 ``block_sizes_delta`` / ``pairs_delta`` / ``clusters_delta``
-plus a parent pointer to the base dir (the parquet analogue of an Iceberg
-APPEND + a small overwrite). Full tables are reconstructed through the chain
+plus ``_PARENT.json``, a pointer to the base dir (the parquet analogue of an
+Iceberg APPEND + a small overwrite). It is the durable-state protocol of
+sources/checkpoint.py: each delta stage is fingerprinted by
+``stage_fingerprint`` over (config, base dir, input token), every marker and
+the pointer commit through its one atomic ``write_json``, and every walk of
+the chain — ``chain_dirs``, ``chain_depth``, the bucketed index's coverage
+check — follows the pointers through its ``walk_chain``. Full tables are
+reconstructed through the chain
 (read_stage_chain / read_clusters_chain); the cluster table's override —
 base rows masked by the delta's ids, delta rows in their place — is one
 helper, ``_override``, shared by the chain read and the fold's own full
@@ -64,6 +70,8 @@ replay-idempotent via epoch-fingerprinted fold dirs).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -80,10 +88,15 @@ from mel_spark.pipeline import (
     ingest,
     min_mid_labels,
 )
-from mel_spark.sources.checkpoint import LINEAGE_COLS, CheckpointManager
-
-
-PARENT_FILE = "_PARENT.json"
+from mel_spark.sources.checkpoint import (
+    LINEAGE_COLS,
+    PARENT_FILE,
+    CheckpointManager,
+    parent_of as _parent_of,  # noqa: F401 — re-exported: the chain pointer read
+    stage_fingerprint,
+    walk_chain,
+    write_json,
+)
 
 # The fold broadcasts a join side only while its broadcast hash relation
 # stays within this many bytes: ~200 MB, a few percent of the default 8 GB
@@ -100,55 +113,25 @@ _KEY_ROW_BYTES = 84
 _MENTION_ROW_BYTES = 378
 
 
-def _parent_of(ckpt_dir: str) -> str | None:
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(ckpt_dir, PARENT_FILE)
-    if not _os.path.exists(p):
-        return None
-    with open(p) as f:
-        return _json.load(f)["base"]
-
-
 def _write_parent(ckpt_dir: str, base_dir: str) -> None:
-    import json as _json
-    import os as _os
-
-    _os.makedirs(ckpt_dir, exist_ok=True)
-    tmp = _os.path.join(ckpt_dir, PARENT_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"base": str(base_dir)}, f)
-    _os.replace(tmp, _os.path.join(ckpt_dir, PARENT_FILE))
+    write_json(os.path.join(ckpt_dir, PARENT_FILE), {"base": str(base_dir)})
 
 
 def chain_dirs(ckpt_dir: str, stage: str) -> tuple[str, list[str]]:
     """Walk the parent pointers from ``ckpt_dir`` until a dir holds the FULL
-    ``stage`` table. Returns (root_dir, fold_dirs oldest→newest). Iterative —
-    a year of daily folds must not hit Python's recursion limit before the
-    compaction policy bounds the chain."""
-    import os as _os
-
+    ``stage`` table. Returns (root_dir, fold_dirs oldest→newest)."""
     folds: list[str] = []
-    cur = ckpt_dir
-    while not _os.path.exists(CheckpointManager(cur)._marker(stage)):
-        parent = _parent_of(cur)
-        if parent is None:
-            raise FileNotFoundError(f"{ckpt_dir}: no '{stage}' stage and no parent chain")
-        folds.append(cur)
-        cur = parent
-    folds.reverse()
-    return cur, folds
+    for d in walk_chain(ckpt_dir):
+        if os.path.exists(CheckpointManager(d)._marker(stage)):
+            return d, folds[::-1]
+        folds.append(d)
+    raise FileNotFoundError(f"{ckpt_dir}: no '{stage}' stage and no parent chain")
 
 
 def chain_depth(ckpt_dir: str) -> int:
     """Number of parent hops from ``ckpt_dir`` to the chain root (0 = a
     from-scratch or compacted dir). Drives the auto-compaction policy."""
-    depth, cur = 0, ckpt_dir
-    while (parent := _parent_of(cur)) is not None:
-        depth += 1
-        cur = parent
-    return depth
+    return sum(1 for _ in walk_chain(ckpt_dir)) - 1
 
 
 def read_stage_chain(spark: SparkSession, ckpt_dir: str, stage: str) -> DataFrame:
@@ -207,8 +190,6 @@ def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> None:
     """Materialize the full ingest/embed/clusters tables into ``ckpt_dir`` and
     drop its parent pointer — run periodically (e.g. weekly over daily folds)
     to bound chain depth; afterwards the dir reads like a from-scratch run."""
-    import os as _os
-
     mgr = CheckpointManager(ckpt_dir)
     have_index = False
     for stage in ("ingest", "embed", "block_index"):
@@ -229,9 +210,9 @@ def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> None:
         # combiner-friendly aggregation, guaranteed consistent with the index
         mgr.write("block_sizes", block_sizes_stage(mgr.read("block_index", spark)))
     mgr.write("clusters", read_clusters_chain(spark, ckpt_dir))
-    parent = _os.path.join(ckpt_dir, PARENT_FILE)
-    if _os.path.exists(parent):
-        _os.remove(parent)
+    parent = os.path.join(ckpt_dir, PARENT_FILE)
+    if os.path.exists(parent):
+        os.remove(parent)
 
 
 def _fits(df: DataFrame, row_bytes: int) -> bool:
@@ -480,12 +461,7 @@ def incremental_update(
     ``probe`` and ``relabel`` are measured inside the stage that uses them,
     so a resumed stage measures nothing and reports None.
     """
-    import hashlib as _hashlib
-    import json as _json
-    import os as _os
-    from dataclasses import asdict as _asdict
-
-    if checkpoint_dir is not None and _os.path.abspath(checkpoint_dir) == _os.path.abspath(
+    if checkpoint_dir is not None and os.path.abspath(checkpoint_dir) == os.path.abspath(
         base_checkpoint
     ):
         # a fold dir chains off its base via _PARENT.json; folding INTO the
@@ -517,12 +493,7 @@ def incremental_update(
     # parquet, never recompute the Arrow featurizer or the probe joins), and a
     # crashed fold resumes from its last green delta stage
     ckpt = CheckpointManager(checkpoint_dir) if checkpoint_dir else None
-    fp = _hashlib.sha256(
-        (
-            _json.dumps(_asdict(cfg), sort_keys=True)
-            + "\x00" + str(base_checkpoint) + "\x00" + input_token
-        ).encode()
-    ).hexdigest()
+    fp = stage_fingerprint(cfg, str(base_checkpoint), input_token)
 
     def _capture(name: str, df: DataFrame) -> DataFrame:
         if plan_capture is not None:
@@ -687,11 +658,15 @@ def incremental_update(
             .agg(F.min("block_key").alias("block_key"))
         )
         # 4. score with the shared fused kernel over ONLY the records that
-        # appear in a candidate pair (broadcast semi-join prune of feats_all)
+        # appear in a candidate pair (broadcast semi-join prune of feats_all).
+        # The scorer reads ``records`` once per pair side, so the endpoint
+        # ids are one explode over ``cand``, materialized once (a lazy local
+        # checkpoint): otherwise each side re-derives ``cand``, probe and
+        # all, and the plan holds it five times
         pair_ids = (
-            cand.select(F.col("mention_id_a").alias("mention_id"))
-            .unionByName(cand.select(F.col("mention_id_b").alias("mention_id")))
+            cand.select(F.explode(F.array("mention_id_a", "mention_id_b")).alias("mention_id"))
             .distinct()
+            .localCheckpoint(eager=False)
         )
         records = feats_all.select(
             F.col("csid").alias("mention_id"), "emb", "xs"
@@ -703,7 +678,7 @@ def incremental_update(
     scored = _stage("pairs_delta", _scored)
     matches_new = pairs.match_pairs(scored, cfg.threshold)
 
-    cc_dir = _os.path.join(checkpoint_dir, "cc_rounds") if checkpoint_dir else None
+    cc_dir = os.path.join(checkpoint_dir, "cc_rounds") if checkpoint_dir else None
 
     def _clusters_delta() -> DataFrame:
         # 5. incremental components over root-collapsed edges. The roots

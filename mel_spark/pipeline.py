@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 from mel_spark.functions import text as T
 from mel_spark.operators import blocking, cluster, pairs
-from mel_spark.sources.checkpoint import CheckpointManager
+from mel_spark.sources.checkpoint import CheckpointManager, stage_fingerprint
 
 
 @dataclass
@@ -224,13 +224,7 @@ def run_pipeline(
     ``redirects`` (entity-id redirect table applied at ingest), include its
     identity (path/version) in ``input_token`` so a changed redirect table
     invalidates the checkpoints."""
-    import hashlib
-    import json
-    from dataclasses import asdict
-
-    fp = hashlib.sha256(
-        (json.dumps(asdict(cfg), sort_keys=True) + "\x00" + input_token).encode()
-    ).hexdigest()
+    fp = stage_fingerprint(cfg, input_token)
     ckpt = CheckpointManager(checkpoint_dir)
     mentions, _ = ckpt.get_or_compute(
         "ingest", spark, lambda: ingest(repos, redirects=redirects),

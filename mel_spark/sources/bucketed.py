@@ -20,11 +20,16 @@ modulus for the same reason.
 Append lifecycle: each fold APPENDS its delta keys (Spark verifies the bucket
 spec matches), so the table stays the union of the root run's index plus
 every fold's delta — identical content to ``read_stage_chain(...,
-'block_index')``, pre-bucketed. Appends must be fenced by the fold's
-checkpoint markers (append once, after the fold's ``block_index_delta`` stage
-is green) — a replayed fold that re-appended would duplicate base rows, which
+'block_index')``, pre-bucketed. Appends are fenced by an append marker in
+the fold's checkpoint dir, ``_BUCKETED_APPEND_<table>.json`` (append once,
+after the fold's ``block_index_delta`` stage is green, then commit the
+marker) — a replayed fold that re-appended would duplicate base rows, which
 is OUTPUT-NEUTRAL: pairs are distinct-aggregated and the probe cap is a
 dense_rank (a duplicated member counts once), so the only cost is storage.
+The append marker and the meta sidecar below commit through
+sources/checkpoint.py's atomic ``write_json``; the coverage check walks the
+fold chain with its ``walk_chain`` and names the first gap it finds, which
+``ensure_bucketed_index`` logs in its rebuild warning.
 
 The catalog entry is session-scoped under Spark's default in-memory catalog;
 production deployments back it with a real metastore (Hive/Glue/Unity) so the
@@ -43,12 +48,13 @@ cost compaction already pays.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mel_spark.sources.checkpoint import read_json, walk_chain, write_json
 
 
 META_FILE = "_MEL_BUCKETED_META.json"
@@ -93,10 +99,12 @@ def append_bucketed_index(df: DataFrame, table: str) -> None:
             f"append_bucketed_index: table {table!r} does not exist — write it "
             "with write_bucketed_index from the base run's block_index first"
         )
-    n_buckets = _bucket_spec(spark, table)
+    n_buckets = _table_info(spark, table).get("Num Buckets")
+    if n_buckets is None:
+        raise ValueError(f"{table!r} is not a bucketed table")
     (
         df.select("block_key", "mention_id")
-        .write.bucketBy(n_buckets, "block_key")
+        .write.bucketBy(int(n_buckets), "block_key")
         .sortBy("block_key")
         .mode("append")
         .format("parquet")
@@ -121,26 +129,17 @@ def read_bucketed_index(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def _bucket_spec(spark: SparkSession, table: str) -> int:
-    row = [
-        r
+def _table_info(spark: SparkSession, table: str) -> dict[str, str]:
+    """The catalog's rows for ``table`` (``Num Buckets``, ``Location``, ...)
+    by name, from one ``DESCRIBE TABLE EXTENDED``."""
+    return {
+        r["col_name"]: r["data_type"]
         for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-        if r["col_name"] == "Num Buckets"
-    ]
-    if not row:
-        raise ValueError(f"{table!r} is not a bucketed table")
-    return int(row[0]["data_type"])
+    }
 
 
 def _table_location(spark: SparkSession, table: str) -> str:
-    row = [
-        r
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-        if r["col_name"] == "Location"
-    ]
-    if not row:
-        raise ValueError(f"{table!r} has no Location")
-    loc = row[0]["data_type"]
+    loc = _table_info(spark, table)["Location"]
     return loc[len("file:"):] if loc.startswith("file:") else loc
 
 
@@ -161,27 +160,7 @@ def record_fold_appended(fold_ckpt_dir: str, table: str) -> None:
     duplicate index rows are output-neutral (pairs distinct-aggregate; the
     probe cap is a dense_rank, so a duplicated member counts once) and cost
     only storage; a crash before the append just retries cleanly."""
-    p = os.path.join(fold_ckpt_dir, _marker_file(table))
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"table": table}, f)
-    os.replace(tmp, p)
-
-
-def _read_meta(location: str) -> dict:
-    p = os.path.join(location, META_FILE)
-    if not os.path.exists(p):
-        raise ValueError(f"bucketed index at {location} has no {META_FILE}")
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_meta(location: str, meta: dict) -> None:
-    p = os.path.join(location, META_FILE)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, p)
+    write_json(os.path.join(fold_ckpt_dir, _marker_file(table)), {"table": table})
 
 
 def _register_external(spark: SparkSession, table: str, path: str) -> None:
@@ -190,7 +169,7 @@ def _register_external(spark: SparkSession, table: str, path: str) -> None:
     the data files + meta sidecar are the durable truth). The DDL must carry
     the SAME bucket spec the files were written with — Spark trusts the
     catalog spec when planning bucketed scans."""
-    meta = _read_meta(path)
+    meta = read_json(os.path.join(path, META_FILE))
     schema = spark.read.parquet(path).schema
     cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
     spark.sql(
@@ -200,31 +179,28 @@ def _register_external(spark: SparkSession, table: str, path: str) -> None:
     )
 
 
-def _validate_chain_coverage(spark: SparkSession, table: str, base_checkpoint: str) -> None:
-    """Assert ``table`` holds exactly the chain's block-index content: walk the
-    parent pointers from the current base back to the table's creation point;
-    every fold dir on the way must carry this table's append marker. Raises
-    ValueError when a fold skipped its append, or when the creation point is
-    no longer on the chain (compaction removed the pointers, or the table
-    belongs to a different run) — both mean the table is missing keys and the
-    probe would silently miss base candidates. O(depth) metadata reads, no
-    data scan."""
-    from mel_spark.operators.incremental import _parent_of
-
-    created = os.path.abspath(_read_meta(_table_location(spark, table))["created_base"])
-    cur = os.path.abspath(base_checkpoint)
-    while cur != created:
-        if not fold_appended(cur, table):
-            raise ValueError(
-                f"fold {cur} never appended its block_index_delta to {table!r}"
-            )
-        parent = _parent_of(cur)
-        if parent is None:
-            raise ValueError(
-                f"creation base {created} is not on the chain of {base_checkpoint} "
-                "(chain compacted, or table built for a different run)"
-            )
-        cur = os.path.abspath(parent)
+def _coverage_gap(spark: SparkSession, table: str, base_checkpoint: str) -> str | None:
+    """Why the registered ``table`` does not hold exactly the chain's
+    block-index content at ``base_checkpoint`` — None when it does. Walks the
+    parent pointers from the current base back to the table's creation
+    point; every fold dir on the way must carry this table's append marker.
+    A fold that skipped its append, or a creation point no longer on the
+    chain (compaction removed the pointers, or the table belongs to a
+    different run), means the table is missing keys and the probe would
+    silently miss base candidates. O(depth) metadata reads, no data scan."""
+    meta = read_json(os.path.join(_table_location(spark, table), META_FILE))
+    if meta is None:
+        return f"{table!r} has no {META_FILE}"
+    created = os.path.abspath(meta["created_base"])
+    for d in map(os.path.abspath, walk_chain(base_checkpoint)):
+        if d == created:
+            return None
+        if not fold_appended(d, table):
+            return f"fold {d} never appended its block_index_delta to {table!r}"
+    return (
+        f"creation base {created} is not on the chain of {base_checkpoint} "
+        "(chain compacted, or table built for a different run)"
+    )
 
 
 def chain_covered(spark: SparkSession, table: str, base_checkpoint: str) -> bool:
@@ -233,13 +209,9 @@ def chain_covered(spark: SparkSession, table: str, base_checkpoint: str) -> bool
     i.e. the table's content equals the chain's block index at
     ``base_checkpoint``. Callers that are about to COMPACT the chain run this
     first, while the parent pointers the walk needs still exist."""
-    if not spark.catalog.tableExists(table):
-        return False
-    try:
-        _validate_chain_coverage(spark, table, base_checkpoint)
-        return True
-    except ValueError:
-        return False
+    return spark.catalog.tableExists(table) and _coverage_gap(
+        spark, table, base_checkpoint
+    ) is None
 
 
 def reanchor_meta(spark: SparkSession, table: str, new_base: str) -> None:
@@ -251,9 +223,9 @@ def reanchor_meta(spark: SparkSession, table: str, new_base: str) -> None:
     a second corpus-index bucketed rewrite with one sidecar write. Future
     validations then walk zero hops instead of failing on the dropped parent
     pointers and triggering that needless rebuild."""
-    loc = _table_location(spark, table)
-    _write_meta(
-        loc, {**_read_meta(loc), "created_base": os.path.abspath(new_base)}
+    meta_path = os.path.join(_table_location(spark, table), META_FILE)
+    write_json(
+        meta_path, {**read_json(meta_path), "created_base": os.path.abspath(new_base)}
     )
 
 
@@ -295,14 +267,13 @@ def ensure_bucketed_index(
         ):
             _register_external(spark, table, path)
         if spark.catalog.tableExists(table):
-            try:
-                _validate_chain_coverage(spark, table, base_checkpoint)
+            gap = _coverage_gap(spark, table, base_checkpoint)
+            if gap is None:
                 return False
-            except ValueError as e:
-                warnings.warn(
-                    f"bucketed index {table!r} diverged from the fold chain "
-                    f"({e}); rebuilding from the chain"
-                )
+            warnings.warn(
+                f"bucketed index {table!r} diverged from the fold chain "
+                f"({gap}); rebuilding from the chain"
+            )
     if n_buckets is None:
         n_buckets = DEFAULT_BUCKETS
     df = read_stage_chain(spark, base_checkpoint, "block_index")
@@ -321,11 +292,8 @@ def ensure_bucketed_index(
                 f"{path} that has no {META_FILE} (not a bucketed index dir)"
             )
     write_bucketed_index(df, table, n_buckets=n_buckets, path=path)
-    _write_meta(
-        _table_location(spark, table),
-        {
-            "created_base": os.path.abspath(base_checkpoint),
-            "n_buckets": n_buckets,
-        },
+    write_json(
+        os.path.join(_table_location(spark, table), META_FILE),
+        {"created_base": os.path.abspath(base_checkpoint), "n_buckets": n_buckets},
     )
     return True

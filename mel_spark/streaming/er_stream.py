@@ -41,7 +41,6 @@ from mel_spark.operators.ann_index import (
     read_index_meta,
 )
 from mel_spark.operators.incremental import (
-    _parent_of,
     chain_depth,
     compact_checkpoint,
     incremental_update,
@@ -49,7 +48,7 @@ from mel_spark.operators.incremental import (
 )
 from mel_spark.pipeline import ERConfig
 from mel_spark.sources import bucketed
-from mel_spark.sources.checkpoint import CheckpointManager
+from mel_spark.sources.checkpoint import CheckpointManager, parent_of, read_json, write_json
 
 
 def _head_path(fold_root: str) -> str:
@@ -100,16 +99,13 @@ class StreamingFoldState:
     total_folds: int = 0  # cumulative across invocations (persisted in _HEAD)
 
     def __post_init__(self) -> None:
-        import json as _json
-
         # normalize both chain anchors once: every comparison against
         # _HEAD.json / _PARENT.json contents must be textual-form-insensitive
         # (relative vs absolute, trailing slash)
         self.base_checkpoint = os.path.abspath(self.base_checkpoint)
         self.fold_root = os.path.abspath(self.fold_root)
-        if self.head is None and os.path.exists(_head_path(self.fold_root)):
-            with open(_head_path(self.fold_root)) as f:
-                meta = _json.load(f)
+        meta = read_json(_head_path(self.fold_root)) if self.head is None else None
+        if meta is not None:
             self.head = os.path.abspath(meta["head"])
             self.total_folds = int(meta.get("total_folds", 0))
 
@@ -117,14 +113,10 @@ class StreamingFoldState:
         return self.head or self.base_checkpoint
 
     def _advance(self, fold_dir: str) -> None:
-        import json as _json
-
-        os.makedirs(self.fold_root, exist_ok=True)
-        tmp = _head_path(self.fold_root) + ".tmp"
         self.total_folds += 1
-        with open(tmp, "w") as f:
-            _json.dump({"head": fold_dir, "total_folds": self.total_folds}, f)
-        os.replace(tmp, _head_path(self.fold_root))  # atomic
+        write_json(
+            _head_path(self.fold_root), {"head": fold_dir, "total_folds": self.total_folds}
+        )
         self.head = fold_dir
         self.epochs_folded += 1
 
@@ -230,7 +222,7 @@ def fold_micro_batch(state: StreamingFoldState, batch: DataFrame, epoch_id: int)
         # re-delivered although its fold (all delta stages) is already green
         # and is the chain head. Nothing to do.
         return {}
-    prior_parent = _parent_of(fold_dir)
+    prior_parent = parent_of(fold_dir)
     if prior_parent is not None and os.path.abspath(prior_parent) != os.path.abspath(
         state.current_base()
     ):

@@ -110,3 +110,70 @@ def test_observed_count_partitioned_write(spark, tmp_path):
     assert meta["rows"] == 57
     assert mgr.read("p0", spark).count() == 57
     assert mgr.exists("p0", spark)
+
+
+def test_marker_written_once_per_computed_stage(spark, tmp_path, monkeypatch):
+    """A computed stage commits its marker ONCE, ``elapsed_sec`` included —
+    no second read-modify-write to add the stage time afterwards."""
+    from mel_spark.sources import checkpoint
+
+    commits = []
+    real = checkpoint.write_json
+    monkeypatch.setattr(
+        checkpoint, "write_json", lambda path, obj: (commits.append(path), real(path, obj))
+    )
+    mgr = CheckpointManager(str(tmp_path))
+    mgr.get_or_compute("w1", spark, lambda: spark.range(3))
+    assert commits == [mgr._marker("w1")]
+    assert mgr.counters("w1")["elapsed_sec"] >= 0
+
+
+def test_stage_fingerprint_matches_the_recorded_hash():
+    """Checkpoint dirs already on disk keep resuming only while the hash is
+    unchanged: sha256 over the sorted-key config JSON and the identity
+    parts, NUL-separated, exactly as their markers record it."""
+    import hashlib
+    from dataclasses import asdict
+
+    from mel_spark.pipeline import ERConfig
+    from mel_spark.sources.checkpoint import stage_fingerprint
+
+    cfg = ERConfig(threshold=0.7)
+    cfg_json = json.dumps(asdict(cfg), sort_keys=True)
+    assert stage_fingerprint(cfg, "tok") == hashlib.sha256(
+        (cfg_json + "\x00" + "tok").encode()
+    ).hexdigest()
+    assert stage_fingerprint(cfg, "/base", "tok") == hashlib.sha256(
+        (cfg_json + "\x00" + "/base" + "\x00" + "tok").encode()
+    ).hexdigest()
+
+
+def test_durable_json_commits_only_through_the_protocol():
+    """Every marker and sidecar under mel_spark/ commits through
+    ``checkpoint.write_json``: no other module renames a file into place or
+    writes a ``.tmp`` sibling (checked on the source, no Spark)."""
+    import ast
+    import pathlib
+
+    import mel_spark
+
+    pkg = pathlib.Path(mel_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "sources" / "checkpoint.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            renames = (
+                isinstance(node, ast.Attribute) and node.attr in ("replace", "rename")
+                and isinstance(node.value, ast.Name) and node.value.id in ("os", "_os")
+            ) or (
+                isinstance(node, ast.ImportFrom) and node.module == "os"
+                and any(a.name in ("replace", "rename") for a in node.names)
+            )
+            tmp_name = (
+                isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and node.value.endswith(".tmp")
+            )
+            if renames or tmp_name:
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []

@@ -674,6 +674,29 @@ def test_fold_sort_merge_relabel_equals_broadcast(
     _assert_same_clusters(inc_sm["clusters"], full["clusters"])
 
 
+def test_pairs_delta_plan_reads_the_corpus_index_once_per_probe_branch(
+    spark, tmp_path, er_job_joins, full_scan_locations
+):
+    """The fold's candidate frame is built once in ``pairs_delta``'s plan:
+    the scorer streams it, and the endpoint ids that prune the records are
+    one explode over it, materialized once. So the corpus ``block_index``
+    is scanned once per probe branch (the cold raw-key join and the hot
+    salted one). Re-deriving the candidates for each record side of the
+    scorer would scan it 18 times."""
+    tables = generate_repos(GenConfig(n_files=120, seed=17))
+    repos = spark.createDataFrame(tables["repos"])
+    in_a = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10)) < 7
+    base = str(tmp_path / "base")
+    run_pipeline(spark, repos.filter(in_a), base)
+    plans: dict[str, str] = {}
+    incremental_update(
+        spark, base, repos.filter(~in_a), checkpoint_dir=str(tmp_path / "inc"),
+        plan_capture=plans,
+    )
+    nodes = plan_nodes(plans["pairs_delta"])
+    assert len(scans(nodes, corpus_scan(base, "block_index"))) == 2, plans["pairs_delta"]
+
+
 def test_one_delta_key_over_the_bound_probes_sort_merge(
     spark, tmp_path, er_job_joins, monkeypatch
 ):
